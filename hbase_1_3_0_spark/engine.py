@@ -365,16 +365,27 @@ class Engine:
 
     def region_boundaries(self, table: Table) -> DataFrame:
         """RegionLocator.getStartEndKeys analog (hbase-client/.../
-        RegionLocator.java:58): the row-key range each physical partition
-        covers. For a saved table the partitions ARE the range-partitioned
-        parquet files — the same pruning boundaries HBase gets from region
-        start/end keys. One narrow aggregation, no shuffle of cell data."""
+        RegionLocator.java:58): the row-key range each region covers. For
+        a saved table the regions ARE the range-partitioned parquet files —
+        the same pruning boundaries HBase gets from region start/end keys —
+        so regions key on the source file (``_metadata.file_path``), not on
+        the read partition: the reader packs several small files into one
+        partition. Tables that are not file-backed fall back to the
+        partition id. One narrow aggregation, no shuffle of cell data."""
+        from pyspark.errors import AnalysisException
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
+        try:
+            keyed = table.cells.select(
+                F.col("_metadata.file_path").alias("_pid"), "row"
+            )
+        except AnalysisException:
+            keyed = table.cells.select(
+                F.spark_partition_id().alias("_pid"), "row"
+            )
         per_part = (
-            table.cells.select(F.spark_partition_id().alias("_pid"), "row")
-            .groupBy("_pid")
+            keyed.groupBy("_pid")
             .agg(
                 F.min("row").alias("start_key"),
                 F.max("row").alias("end_key"),

@@ -37,6 +37,9 @@ from pyspark.sql import functions as F
 from hbase_1_3_0_spark.filters import ast
 from hbase_1_3_0_spark.functions import codecs
 
+#: ``semi(df, rows, anti)``: ``df`` LEFT SEMI (or ANTI) JOIN ``rows`` on row
+RowSemiJoin = Callable[[DataFrame, DataFrame, bool], DataFrame]
+
 def _w_row() -> Window:
     return Window.partitionBy("row")
 
@@ -455,7 +458,11 @@ def _scvf_multi_transform(
         verdict_source is not None or not single_version
     ) and any(f.latest_version_only for f in fs)
 
-    def t(df: DataFrame, base: DataFrame | None = None) -> DataFrame:
+    def t(
+        df: DataFrame,
+        base: DataFrame | None = None,
+        semi: RowSemiJoin | None = None,
+    ) -> DataFrame:
         # The verdict stream, in precedence order: the scan's explicit
         # matcher-visible stream (any-version SCVF), else the PRE-sibling-
         # predicate frame. The reference consults SCVF filterKeyValue
@@ -511,7 +518,8 @@ def _scvf_multi_transform(
         # boundary the materialized stats are the post-verdict row set
         # itself: small/selective -> AQE converts the join to broadcast
         # and the scanned side never shuffles; genuinely huge -> SMJ
-        # stands, paying one narrow row-set shuffle for the stats.
+        # stands, paying one narrow row-set shuffle for the stats. A
+        # caller-supplied ``semi`` replaces this staged join.
         def _staged(rows: DataFrame) -> DataFrame:
             n = int(
                 rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -526,15 +534,14 @@ def _scvf_multi_transform(
         missing_passes = (
             any(missing_defaults) if combine == "or" else all(missing_defaults)
         )
-        if missing_passes:
-            # absent rows pass -> anti join against the failing row set
-            out = df.join(
-                _staged(flags.where(~verdict).select("row")), "row", "left_anti"
-            )
+        # absent rows pass -> anti join against the failing row set;
+        # rows with none of the tested columns are excluded -> semi join
+        rows = flags.where(~verdict if missing_passes else verdict).select("row")
+        if semi is not None:
+            out = semi(df, rows, missing_passes)
         else:
-            # rows with none of the tested columns are excluded -> semi join
             out = df.join(
-                _staged(flags.where(verdict).select("row")), "row", "left_semi"
+                _staged(rows), "row", "left_anti" if missing_passes else "left_semi"
             )
         for f, cm in zip(fs, matches):
             if isinstance(f, ast.SingleColumnValueExcludeFilter):
@@ -1203,12 +1210,15 @@ def apply_filter(
     single_version: bool = False,
     reversed_scan: bool = False,
     scvf_source: DataFrame | None = None,
+    semi: RowSemiJoin | None = None,
 ) -> DataFrame:
     """Apply a compiled filter to a cell DataFrame.
 
     Predicates containing window expressions cannot sit in a WHERE clause, so
     the predicate is materialized via withColumn first; Catalyst still pushes
-    the window-free conjuncts below the window/exchange.
+    the window-free conjuncts below the window/exchange. ``semi``: how SCVF
+    verdict rows reach ``df`` (default: a join against the staged verdict
+    row set).
     """
     if f is None:
         return df
@@ -1227,7 +1237,7 @@ def apply_filter(
         # applies to the filtered output — canonical member order puts
         # SCVFs before every sibling cell predicate.
         if getattr(t, "_scvf_verdict", False):
-            out = t(out, df)
+            out = t(out, df, semi)
         else:
             out = t(out)
     return out

@@ -14,14 +14,27 @@ commit of one write job. RMW semantics are *batch-wise*: Increment folds
 counter pattern); checkAnd* evaluates its predicate against the pre-batch
 read view (F5 invariant).
 
-Scale: every RMW op touches only the mutated keys — the current-value lookup
-is a join of the (small) key set against the read view, which AQE executes
-as a broadcast; the 100 TB cell log is never shuffled to apply a batch.
+Scale: every RMW op touches only the mutated keys. When the mutation frame
+is driver data (a ``createDataFrame`` list or a local relation, through
+projections and filters only) of at most
+``spark.sql.parquet.pushdown.inFilterThreshold`` rows whose key set is under
+``spark.sql.autoBroadcastJoinThreshold`` (:func:`small_key_frame`), the RMW
+takes the small-key path: the keys prune the log in the parquet scan, the
+touched cells and the mutations sit in one partition, and judge, fold and
+join plan without exchanges. Its small delta (CAS ``judged`` /
+increment-append ``new_vals``) is local-checkpointed lazily
+(:func:`_delta_once`), so the returned verdicts or results and the next
+Table's cells share ONE computation, and a chain of RMW calls plans in
+constant depth — the memstore analog. Each such checkpoint is a few rows, one per RMW call,
+held in the block manager while a frame built on it is reachable (at most
+for the session). Computed or larger mutation frames keep the general
+path: a broadcast semi join of the key set against the log, so the 100 TB
+cell log is never shuffled to apply a batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -34,7 +47,13 @@ from hbase_1_3_0_spark.cells import (
     TYPE_PUT,
 )
 from hbase_1_3_0_spark.functions import codecs
-from hbase_1_3_0_spark.operators.read_view import read_view
+from hbase_1_3_0_spark.operators.read_view import (
+    local_lookup,
+    pin_rows,
+    read_view,
+    small_key_limit,
+    small_key_set,
+)
 
 OP_TO_TYPE = {
     "put": TYPE_PUT,
@@ -79,16 +98,122 @@ def mutations_to_cells(mutations: DataFrame, *, now_ms: int) -> DataFrame:
     ).select(*CELL_COLUMNS)
 
 
-def _current_values(cells: DataFrame, keys: DataFrame, **rv_kwargs) -> DataFrame:
+#: logical operators a driver-data mutation frame may carry above its
+#: leaf relation and still count as driver data
+_NARROW_NODES = frozenset({"Project", "Filter"})
+
+
+def _parallelized(rdd) -> bool:
+    """True for an RDD that is a chain of one-to-one maps over a
+    ParallelCollectionRDD — the shape ``createDataFrame(list)`` builds."""
+    while rdd.getClass().getSimpleName() != "ParallelCollectionRDD":
+        deps = rdd.dependencies()
+        if deps.size() != 1:
+            return False
+        dep = deps.head()
+        if dep.getClass().getSimpleName() != "OneToOneDependency":
+            return False
+        rdd = dep.rdd()
+    return True
+
+
+def _driver_data(plan) -> bool:
+    name = plan.getClass().getSimpleName()
+    if name in _NARROW_NODES:
+        return _driver_data(plan.child())
+    if name == "LocalRelation":
+        return True
+    return name == "LogicalRDD" and _parallelized(plan.rdd())
+
+
+def local_relation(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """``rows`` as a LocalRelation: one Arrow batch handed to the JVM, so
+    plans over it run no Python worker (a ``createDataFrame(list)`` frame
+    re-runs one per partition on every action)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+#: column types a collect() + Arrow rebuild returns unchanged (a timestamp,
+#: for one, comes back as a naive local-time datetime)
+_FLAT_TYPES = (
+    T.BinaryType, T.StringType, T.LongType, T.IntegerType, T.BooleanType
+)
+
+
+def small_key_frame(frame: DataFrame) -> tuple[DataFrame, list[bytes] | None]:
+    """The small-key path's engagement rule for a mutation frame.
+
+    Engages when the frame is driver data — its optimized plan is a local
+    relation or a parallelized driver list, under projections and filters
+    only — of at most read_view.small_key_limit rows, and its row-key set
+    passes read_view.small_key_set. Returns ``(one-partition frame,
+    keys)``. A parallelized list of flat-typed columns is rebuilt from its
+    collected rows as a LocalRelation, so later plans over it run no
+    Python worker; other frames are coalesced as they are. Otherwise
+    ``(frame, None)``: computed or larger frames keep the general path
+    untouched."""
+    plan = frame._jdf.queryExecution().optimizedPlan()
+    if not _driver_data(plan):
+        return frame, None
+    spark = frame.sparkSession
+    limit = small_key_limit(spark)
+    rows = frame.take(limit + 1)
+    if len(rows) > limit:
+        return frame, None
+    keys = small_key_set(spark, (r["row"] for r in rows))
+    if keys is None:
+        return frame, None
+    if plan.getClass().getSimpleName() != "LocalRelation" and all(
+        isinstance(f.dataType, _FLAT_TYPES) for f in frame.schema
+    ):
+        frame = local_relation(spark, rows, frame.schema)
+    return frame.coalesce(1), keys
+
+
+def _delta_once(delta: DataFrame) -> DataFrame:
+    """Compute a small-key RMW delta once: a lazy local checkpoint, so the
+    returned verdicts or results and the next Table's cells share one
+    computation and chained plans start from this leaf."""
+    return delta.localCheckpoint(eager=False)
+
+
+def _attach(left: DataFrame, cur: DataFrame, on: list[str], local: bool) -> DataFrame:
+    """Left-join the current values onto the mutation records: a window
+    lookup on the small-key path, a plain join (AQE broadcasts ``cur``)
+    otherwise."""
+    return local_lookup(left, cur, on) if local else left.join(cur, on, "left")
+
+
+def _current_values(
+    cells: DataFrame,
+    keys: DataFrame,
+    pinned: list[bytes] | None = None,
+    **rv_kwargs,
+) -> DataFrame:
     """Latest visible value for each (row,family,qualifier) in ``keys``.
 
-    The key set is tiny relative to the log: semi-join first so the read view
-    runs over only the touched rows (AQE broadcasts the key side).
+    The key set is tiny relative to the log: ``pinned`` (the small-key
+    path) prunes the log to those rows in the scan, in one partition;
+    otherwise a semi-join runs the read view over only the touched rows
+    (AQE broadcasts the key side).
     """
-    touched = cells.join(
-        F.broadcast(keys.select("row").distinct()), "row", "left_semi"
+    if pinned is not None:
+        touched = pin_rows(cells, pinned)
+    else:
+        touched = cells.join(
+            F.broadcast(keys.select("row").distinct()), "row", "left_semi"
+        )
+    view = read_view(
+        touched, max_versions=1, local=pinned is not None, **rv_kwargs
     )
-    view = read_view(touched, max_versions=1, **rv_kwargs)
     return view.select(
         "row", "family", "qualifier", F.col("value").alias("_cur"), F.col("ts")
     )
@@ -120,10 +245,12 @@ def increment(
     to the delta. Returns (new_cells, results) — results mirror
     setReturnResults (Increment.java:169) with the post-increment value.
     """
+    increments, pinned = small_key_frame(increments)
+    local = pinned is not None
     folded = increments.groupBy("row", "family", "qualifier").agg(
         F.sum("delta").alias("_delta")
     )
-    cur = _current_values(cells, folded, time_range=time_range)
+    cur = _current_values(cells, folded, pinned, time_range=time_range)
     new_value = (
         F.coalesce(_decode(F.col("_cur"), codec), F.lit(0)) + F.col("_delta")
     )
@@ -149,7 +276,7 @@ def increment(
             width_ok.cast("long"), F.lit(0).cast("long")
         )
     new_vals = (
-        folded.join(cur, ["row", "family", "qualifier"], "left")
+        _attach(folded, cur, ["row", "family", "qualifier"], local)
         .select(
             "row",
             "family",
@@ -157,6 +284,8 @@ def increment(
             new_value.alias("new_value"),
         )
     )
+    if local:
+        new_vals = _delta_once(new_vals)
     new_cells = new_vals.select(
         "row",
         "family",
@@ -183,6 +312,8 @@ def append_value(
     (within-batch ordering determinism, SURVEY.md §7 watch-list #4).
     ``time_range`` bounds the current-value read-back (Append inherits
     Mutation's time range, as Increment.java:158 does for Increment)."""
+    appends, pinned = small_key_frame(appends)
+    local = pinned is not None
     folded = appends.groupBy("row", "family", "qualifier").agg(
         F.aggregate(
             F.array_sort(
@@ -192,9 +323,9 @@ def append_value(
             lambda acc, x: F.concat(acc, x["value"]),
         ).alias("_suffix")
     )
-    cur = _current_values(cells, folded, time_range=time_range)
+    cur = _current_values(cells, folded, pinned, time_range=time_range)
     new_vals = (
-        folded.join(cur, ["row", "family", "qualifier"], "left")
+        _attach(folded, cur, ["row", "family", "qualifier"], local)
         .select(
             "row",
             "family",
@@ -204,6 +335,8 @@ def append_value(
             ).alias("new_value"),
         )
     )
+    if local:
+        new_vals = _delta_once(new_vals)
     new_cells = new_vals.select(
         "row",
         "family",
@@ -244,25 +377,28 @@ def _check_pred(op_col: Column, cur: Column, expected: Column) -> Column:
     return missing_ok | F.coalesce(cmp, F.lit(False))
 
 
-def _judge_checks(cells: DataFrame, checks: DataFrame) -> DataFrame:
+def _judge_checks(
+    cells: DataFrame, checks: DataFrame, pinned: list[bytes] | None = None
+) -> DataFrame:
     """Shared CAS judging: attach the pre-batch current value of each
     record's checked column and evaluate its CompareOp predicate into a
     ``_pass`` column. ``checks`` carries row, check_family,
     check_qualifier, check_op, check_value (+ any payload columns, which
-    pass through untouched)."""
+    pass through untouched). ``pinned``: the small-key path's keys, with
+    ``checks`` already in one partition."""
     keys = checks.select(
         "row",
         F.col("check_family").alias("family"),
         F.col("check_qualifier").alias("qualifier"),
     )
-    cur = _current_values(cells, keys).select(
+    cur = _current_values(cells, keys, pinned).select(
         "row",
         F.col("family").alias("check_family"),
         F.col("qualifier").alias("check_qualifier"),
         F.col("_cur"),
     )
-    return checks.join(
-        cur, ["row", "check_family", "check_qualifier"], "left"
+    return _attach(
+        checks, cur, ["row", "check_family", "check_qualifier"], pinned is not None
     ).withColumn(
         "_pass",
         _check_pred(F.col("check_op"), F.col("_cur"), F.col("check_value")),
@@ -282,7 +418,10 @@ def check_and_mutate(
     evaluated against the PRE-batch read view (F5 invariant); passing
     mutations apply as cells. Returns (new_cells, per-mutation verdicts).
     """
-    judged = _judge_checks(cells, mutations)
+    mutations, pinned = small_key_frame(mutations)
+    judged = _judge_checks(cells, mutations, pinned)
+    if pinned is not None:
+        judged = _delta_once(judged)
     passing = judged.where(F.col("_pass"))
     new_cells = mutations_to_cells(
         passing.select(

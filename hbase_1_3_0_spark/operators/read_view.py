@@ -35,13 +35,27 @@ put stream is never shuffled for masking. The version limit is the only
 full-width operation: for ``max_versions == 1`` (the HBase default) it runs
 as a ``groupBy().agg(max_by(...))`` — partial-aggregatable, map-side combined,
 no sort — and only the general ``n > 1`` case pays a window sort.
+
+Small-key path (the one-region-RPC analog of a Get, HRegion.java:5707): when
+the key set is a driver-side list of at most
+``spark.sql.parquet.pushdown.inFilterThreshold`` keys whose estimated size
+is under ``spark.sql.autoBroadcastJoinThreshold`` (:func:`small_key_set`),
+:func:`pin_rows` pushes ``row IN (...)`` into the parquet scan and pins the
+surviving cells to ONE partition. A single partition already satisfies the
+clustering every read-view operator needs: with ``local=True`` the marker
+joins become windows (:func:`mask_deletes`) and key lookups a union plus a
+window (:func:`local_lookup`), so the whole read view plans with zero
+exchanges. The bound: the pruned scan runs in one task; under the key
+count limit the reader prunes each key as its own equality, so that task
+reads only the row groups that may hold one of the keys.
 """
 
 from __future__ import annotations
 
 import time
+from collections.abc import Iterable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hbase_1_3_0_spark.cells import (
@@ -55,20 +69,131 @@ from hbase_1_3_0_spark.cells import (
 )
 
 
-def _not_in_ts_set(ts_set: Column, ts: Column) -> Column:
-    return ~F.coalesce(F.array_contains(ts_set, ts), F.lit(False))
+#: a put outlives the marker timestamps attached to it (one parsed SQL
+#: expression: one py4j round trip instead of one per Column operator)
+_SURVIVES = (
+    "(_fam_del_ts IS NULL OR ts > _fam_del_ts)"
+    " AND NOT coalesce(array_contains(_famver_del_ts, ts), false)"
+    " AND (_col_del_ts IS NULL OR ts > _col_del_ts)"
+    " AND NOT coalesce(array_contains(_ver_del_ts, ts), false)"
+)
+
+
+def small_key_limit(spark: SparkSession) -> int:
+    """The most keys the small-key path takes:
+    ``spark.sql.parquet.pushdown.inFilterThreshold`` (10 by default). Up to
+    that many values the parquet reader prunes an IN list key by key, as
+    one equality each; past it the IN widens to a min/max span whose row
+    groups one pinned task would read serially."""
+    return spark._jsparkSession.sessionState().conf().parquetFilterPushDownInFilterThreshold()
+
+
+def small_key_set(
+    spark: SparkSession, keys: Iterable[bytes | None]
+) -> list[bytes] | None:
+    """The small-key path's engagement rule: the sorted distinct keys when
+    there are at most :func:`small_key_limit` of them and their estimated
+    size (key bytes + 8 per key) is under
+    ``spark.sql.autoBroadcastJoinThreshold``, else None (a disabled
+    threshold disables the path). Null keys match no row and drop out."""
+    uniq = sorted({bytes(k) for k in keys if k is not None})
+    if len(uniq) > small_key_limit(spark):
+        return None
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return uniq if sum(len(k) + 8 for k in uniq) < threshold else None
+
+
+def pin_rows(cells: DataFrame, keys: list[bytes]) -> DataFrame:
+    """Prune ``cells`` to ``keys`` in the scan and pin them to one partition.
+
+    The IN list is one parsed SQL expression (one py4j round trip, however
+    many keys), so Catalyst pushes it into the parquet reader as row-group
+    min/max and bloom pruning."""
+    if not keys:
+        return cells.where(F.lit(False)).coalesce(1)
+    in_list = ", ".join(f"X'{k.hex()}'" for k in keys)
+    return cells.where(F.expr(f"`row` IN ({in_list})")).coalesce(1)
+
+
+def local_lookup(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
+    """``left`` LEFT JOIN ``right`` USING ``on`` for small-key-path inputs,
+    where ``right`` holds at most one row per key: ``right``'s other
+    columns reach the matching ``left`` rows through a window over the
+    union of both sides. The union is pinned to one partition, which the
+    window's clustering needs, so the lookup plans a sort and no exchange
+    whatever the size estimates (a two-sided join re-shuffles one-partition
+    children once their estimates pass spark.sql.maxSinglePartitionBytes,
+    and a product-of-children join estimate does). Null keys match nothing,
+    as in an equi-join."""
+    side = "_lk_right"
+    both = (
+        left.withColumn(side, F.lit(False))
+        .unionByName(right.withColumn(side, F.lit(True)), allowMissingColumns=True)
+        .coalesce(1)
+    )
+    keyed = " AND ".join(f"`{k}` IS NOT NULL" for k in on)
+    over = "PARTITION BY " + ", ".join(f"`{k}`" for k in on)
+    looked = both.selectExpr(
+        *[f"`{c}`" for c in left.columns],
+        *[
+            f"CASE WHEN {keyed} THEN max(CASE WHEN {side} THEN `{c}` END) "
+            f"OVER ({over}) END AS `{c}`"
+            for c in right.columns
+            if c not in on
+        ],
+        side,
+    )
+    return looked.where(f"NOT {side}").drop(side)
+
+
+def local_semi(df: DataFrame, rows: DataFrame, anti: bool = False) -> DataFrame:
+    """``df`` LEFT SEMI (or ANTI) JOIN ``rows`` on ``row``, as a
+    :func:`local_lookup` for the small-key path."""
+    hit = local_lookup(
+        df, rows.select("row").distinct().withColumn("_hit", F.lit(True)), ["row"]
+    )
+    return hit.where("_hit IS NULL" if anti else "_hit IS NOT NULL").drop("_hit")
 
 
 def mask_deletes(
     cells: DataFrame,
     *,
     marker_ts_below: int | None = None,
+    local: bool = False,
 ) -> DataFrame:
     """Apply the four tombstone kinds; return surviving Put cells.
 
     ``marker_ts_below``: only markers with ``ts < marker_ts_below`` take
-    effect (the KEEP_DELETED_CELLS time-travel carve-out).
+    effect (the KEEP_DELETED_CELLS time-travel carve-out). ``local``: the
+    cells are pinned to one partition (:func:`pin_rows`); the markers then
+    reach their puts through windows over (row, family) and (row, family,
+    qualifier) instead of joins — sorts inside the partition, no exchange.
+    A window partition groups NULL qualifiers together, the same null-safe
+    match the join form spells out.
     """
+    if local:
+        live = f"type <> {TYPE_PUT}"
+        if marker_ts_below is not None:
+            live += f" AND ts < {int(marker_ts_below)}"
+        fam = "OVER (PARTITION BY `row`, family)"
+        col = "OVER (PARTITION BY `row`, family, qualifier)"
+
+        def marker_ts(kind: int) -> str:
+            return f"CASE WHEN {live} AND type = {kind} THEN ts END"
+
+        flagged = cells.selectExpr(
+            "*",
+            f"max({marker_ts(TYPE_DELETE_FAMILY)}) {fam} AS _fam_del_ts",
+            f"collect_set({marker_ts(TYPE_DELETE_FAMILY_VERSION)}) {fam}"
+            " AS _famver_del_ts",
+            f"max({marker_ts(TYPE_DELETE_COLUMN)}) {col} AS _col_del_ts",
+            f"collect_set({marker_ts(TYPE_DELETE_VERSION)}) {col}"
+            " AS _ver_del_ts",
+        )
+        return flagged.where(f"type = {TYPE_PUT} AND {_SURVIVES}").drop(
+            "_fam_del_ts", "_famver_del_ts", "_col_del_ts", "_ver_del_ts"
+        )
+
     markers = cells.where(F.col("type") != TYPE_PUT)
     if marker_ts_below is not None:
         markers = markers.where(F.col("ts") < F.lit(marker_ts_below))
@@ -122,12 +247,7 @@ def mask_deletes(
             & F.col("qualifier").eqNullSafe(F.col("_cm_qual")),
             "left",
         )
-        .where(
-            (F.col("_fam_del_ts").isNull() | (F.col("ts") > F.col("_fam_del_ts")))
-            & _not_in_ts_set(F.col("_famver_del_ts"), F.col("ts"))
-            & (F.col("_col_del_ts").isNull() | (F.col("ts") > F.col("_col_del_ts")))
-            & _not_in_ts_set(F.col("_ver_del_ts"), F.col("ts"))
-        )
+        .where(_SURVIVES)
         # preserve extra cell-metadata columns (e.g. per-cell ttl_ms tags)
         .select(*cells.columns)
     )
@@ -194,6 +314,7 @@ def read_view(
     now_ms: int | None = None,
     raw: bool = False,
     cell_filter: Column | None = None,
+    local: bool = False,
 ) -> DataFrame:
     """The user-visible cell stream for a Get/Scan over a cell log.
 
@@ -203,6 +324,9 @@ def read_view(
     ScanQueryMatcher.java:283-410). With multi-version columns this makes
     ``VERSIONS=1`` + a value filter return the newest *passing* version
     (a failing newer version is SKIPped, not counted), matching HBase.
+
+    ``local``: ``cells`` is pinned to one partition (:func:`pin_rows`); the
+    read view then plans without exchanges.
     """
     if raw:
         out = cells
@@ -227,7 +351,9 @@ def read_view(
     if keep_deleted_cells in ("TRUE", "TTL") and time_range is not None:
         marker_ts_below = time_range[1]
 
-    visible = mask_deletes(cells, marker_ts_below=marker_ts_below)
+    visible = mask_deletes(
+        cells, marker_ts_below=marker_ts_below, local=local
+    )
 
     # Per-cell TTL tags (TagType.java:33, TTL_TAG_TYPE=8): an optional
     # ``ttl_ms`` cell column; effective TTL = min(cell TTL, family TTL)

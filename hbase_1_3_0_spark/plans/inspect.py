@@ -77,13 +77,3 @@ def scan_read_schema(df: DataFrame) -> list[str]:
     """Columns each parquet scan actually reads (column-pruning check)."""
     return re.findall(r"ReadSchema: struct<([^>]*)>", _formatted(df))
 
-
-def summarize(df: DataFrame) -> dict:
-    """One-line plan summary for bench reports / debugging."""
-    return {
-        "pushed_filters": pushed_filters(df),
-        "exchanges": exchange_count(df),
-        "shuffles": shuffle_exchange_count(df),
-        "codegen_stages": codegen_stage_count(df),
-        "python_eval": has_python_eval(df),
-    }

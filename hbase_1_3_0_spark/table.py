@@ -10,6 +10,12 @@ Execution order of a scan (mirrors the reference read path, SURVEY.md §3.1):
 1. row-range predicate on the raw cell log — applied FIRST so Catalyst pushes
    it into the parquet scan (region pruning + HFile key-range pruning analog);
    masking is per-row, so pre-filtering by row is semantics-preserving.
+   A small driver-side key set — a Get's row, a literal ``multi_get`` /
+   ``exists`` list that passes ``read_view.small_key_set`` — is the
+   small-key path: ``row IN (...)`` pruned in the scan, the cells pinned to
+   one partition, and every later step plans without an exchange (the one
+   region RPC of a reference Get). Larger or computed key sets, and range
+   scans, keep the general path: a broadcast semi join, AQE-planned joins.
 2. read view (versions / tombstones / TTL / timerange) per family group.
 3. family / column projection (Scan.addFamily/addColumn).
 4. filter tree (compiled filter algebra).
@@ -38,7 +44,12 @@ from hbase_1_3_0_spark.filters.compiler import (
 from hbase_1_3_0_spark.filters.parser import parse_filter
 from hbase_1_3_0_spark.operators import mutations as mut
 from hbase_1_3_0_spark.operators.coprocessor import Observers
-from hbase_1_3_0_spark.operators.read_view import read_view
+from hbase_1_3_0_spark.operators.read_view import (
+    local_semi,
+    pin_rows,
+    read_view,
+    small_key_set,
+)
 from hbase_1_3_0_spark.sources import kv_encoder
 
 
@@ -148,6 +159,14 @@ class Table:
         s = scan or Scan()
         if kw:
             s = s.with_(**kw)
+        return self._scan(s)
+
+    def _scan(self, s: Scan, keys: list[bytes] | None = None) -> DataFrame:
+        """The one read path. ``keys``: a small driver-side key set
+        (read_view.small_key_set) — the scan is pruned to it and pinned to
+        one partition, so the read view, cell and SCVF filters and the row
+        limit plan without exchanges. A single-row range (a Get) takes that
+        path by itself."""
         if s.row_prefix is not None:
             # setRowPrefixFilter (Scan.java:397): pure start/stop sugar
             if s.start_row is not None or s.stop_row is not None:
@@ -179,9 +198,19 @@ class Table:
             lo_hi = tr[-2:] if tr is not None else ()
             if any(t < 0 for t in lo_hi):
                 raise ValueError("negative timestamps are not allowed")
+        if (
+            keys is None
+            and s.start_row is not None
+            and s.start_row == s.stop_row
+            and s.stop_inclusive
+        ):
+            keys = small_key_set(self.cells.sparkSession, [s.start_row])
+        local = keys is not None
         # preScannerOpen/preGetOp hooks rewrite the raw cell stream; filters
         # they add still push down through Catalyst
         df = Observers.apply(self.observers.pre_scan, self.cells)
+        if local:
+            df = pin_rows(df, keys)
 
         # 1. row range first — pushed into the parquet scan by Catalyst.
         # Reversed scans flip the range roles (Scan.setReversed:694 +
@@ -233,7 +262,7 @@ class Table:
             p = security.acl_pred(s.user)
             cell_pred = p if cell_pred is None else (cell_pred & p)
         raw_cells = df
-        df = self._read_view(df, s, cell_pred)
+        df = self._read_view(df, s, cell_pred, local)
 
         # 3. projection — the reference Get/Scan familyMap is a UNION of
         # per-family selections: addFamily(F) selects the whole family,
@@ -284,7 +313,8 @@ class Table:
         ):
             scvf_source = _project(
                 self._read_view(
-                    raw_cells, s.with_(max_versions=2**31 - 1), cell_pred
+                    raw_cells, s.with_(max_versions=2**31 - 1), cell_pred,
+                    local,
                 )
             )
 
@@ -302,6 +332,7 @@ class Table:
         df = apply_filter(
             df, filt, single_version=single_version,
             reversed_scan=s.reversed, scvf_source=scvf_source,
+            semi=local_semi if local else None,
         )
 
         # 5. intra-row per-CF paging. storeOffset/storeLimit count CELLS
@@ -328,7 +359,10 @@ class Table:
         if s.limit is not None:
             order = F.col("row").desc() if s.reversed else F.col("row").asc()
             rows = df.select("row").distinct().orderBy(order).limit(s.limit)
-            df = df.join(F.broadcast(rows), "row", "left_semi")
+            if local:
+                df = local_semi(df, rows)
+            else:
+                df = df.join(F.broadcast(rows), "row", "left_semi")
         # postScannerNext hooks rewrite the visible cells (e.g. redaction)
         df = Observers.apply(self.observers.post_scan, df)
         return df.select(*CELL_COLUMNS)
@@ -408,7 +442,11 @@ class Table:
         )
 
     def _read_view(
-        self, df: DataFrame, s: Scan, cell_pred: Column | None = None
+        self,
+        df: DataFrame,
+        s: Scan,
+        cell_pred: Column | None = None,
+        local: bool = False,
     ) -> DataFrame:
         if self.meta.clean_log and not s.raw:
             out = self._read_view_clean(df, s)
@@ -458,6 +496,7 @@ class Table:
                     now_ms=self._now_ms,
                     raw=s.raw,
                     cell_filter=cell_pred,
+                    local=local,
                 )
             )
         out = outs[0]
@@ -526,12 +565,20 @@ class Table:
         return self.scan(g.to_scan())
 
     def multi_get(self, rows: list[bytes] | DataFrame, **kw) -> DataFrame:
-        """Batch point reads (Table.get(List<Get>), Table.java:183): a semi
-        join of the key set against the read view — one job, no per-key RPCs."""
+        """Batch point reads (Table.get(List<Get>), Table.java:183) — one
+        job, no per-key RPCs. A literal key list that passes
+        read_view.small_key_set takes the small-key path (pruned in the
+        scan, one partition, no exchanges); a DataFrame or larger key set
+        is a broadcast semi join of the keys against the cell log."""
         spark = self.cells.sparkSession
         if isinstance(rows, DataFrame):
             keys = rows.select(F.col(rows.columns[0]).alias("row"))
         else:
+            small = small_key_set(spark, rows)
+            if small is not None:
+                return Table(self.meta, self.cells, self._now_ms)._scan(
+                    Scan(**kw), small
+                )
             keys = spark.createDataFrame(
                 [(bytes(r),) for r in rows],
                 T.StructType([T.StructField("row", T.BinaryType())]),

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from hbase_1_3_0_spark.catalog import FamilyMeta, TableMeta
 from hbase_1_3_0_spark.cells import CELL_SCHEMA, TYPE_PUT
 from hbase_1_3_0_spark.functions import codecs
+from hbase_1_3_0_spark.operators.mutations import local_relation
 from hbase_1_3_0_spark.table import Scan, Table
 
 MUT_SCHEMA = (
@@ -23,7 +24,7 @@ MUT_SCHEMA = (
 
 
 def fresh_table(spark, rows, max_versions=5):
-    cells = spark.createDataFrame(rows, CELL_SCHEMA)
+    cells = local_relation(spark, rows, CELL_SCHEMA)
     meta = TableMeta(
         name="t", families=(FamilyMeta(name="d", max_versions=max_versions),)
     )
@@ -418,10 +419,9 @@ def _inc(spark, t, pairs, now, row=IROW):
     incs = spark.createDataFrame(
         [(row, "d", q, d) for q, d in pairs], INC_SCHEMA
     )
-    t2, res = Table(t.meta, t.cells, now_ms=now).increment(incs)
-    # chained in-memory RMW grows a union+join lineage per step (a real
-    # deployment persists between batches); truncate it like bench does
-    return Table(t2.meta, t2.cells.localCheckpoint(), now_ms=now), res
+    # chained RMW needs no lineage truncation here: each increment's delta
+    # is computed once and enters the next table's log as a leaf
+    return Table(t.meta, t.cells, now_ms=now).increment(incs)
 
 
 def test_increment_with_deletes(spark):
@@ -533,9 +533,7 @@ def _cas(spark, t, op_name, probe, payload_op, payload_value, now):
         CAS_SCHEMA,
     )
     t2, verdicts = Table(t.meta, t.cells, now_ms=now).check_and_mutate(muts)
-    applied = verdicts.first().applied
-    t2 = Table(t2.meta, t2.cells.localCheckpoint(), now_ms=now)
-    return t2, applied
+    return t2, verdicts.first().applied
 
 
 def _cell_value(t, now):
@@ -565,13 +563,12 @@ def test_check_and_put_with_compare_op(spark):
     """testCheckAndPutWithCompareOp (:4766) — the exact sequence: the
     check passes iff probe <op> cellValue (reference operand order).
 
-    Two forms (r14 — 19 engine-chained steps cost ~75 s of per-step
-    Catalyst planning): a chained PREFIX keeps the state-evolution
-    coverage (each step's check reads the previous step's engine
-    output), then the FULL direction table runs as ONE batched
-    check_and_mutate over 19 independent rows whose pre-states are the
-    reference sequence's pinned intermediate values — same verdict and
-    same (op, probe, cell) coverage per step, two actions total."""
+    Two forms: the full 19-step sequence engine-chained (each step's
+    check reads the previous step's engine output; a one-row CAS takes
+    the small-key path, so the chain's plans stay constant-depth), then
+    the same direction table as ONE batched check_and_mutate over 19
+    independent rows whose pre-states are the reference sequence's
+    pinned intermediate values."""
     a, b, c, d = b"aaaa", b"bbbb", b"cccc", b"dddd"
     steps = [
         # (op, probe, put_value, expected_applied)
@@ -595,12 +592,12 @@ def test_check_and_put_with_compare_op(spark):
         ("LESS_OR_EQUAL", b, b, True),         # -> bbbb
         ("EQUAL", b, c, True),                 # -> cccc
     ]
-    # chained prefix: engine output feeds the next step's check
+    # chained: engine output feeds the next step's check
     t = fresh_table(spark, [])
-    for i, (op, probe, val, expect) in enumerate(steps[:5]):
+    for i, (op, probe, val, expect) in enumerate(steps):
         t, ok = _cas(spark, t, op, probe, "put", val, 1_000 * (i + 1))
         assert ok is expect, (i, op, probe)
-    assert _cell_value(t, 5_000) == b
+    assert _cell_value(t, 1_000 * len(steps)) == c
 
     # full table, batched over independent rows: pre-state per step =
     # the value the reference sequence pins at that point
@@ -662,16 +659,18 @@ def test_check_and_delete_with_compare_op(spark):
         (b, "LESS_OR_EQUAL", b, True),
         (b, "EQUAL", b, True),
     ]
-    # chained prefix: engine output (including the tombstone left by a
-    # passing delete) feeds the next step's check
+    # chained: engine output (including the tombstone left by a passing
+    # delete) feeds the next step's check
     t = fresh_table(spark, [])
     now = 0
-    for i, (reput, op, probe, expect) in enumerate(steps[:5]):
+    for i, (reput, op, probe, expect) in enumerate(steps):
         if reput is not None:
             now += 1_000
             t = Table(t.meta, t.cells, now_ms=now).put(spark.createDataFrame(
                 [(IROW, "d", b"q", now, TYPE_PUT, reput, 1)], CELL_SCHEMA
             ))
+            # a put appends the caller's frame as is: without this every
+            # later read would re-run each reput's createDataFrame source
             t = Table(t.meta, t.cells.localCheckpoint(), now_ms=now)
         now += 1_000
         t, ok = _cas(spark, t, op, probe, "delete_column", None, now)

@@ -8,10 +8,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hbase_1_3_0_spark.catalog import TableMeta
+from hbase_1_3_0_spark.catalog import FamilyMeta, TableMeta
 from hbase_1_3_0_spark.plans import inspect
 from hbase_1_3_0_spark.sources import fixtures, writer
 from hbase_1_3_0_spark.table import Table
+from tests._small_key import recorded_deltas
 
 
 @pytest.fixture(scope="module")
@@ -48,6 +49,87 @@ def test_full_read_view_broadcasts_markers_not_puts(spark, sf_dir, disk_table):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert inspect.pushes_down(df, "row")
+
+
+# --------------------------------------------------------------------------
+# Small-key path: a small driver-side key set (read_view.small_key_set) is
+# pruned in the scan and pinned to one partition, so point reads plan no
+# exchange at all and RMW calls at most two; each RMW delta enters the next
+# table as a checkpointed leaf, so chained plans do not grow.
+# --------------------------------------------------------------------------
+
+SK_MUT_SCHEMA = (
+    "op string, row binary, family string, qualifier binary, ts long, "
+    "value binary, check_family string, check_qualifier binary, "
+    "check_op string, check_value binary, batch_seq long"
+)
+
+
+def _full_view(disk_table) -> Table:
+    # the same cells with the full read view: not clean, versioned family
+    meta = TableMeta(name="sk", families=(FamilyMeta(name="d", max_versions=3),))
+    return Table(meta, disk_table.cells, now_ms=1)
+
+
+def _cas_step(spark, t: Table, n: int):
+    muts = spark.createDataFrame(
+        [("put", _k(7), "d", b"c_mktsegment", None, b"v%d" % n,
+          "d", b"c_name", "NOT_EQUAL", b"x", 0)],
+        SK_MUT_SCHEMA,
+    )
+    return t.check_and_mutate(muts)
+
+
+def test_small_key_reads_plan_zero_exchanges(disk_table):
+    t = _full_view(disk_table)
+    get = t.get(_k(7))
+    reads = [
+        get,
+        t.get(_k(7), filter="SingleColumnValueFilter ('d', 'c_name', =, "
+                            "'binary:x', true, true)"),
+        t.multi_get([_k(1), _k(2), _k(40)]),
+        t.exists([_k(3), b"missing"]),
+    ]
+    for df in reads:
+        assert inspect.exchange_count(df) == 0  # broadcasts included
+    assert inspect.pushes_down(get, "row")
+
+
+def test_small_key_rmw_plans_at_most_two_exchanges(spark, disk_table):
+    """Counted on the plans that run: each call's delta (the CAS judge,
+    the increment/append fold and lookup) as it is computed, not the
+    checkpoint leaf the returned frames read."""
+    t = _full_view(disk_table)
+    with recorded_deltas() as deltas:
+        _, verdicts = _cas_step(spark, t, 0)
+        _, incremented = t.increment(spark.createDataFrame(
+            [(_k(7), "d", b"cnt", 5)],
+            "row binary, family string, qualifier binary, delta long",
+        ))
+        _, appended = t.append(spark.createDataFrame(
+            [(_k(7), "d", b"c_mktsegment", b"+", 0)],
+            "row binary, family string, qualifier binary, value binary, "
+            "batch_seq long",
+        ))
+        for df in (verdicts, incremented, appended):
+            assert df.count() == 1
+    assert len(deltas) == 3
+    for df in deltas:
+        assert inspect.exchange_count(df) <= 2
+
+
+def test_chained_cas_plans_stay_flat(spark, disk_table):
+    """A Get after 5 chained CAS steps plans like a Get after 1: the
+    deltas are leaves, not re-derived judges."""
+    t = _full_view(disk_table)
+    shapes = []
+    for n in range(5):
+        t, verdicts = _cas_step(spark, t, n)
+        assert verdicts.first().applied
+        get = t.get(_k(7))
+        plan = get._jdf.queryExecution().executedPlan().toString()
+        shapes.append((inspect.exchange_count(get), plan.count("Window")))
+    assert shapes[-1] == shapes[0]
 
 
 def test_column_projection_prunes_parquet_read(disk_table):
