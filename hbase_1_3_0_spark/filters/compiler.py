@@ -19,10 +19,12 @@ FilterList(MUST_PASS_ONE) = OR of predicates (transform-bearing members inside
 an OR are rejected — same class of restriction as the reference's non-lazy
 MUST_PASS_ONE evaluation, FilterList.java:39-52).
 
-Scale: window predicates partition by ``row`` — the same key the cell log is
-range-partitioned on — and all pure predicates stay inside whole-stage
-codegen. PrefixFilter / MultiRowRangeFilter compile to row-range conjunctions
-that Catalyst turns into partition/row-group pruning (the seek-hint analog).
+Scale: window predicates partition by ``row`` — the key a Table scan
+clusters its cells on, so on a scan they cost no exchange — and all pure
+predicates stay inside whole-stage codegen. Row verdicts that need a global
+step (PageFilter, WhileMatchFilter) are scalar subqueries, not joins.
+PrefixFilter / MultiRowRangeFilter compile to row-range conjunctions that
+Catalyst turns into partition/row-group pruning (the seek-hint analog).
 """
 
 from __future__ import annotations
@@ -420,12 +422,17 @@ def _scvf_multi_transform(
     computes without the full scan-on-row shuffle the window-predicate
     form pays.
 
-    The window form shuffles the ENTIRE scan by row; a per-filter join pays
-    one shuffle of the big side per filter. Here all tested columns reduce
-    in a single groupBy over only their cells (pushdown-friendly
-    family/qualifier predicate), the per-row verdict is the AND of each
-    filter's verdict, and one join applies it — AQE broadcasts the row set
-    when it is selective, so the big side is often never shuffled.
+    This form serves UNCLUSTERED input (the MapReduce jobs' filters, a
+    clean-log scan) and SCVFs judged on a separate ``verdict_source``.
+    On unclustered input the window form would shuffle the ENTIRE scan by
+    row, and a per-filter join pays one shuffle of the big side per
+    filter. Here all tested columns reduce in a single groupBy over only
+    their cells (pushdown-friendly family/qualifier predicate), the
+    per-row verdict is the AND of each filter's verdict, and one join
+    applies it — AQE broadcasts the row set when it is selective, so the
+    big side is often never shuffled. Input already clustered by row
+    takes the window form instead (``compile_filter(clustered=True)``):
+    there it costs no exchange, and a second branch of the scan would.
 
     All aggregates are plain int max() so the groupBy plans as a
     HashAggregate (a max-over-struct buffer would force a SortAggregate,
@@ -506,7 +513,8 @@ def _scvf_multi_transform(
                 verdict = v
             else:
                 verdict = (verdict | v) if combine == "or" else (verdict & v)
-        # The verdict row set goes behind its OWN exchange: AQE sizes a
+        # Unclustered input (no ``semi``): the verdict row set goes
+        # behind its OWN exchange. AQE sizes a
         # join's build side by its materialized shuffle stage, and
         # without this the stage it sees is the PRE-aggregate partials
         # of every tested cell (tens of MB at sf0.1 — over the adaptive
@@ -518,8 +526,9 @@ def _scvf_multi_transform(
         # boundary the materialized stats are the post-verdict row set
         # itself: small/selective -> AQE converts the join to broadcast
         # and the scanned side never shuffles; genuinely huge -> SMJ
-        # stands, paying one narrow row-set shuffle for the stats. A
-        # caller-supplied ``semi`` replaces this staged join.
+        # stands, paying one narrow row-set shuffle for the stats. On
+        # clustered input the caller's exchange-free ``semi`` replaces
+        # this staged join.
         def _staged(rows: DataFrame) -> DataFrame:
             n = int(
                 rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -552,19 +561,22 @@ def _scvf_multi_transform(
     return t
 
 
-def _skip_transform(pred: Column) -> Callable[[DataFrame], DataFrame]:
-    """SkipFilter as an anti-join: drop every row owning a failing cell."""
+def _skip_transform(
+    pred: Column, clustered: bool = False
+) -> Callable[[DataFrame], DataFrame]:
+    """SkipFilter: drop every row owning a failing cell — a window over
+    ``row`` on input clustered by row, an anti-join otherwise."""
 
     def t(df: DataFrame) -> DataFrame:
         # withColumn materialization: pred may itself hold window exprs
         # (e.g. SKIP over an OR of row-level filters), which can't sit in
-        # a WHERE clause directly.
-        failing = (
-            df.withColumn("_sk", pred)
-            .where(~F.col("_sk"))
-            .select("row")
-            .distinct()
-        )
+        # a WHERE clause, or inside another window, directly.
+        flagged = df.withColumn("_sk", pred)
+        if clustered:
+            # a NULL verdict fails nothing, as in the anti-join form
+            all_pass = F.coalesce(F.min("_sk").over(_w_row()), F.lit(True))
+            return flagged.withColumn("_sk", all_pass).where("_sk").drop("_sk")
+        failing = flagged.where(~F.col("_sk")).select("row").distinct()
         return df.join(failing, "row", "left_anti")
 
     return t
@@ -659,17 +671,22 @@ def _dependent_pred(f: ast.DependentColumnFilter) -> Column:
     return pred
 
 
-def _page_transform(n: int, reversed_scan: bool = False) -> Callable[[DataFrame], DataFrame]:
-    def t(df: DataFrame) -> DataFrame:
-        # Exact global semantics: first n rows in scan order (row-key order,
-        # descending for a reversed scan). orderBy+limit plans as
-        # TakeOrderedAndProject (no full sort); the semi join broadcasts the
-        # n-row key set.
-        order = F.col("row").desc() if reversed_scan else F.col("row").asc()
-        rows = df.select("row").distinct().orderBy(order).limit(n)
-        return df.join(F.broadcast(rows), "row", "left_semi")
+def first_rows(df: DataFrame, n: int, reversed_scan: bool = False) -> DataFrame:
+    """The cells of the first ``n`` rows of ``df`` in scan order (row-key
+    order, descending for a reversed scan): PageFilter and the scan's row
+    limit. The n-th row key is one scalar subquery — orderBy+limit plans as
+    TakeOrderedAndProject (no full sort) — and a cell is kept iff its row
+    is not past it: no join. On one pinned partition that plans no
+    exchange; on hash-clustered cells the subquery reads the range with
+    fewer columns than the scan, so its own exchange is not reused."""
+    order = F.col("row").desc() if reversed_scan else F.col("row").asc()
+    last = F.min("row") if reversed_scan else F.max("row")
+    edge = df.select("row").distinct().orderBy(order).limit(n).agg(last).scalar()
+    return df.where(F.col("row") >= edge if reversed_scan else F.col("row") <= edge)
 
-    return t
+
+def _page_transform(n: int, reversed_scan: bool = False) -> Callable[[DataFrame], DataFrame]:
+    return lambda df: first_rows(df, n, reversed_scan)
 
 
 def _while_match_transform(
@@ -707,39 +724,22 @@ def _while_match_transform(
             (-F.col("ts")).alias("nts"),
             (-F.col("seq")).alias("nseq"),
         )
-        if not reversed_scan:
-            # forward scan position is one lexicographic struct: the
-            # first failing cell is its min over the failing set
-            ff = failing.agg(
-                F.min(F.struct(F.col("row").alias("r"), cell_pos.alias("c")))
-                .alias("_ff")
-            )
-            keep = F.struct(
-                F.col("row").alias("r"), cell_pos.alias("c")
-            ) < F.col("_ff")
-        else:
-            # reversed: rows descend but cells within a row still ascend,
-            # so resolve the edge row first, then its first failing cell
-            edge = failing.agg(F.max("row").alias("_ff_row"))
-            ff = (
-                failing.join(
-                    F.broadcast(edge), F.col("row") == F.col("_ff_row")
-                )
-                .agg(
-                    F.min(
-                        F.struct(F.col("row").alias("r"), cell_pos.alias("c"))
-                    ).alias("_ff")
-                )
-            )
-            keep = (F.col("row") > F.col("_ff")["r"]) | (
-                (F.col("row") == F.col("_ff")["r"])
-                & (cell_pos < F.col("_ff")["c"])
-            )
-        return (
-            flagged.crossJoin(F.broadcast(ff))
-            .where(F.col("_ff").isNull() | keep)
-            .drop("_wm_pass", "_ff")
+        # The first failing cell in scan order, as one scalar subquery: the
+        # first failing cell of each row, then the first such row (rows
+        # descend on a reversed scan, cells within a row still ascend).
+        # Per-row minima keep the cell order inside a row either way.
+        edge = F.max if reversed_scan else F.min
+        ff = (
+            failing.groupBy("row")
+            .agg(F.min(cell_pos).alias("c"))
+            .agg(edge(F.struct(F.col("row").alias("r"), F.col("c"))))
+            .scalar()
         )
+        before = (
+            F.col("row") > ff["r"] if reversed_scan else F.col("row") < ff["r"]
+        )
+        keep = before | ((F.col("row") == ff["r"]) & (cell_pos < ff["c"]))
+        return flagged.where(ff.isNull() | keep).drop("_wm_pass")
 
     return t
 
@@ -889,6 +889,7 @@ def compile_filter(
     single_version: bool = False,
     reversed_scan: bool = False,
     scvf_source: DataFrame | None = None,
+    clustered: bool = False,
 ) -> Compiled:  # noqa: C901
     """Compile a filter AST.
 
@@ -905,7 +906,11 @@ def compile_filter(
     stream for any-version SCVF verdicts (see _scvf_multi_transform) —
     consumed by the AND fuse and the pure-SCVF OR fuse; an SCVF nested
     in a MIXED OR falls back to the window-predicate form, which judges
-    scan-visible versions (documented divergence).
+    scan-visible versions (documented divergence). ``clustered``: the input
+    is clustered by row, so row verdicts cost no exchange as windows over
+    ``row``: SCVFs compile to their window-predicate form unless an
+    ``scvf_source`` must judge them, and SkipFilter keeps its transform but
+    judges rows with a window instead of an anti-join.
 
     MIXED MUST_PASS_ONE divergence (deliberate): under the reference's
     protocol, OR(SCVF, any cell-level filter) keeps EVERY ROW — the
@@ -921,11 +926,14 @@ def compile_filter(
     degenerates to "all rows, nearly all cells", not a useful contract.
     This engine implements the intuitive composition instead (cell kept
     iff row-verdict OR cell-predicate)."""
+    # SCVF verdicts as a fused aggregation + join (the transform form), or
+    # as window predicates over the row-clustered input
+    scvf_join = allow_transform and not (clustered and scvf_source is None)
     if isinstance(f, ast.FilterList):
         if f.operator == "MUST_PASS_ALL":
             children = list(f.filters)
             transforms: list[Callable[[DataFrame], DataFrame]] = []
-            if allow_transform:
+            if scvf_join:
                 # fuse sibling SCVFs into one aggregation+join
                 scvfs = [
                     c for c in children if isinstance(c, ast.SingleColumnValueFilter)
@@ -938,7 +946,7 @@ def compile_filter(
             parts = [
                 compile_filter(
                     x, allow_transform, single_version, reversed_scan,
-                    scvf_source,
+                    scvf_source, clustered,
                 )
                 for x in children
             ]
@@ -957,7 +965,7 @@ def compile_filter(
             # The exclude subclass keeps the predicate form (its cell
             # stripping composes differently under OR).
             if (
-                allow_transform
+                scvf_join
                 and f.filters
                 and all(
                     type(c) is ast.SingleColumnValueFilter for c in f.filters
@@ -1002,7 +1010,7 @@ def compile_filter(
         return Compiled(compile_compare(F.col("value"), f.op, f.comparator))
     # SingleColumnValueExcludeFilter subclasses SingleColumnValueFilter
     if isinstance(f, ast.SingleColumnValueFilter):
-        if allow_transform:
+        if scvf_join:
             return Compiled(
                 None, [_scvf_multi_transform([f], single_version, scvf_source)]
             )
@@ -1128,10 +1136,11 @@ def compile_filter(
                 allow_transform=allow_transform,
                 reversed_scan=reversed_scan,
                 scvf_source=scvf_source,
+                clustered=clustered,
             )
         pred = _skip_code_pred(f.wrapped, reversed_scan)
         if allow_transform:
-            return Compiled(None, [_skip_transform(pred)])
+            return Compiled(None, [_skip_transform(pred, clustered)])
         all_pass = (
             F.min(F.when(pred, F.lit(1)).otherwise(F.lit(0))).over(_w_row()) == 1
         )
@@ -1216,15 +1225,19 @@ def apply_filter(
 
     Predicates containing window expressions cannot sit in a WHERE clause, so
     the predicate is materialized via withColumn first; Catalyst still pushes
-    the window-free conjuncts below the window/exchange. ``semi``: how SCVF
-    verdict rows reach ``df`` (default: a join against the staged verdict
-    row set).
+    the window-free conjuncts below the window/exchange. ``semi``: given
+    when ``df`` is clustered by row (hash-partitioned on it, or one
+    partition); row verdicts then compile to windows over ``row``
+    (``compile_filter(clustered=True)``) and only the SCVF verdicts judged
+    on a separate ``scvf_source`` stream reach ``df`` through ``semi``.
+    Without it the input is unclustered and verdicts join back: the staged
+    SCVF join, Skip's anti-join.
     """
     if f is None:
         return df
     c = compile_filter(
         f, single_version=single_version, reversed_scan=reversed_scan,
-        scvf_source=scvf_source,
+        scvf_source=scvf_source, clustered=semi is not None,
     )
     out = df
     if c.pred is not None:

@@ -86,10 +86,6 @@ def decode_int_be(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def encode_string(col: Column) -> Column:
-    return F.encode(col.cast(T.StringType()), "UTF-8")
-
-
 def decode_string(col: Column) -> Column:
     """Binary -> string for comparator/regex evaluation.
 

@@ -28,8 +28,10 @@ Table's cells share ONE computation, and a chain of RMW calls plans in
 constant depth — the memstore analog. Each such checkpoint is a few rows, one per RMW call,
 held in the block manager while a frame built on it is reachable (at most
 for the session). Computed or larger mutation frames keep the general
-path: a broadcast semi join of the key set against the log, so the 100 TB
-cell log is never shuffled to apply a batch.
+path: a broadcast semi join of the key set against the log, after which
+only the touched rows are clustered by row (one exchange) for the read
+view's window forms, so the 100 TB cell log is never shuffled to apply a
+batch.
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ from hbase_1_3_0_spark.cells import (
 )
 from hbase_1_3_0_spark.functions import codecs
 from hbase_1_3_0_spark.operators.read_view import (
+    cluster_rows,
     local_lookup,
     pin_rows,
     read_view,
@@ -185,11 +188,15 @@ def _delta_once(delta: DataFrame) -> DataFrame:
     return delta.localCheckpoint(eager=False)
 
 
-def _attach(left: DataFrame, cur: DataFrame, on: list[str], local: bool) -> DataFrame:
+def _attach(left: DataFrame, cur: DataFrame, on: list[str], pinned: bool) -> DataFrame:
     """Left-join the current values onto the mutation records: a window
     lookup on the small-key path, a plain join (AQE broadcasts ``cur``)
     otherwise."""
-    return local_lookup(left, cur, on) if local else left.join(cur, on, "left")
+    return (
+        local_lookup(left, cur, on, pinned=True)
+        if pinned
+        else left.join(cur, on, "left")
+    )
 
 
 def _current_values(
@@ -202,18 +209,19 @@ def _current_values(
 
     The key set is tiny relative to the log: ``pinned`` (the small-key
     path) prunes the log to those rows in the scan, in one partition;
-    otherwise a semi-join runs the read view over only the touched rows
-    (AQE broadcasts the key side).
+    otherwise a broadcast semi-join keeps only the touched rows, which are
+    then clustered by row once. Either way the read view runs on its
+    exchange-free window forms.
     """
     if pinned is not None:
         touched = pin_rows(cells, pinned)
     else:
-        touched = cells.join(
-            F.broadcast(keys.select("row").distinct()), "row", "left_semi"
+        touched = cluster_rows(
+            cells.join(
+                F.broadcast(keys.select("row").distinct()), "row", "left_semi"
+            )
         )
-    view = read_view(
-        touched, max_versions=1, local=pinned is not None, **rv_kwargs
-    )
+    view = read_view(touched, max_versions=1, clustered=True, **rv_kwargs)
     return view.select(
         "row", "family", "qualifier", F.col("value").alias("_cur"), F.col("ts")
     )

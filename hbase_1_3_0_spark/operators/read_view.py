@@ -28,22 +28,35 @@ This reproduces the reference's ``ScanQueryMatcher`` state machine
    newer than the query's time-range upper bound do not mask — time-travel
    reads see through later deletes (SQM:347-395).
 
-Scale notes (100 TB): delete markers are aggregated first (two tiny groupBys
-over marker rows only) and joined back to the put stream — AQE turns those
-joins into broadcasts at runtime when the marker side is small, so the big
-put stream is never shuffled for masking. The version limit is the only
-full-width operation: for ``max_versions == 1`` (the HBase default) it runs
-as a ``groupBy().agg(max_by(...))`` — partial-aggregatable, map-side combined,
-no sort — and only the general ``n > 1`` case pays a window sort.
+Scale notes (100 TB): a Table scan clusters the cells of its row range
+by ``row`` once (:func:`cluster_rows`, after the row-range predicates, so
+they still prune the parquet scan). Every row-keyed step after that runs
+inside the partitions with no further exchange: the markers reach their
+puts through windows over (row, family) and (row, family, qualifier)
+(:func:`mask_deletes` with ``clustered=True``), the version limit
+aggregates per column where the cells already are, and the scan's
+row-level filter verdicts are windows over ``row``. The trade against
+the join form: that one exchange carries every version and every marker
+of the scanned range, where the join form aggregates the markers apart,
+broadcasts them to the puts and shuffles only partially aggregated
+columns for the version limit — one wider shuffle against several
+narrower exchanges, each its own stage and job. A log with many versions
+per column and a wide value column pays the most for the wider shuffle.
+Callers whose cells are not clustered keep the join form, which never
+shuffles the puts for masking: the MapReduce jobs
+(``jobs.row_counter``, ``hash_table``, ``sync_table`` over its bucketed
+layout, ``compact``, ...) and a clean-log Table scan, which has no marker
+or version step at all. For ``max_versions == 1`` (the HBase default) the
+version limit is a ``groupBy().agg(max_by(...))`` — partial-aggregatable,
+no window sort — and only the general ``n > 1`` case pays a window.
 
 Small-key path (the one-region-RPC analog of a Get, HRegion.java:5707): when
 the key set is a driver-side list of at most
 ``spark.sql.parquet.pushdown.inFilterThreshold`` keys whose estimated size
 is under ``spark.sql.autoBroadcastJoinThreshold`` (:func:`small_key_set`),
 :func:`pin_rows` pushes ``row IN (...)`` into the parquet scan and pins the
-surviving cells to ONE partition. A single partition already satisfies the
-clustering every read-view operator needs: with ``local=True`` the marker
-joins become windows (:func:`mask_deletes`) and key lookups a union plus a
+surviving cells to ONE partition — the degenerate clustering, which the
+same window forms need no exchange for, and key lookups a union plus a
 window (:func:`local_lookup`), so the whole read view plans with zero
 exchanges. The bound: the pruned scan runs in one task; under the key
 count limit the reader prunes each key as its own equality, so that task
@@ -115,22 +128,34 @@ def pin_rows(cells: DataFrame, keys: list[bytes]) -> DataFrame:
     return cells.where(F.expr(f"`row` IN ({in_list})")).coalesce(1)
 
 
-def local_lookup(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
-    """``left`` LEFT JOIN ``right`` USING ``on`` for small-key-path inputs,
-    where ``right`` holds at most one row per key: ``right``'s other
-    columns reach the matching ``left`` rows through a window over the
-    union of both sides. The union is pinned to one partition, which the
-    window's clustering needs, so the lookup plans a sort and no exchange
-    whatever the size estimates (a two-sided join re-shuffles one-partition
-    children once their estimates pass spark.sql.maxSinglePartitionBytes,
-    and a product-of-children join estimate does). Null keys match nothing,
+def cluster_rows(cells: DataFrame) -> DataFrame:
+    """Hash-partition ``cells`` on ``row``: the one exchange of a general
+    scan. No partition count, so AQE may still coalesce the shuffle's
+    partitions; predicates written above it are still pushed below it, into
+    the parquet scan."""
+    return cells.repartition("row")
+
+
+def local_lookup(
+    left: DataFrame, right: DataFrame, on: list[str], pinned: bool = False
+) -> DataFrame:
+    """``left`` LEFT JOIN ``right`` USING ``on`` for inputs clustered by
+    ``row`` (``on`` holds it), where ``right`` holds at most one row per
+    key: ``right``'s other columns reach the matching ``left`` rows through
+    a window over the union of both sides, so the lookup plans a sort and no
+    exchange whatever the size estimates (a two-sided join re-shuffles
+    one-partition children once their estimates pass
+    spark.sql.maxSinglePartitionBytes, and a product-of-children join
+    estimate does). Both sides hash-partitioned on ``row`` keep that
+    partitioning through the union; ``pinned`` sides (one partition each,
+    :func:`pin_rows`) are coalesced back to one. Null keys match nothing,
     as in an equi-join."""
     side = "_lk_right"
-    both = (
-        left.withColumn(side, F.lit(False))
-        .unionByName(right.withColumn(side, F.lit(True)), allowMissingColumns=True)
-        .coalesce(1)
+    both = left.withColumn(side, F.lit(False)).unionByName(
+        right.withColumn(side, F.lit(True)), allowMissingColumns=True
     )
+    if pinned:
+        both = both.coalesce(1)
     keyed = " AND ".join(f"`{k}` IS NOT NULL" for k in on)
     over = "PARTITION BY " + ", ".join(f"`{k}`" for k in on)
     looked = both.selectExpr(
@@ -146,11 +171,16 @@ def local_lookup(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
     return looked.where(f"NOT {side}").drop(side)
 
 
-def local_semi(df: DataFrame, rows: DataFrame, anti: bool = False) -> DataFrame:
+def local_semi(
+    df: DataFrame, rows: DataFrame, anti: bool = False, pinned: bool = False
+) -> DataFrame:
     """``df`` LEFT SEMI (or ANTI) JOIN ``rows`` on ``row``, as a
-    :func:`local_lookup` for the small-key path."""
+    :func:`local_lookup` for inputs clustered by row."""
     hit = local_lookup(
-        df, rows.select("row").distinct().withColumn("_hit", F.lit(True)), ["row"]
+        df,
+        rows.select("row").distinct().withColumn("_hit", F.lit(True)),
+        ["row"],
+        pinned,
     )
     return hit.where("_hit IS NULL" if anti else "_hit IS NOT NULL").drop("_hit")
 
@@ -159,19 +189,21 @@ def mask_deletes(
     cells: DataFrame,
     *,
     marker_ts_below: int | None = None,
-    local: bool = False,
+    clustered: bool = False,
 ) -> DataFrame:
     """Apply the four tombstone kinds; return surviving Put cells.
 
     ``marker_ts_below``: only markers with ``ts < marker_ts_below`` take
-    effect (the KEEP_DELETED_CELLS time-travel carve-out). ``local``: the
-    cells are pinned to one partition (:func:`pin_rows`); the markers then
-    reach their puts through windows over (row, family) and (row, family,
-    qualifier) instead of joins — sorts inside the partition, no exchange.
-    A window partition groups NULL qualifiers together, the same null-safe
-    match the join form spells out.
+    effect (the KEEP_DELETED_CELLS time-travel carve-out). ``clustered``:
+    the cells are clustered by row (:func:`cluster_rows`, or one partition,
+    :func:`pin_rows`); the markers then reach their puts through windows
+    over (row, family) and (row, family, qualifier) — sorts inside each
+    partition, no exchange. A window partition groups NULL qualifiers
+    together, the same null-safe match the join form spells out. The join
+    form serves unclustered callers: it aggregates the markers and joins
+    them back, which AQE can broadcast.
     """
-    if local:
+    if clustered:
         live = f"type <> {TYPE_PUT}"
         if marker_ts_below is not None:
             live += f" AND ts < {int(marker_ts_below)}"
@@ -314,7 +346,7 @@ def read_view(
     now_ms: int | None = None,
     raw: bool = False,
     cell_filter: Column | None = None,
-    local: bool = False,
+    clustered: bool = False,
 ) -> DataFrame:
     """The user-visible cell stream for a Get/Scan over a cell log.
 
@@ -325,8 +357,8 @@ def read_view(
     ``VERSIONS=1`` + a value filter return the newest *passing* version
     (a failing newer version is SKIPped, not counted), matching HBase.
 
-    ``local``: ``cells`` is pinned to one partition (:func:`pin_rows`); the
-    read view then plans without exchanges.
+    ``clustered``: ``cells`` is clustered by row (:func:`cluster_rows` or
+    :func:`pin_rows`); the read view then plans without exchanges.
     """
     if raw:
         out = cells
@@ -352,7 +384,7 @@ def read_view(
         marker_ts_below = time_range[1]
 
     visible = mask_deletes(
-        cells, marker_ts_below=marker_ts_below, local=local
+        cells, marker_ts_below=marker_ts_below, clustered=clustered
     )
 
     # Per-cell TTL tags (TagType.java:33, TTL_TAG_TYPE=8): an optional

@@ -42,18 +42,6 @@ def word_tokens(text: Column) -> Column:
     return F.regexp_extract_all(F.lower(text), F.lit(TOKEN_PATTERN), 0)
 
 
-def unigram_counts(
-    df: DataFrame, *, text_col: str = "text", vocab_size: int | None = None
-) -> DataFrame:
-    """Corpus unigram counts (word, c); ``vocab_size`` keeps the most
-    frequent words (ties broken by word) — REQUIRED at scale so the
-    model broadcasts."""
-    toks = df.select(
-        F.explode(word_tokens(F.col(text_col))).alias("word")
-    )
-    return _counts_from_tokens(toks, vocab_size)
-
-
 def _counts_from_tokens(
     toks: DataFrame, vocab_size: int | None
 ) -> DataFrame:

@@ -52,9 +52,10 @@ from hbase_1_3_0_spark.pipeline.parallelism import fan_out_small_scan
 
 #: Winner-key packing factor: ``doc_id * POS_PACK + pos`` encodes the
 #: lexicographic (doc_id, pos) order as one long for HashAggregate-able
-#: min. Valid while 1 <= pos < POS_PACK (docs under ~1e6 chars) and
-#: doc_id >= 0 — the bound the DuckDB oracle has assumed since it was
-#: written (it uses this exact key).
+#: min — the key the DuckDB oracle uses too. Exact while 1 <= pos <
+#: POS_PACK (docs under ~1e6 chars): a window at or past it raises
+#: (:func:`repeated_spans`), and a doc_id whose key overflows a long
+#: raises under ANSI arithmetic.
 POS_PACK = 1_000_000
 
 
@@ -112,12 +113,24 @@ def repeated_spans(
     # always used): min over a primitive long keeps the aggregation a
     # HashAggregate, where min(struct(_id, pos)) forced a SortAggregate
     # (struct buffers are not mutable-buffer types — r14, guide §5).
-    # The packing assumes 1 <= pos < POS_PACK (documents shorter than
-    # ~1e6 chars; pos is 1-based) and _id >= 0 — both already assumed by
-    # every declared oracle. Count gates the hot set; both aggregates
-    # combine map-side so the shuffle carries
+    # The packing is exact only while pos < POS_PACK (pos is 1-based): a
+    # window of a document of ~1e6 chars or more would collide with the
+    # next id's keys, so it raises instead. The guard is a branch of the
+    # key itself, so Catalyst cannot fold it away. Count gates the hot
+    # set; both aggregates combine map-side so the shuffle carries
     # distinct-digests-per-partition, not raw windows.
-    first_key = F.col("_id") * F.lit(POS_PACK) + F.col("pos")
+    first_key = F.when(
+        F.col("pos") < F.lit(POS_PACK),
+        F.col("_id") * F.lit(POS_PACK) + F.col("pos"),
+    ).otherwise(
+        F.raise_error(
+            F.lit(
+                f"repeated_spans: a window position reached POS_PACK "
+                f"({POS_PACK}); documents must be shorter than "
+                f"{POS_PACK} + k - 1 characters"
+            )
+        )
+    )
     hot = (
         win.groupBy("digest")
         .agg(

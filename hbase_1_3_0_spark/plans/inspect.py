@@ -11,6 +11,9 @@ reports) can ASSERT the plan shape instead of hoping:
   (region/HFile pruning + bloom analog — PushedFilters).
 - ``exchange_count``: shuffles in the plan (each is a region-server
   round-trip analog; scans of clean logs must show 0).
+- ``exchanges_run``: the exchanges an adaptive execution actually ran,
+  subqueries included and reused exchanges counted once — where the
+  planned text repeats a subtree that AQE computes once.
 - ``codegen_stage_count`` / ``has_python_eval``: JVM whole-stage codegen
   coverage; Python eval nodes mark the slow path.
 """
@@ -56,6 +59,46 @@ def shuffle_exchange_count(df: DataFrame) -> int:
     """Shuffle (hash/range) exchanges only — broadcasts excluded."""
     plan = _executed_plan(df)
     return len(re.findall(r"\bExchange (hash|range|Single)", plan))
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def exchanges_run(df: DataFrame) -> list[str]:
+    """Run ``df`` and return the output partitioning of every exchange its
+    adaptive execution ran (``"broadcast"`` for a broadcast), sorted. Plans
+    of scalar subqueries are walked too; an exchange AQE reused is listed
+    once, where it ran."""
+    df.collect()  # finalizes THIS QueryExecution's adaptive plan
+    ran: dict[int, str] = {}
+
+    def walk(node) -> None:
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan())
+            return
+        if name in ("ShuffleQueryStageExec", "BroadcastQueryStageExec"):
+            ex = node.plan()
+            if ex.getClass().getSimpleName() == "ReusedExchangeExec":
+                ex = ex.child()
+            if ex.id() not in ran:
+                ran[ex.id()] = (
+                    "broadcast" if name.startswith("Broadcast")
+                    else ex.outputPartitioning().toString()
+                )
+                walk(ex.child())
+            return
+        if name.endswith("QueryStageExec"):
+            walk(node.plan())
+            return
+        for sub in _seq(node.subqueries()):
+            walk(sub)
+        for child in _seq(node.children()):
+            walk(child)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return sorted(ran.values())
 
 
 def codegen_stage_count(df: DataFrame) -> int:

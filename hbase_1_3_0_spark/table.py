@@ -14,8 +14,12 @@ Execution order of a scan (mirrors the reference read path, SURVEY.md §3.1):
    ``exists`` list that passes ``read_view.small_key_set`` — is the
    small-key path: ``row IN (...)`` pruned in the scan, the cells pinned to
    one partition, and every later step plans without an exchange (the one
-   region RPC of a reference Get). Larger or computed key sets, and range
-   scans, keep the general path: a broadcast semi join, AQE-planned joins.
+   region RPC of a reference Get). Range scans, and larger or computed key
+   sets (a broadcast semi join first), take the general path: the cells
+   are hash-partitioned on row ONCE, and every later row-keyed step runs
+   inside those partitions without another exchange. A clean-log scan
+   (TableMeta.clean_log) needs no row-keyed read-view step and stays
+   unclustered and shuffle-free.
 2. read view (versions / tombstones / TTL / timerange) per family group.
 3. family / column projection (Scan.addFamily/addColumn).
 4. filter tree (compiled filter algebra).
@@ -27,6 +31,7 @@ Execution order of a scan (mirrors the reference read path, SURVEY.md §3.1):
 from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -38,6 +43,7 @@ from hbase_1_3_0_spark.filters import ast as filter_ast
 from hbase_1_3_0_spark.filters.compiler import (
     apply_filter,
     compile_filter,
+    first_rows,
     has_any_version_scvf,
     is_cell_predicate,
 )
@@ -45,6 +51,7 @@ from hbase_1_3_0_spark.filters.parser import parse_filter
 from hbase_1_3_0_spark.operators import mutations as mut
 from hbase_1_3_0_spark.operators.coprocessor import Observers
 from hbase_1_3_0_spark.operators.read_view import (
+    cluster_rows,
     local_semi,
     pin_rows,
     read_view,
@@ -164,9 +171,10 @@ class Table:
     def _scan(self, s: Scan, keys: list[bytes] | None = None) -> DataFrame:
         """The one read path. ``keys``: a small driver-side key set
         (read_view.small_key_set) — the scan is pruned to it and pinned to
-        one partition, so the read view, cell and SCVF filters and the row
-        limit plan without exchanges. A single-row range (a Get) takes that
-        path by itself."""
+        one partition, so the read view, the filters and the row limit plan
+        without exchanges. A single-row range (a Get) takes that path by
+        itself. Otherwise the scanned cells are clustered by row once
+        (read_view.cluster_rows) unless the read view is the clean-log one."""
         if s.row_prefix is not None:
             # setRowPrefixFilter (Scan.java:397): pure start/stop sugar
             if s.start_row is not None or s.stop_row is not None:
@@ -205,12 +213,10 @@ class Table:
             and s.stop_inclusive
         ):
             keys = small_key_set(self.cells.sparkSession, [s.start_row])
-        local = keys is not None
+        pinned = keys is not None
         # preScannerOpen/preGetOp hooks rewrite the raw cell stream; filters
         # they add still push down through Catalyst
         df = Observers.apply(self.observers.pre_scan, self.cells)
-        if local:
-            df = pin_rows(df, keys)
 
         # 1. row range first — pushed into the parquet scan by Catalyst.
         # Reversed scans flip the range roles (Scan.setReversed:694 +
@@ -232,6 +238,16 @@ class Table:
                     df = df.where(F.col("row") <= F.lit(s.stop_row))
                 else:
                     df = df.where(F.col("row") < F.lit(s.stop_row))
+
+        # 1b. cluster by row, once: every row-keyed step after this (marker
+        # masking, version limit, row-level filter verdicts, per-CF paging,
+        # the row limit) then runs inside the partitions. A clean-log scan
+        # has no row-keyed step in its read view and stays unclustered.
+        clustered = pinned or s.raw or not self.meta.clean_log
+        if pinned:
+            df = pin_rows(df, keys)
+        elif clustered:
+            df = cluster_rows(df)
 
         # 2. read view per family-parameter group. Window-free cell
         # predicates evaluate INSIDE the read view, before version counting
@@ -262,7 +278,7 @@ class Table:
             p = security.acl_pred(s.user)
             cell_pred = p if cell_pred is None else (cell_pred & p)
         raw_cells = df
-        df = self._read_view(df, s, cell_pred, local)
+        df = self._read_view(df, s, cell_pred, clustered)
 
         # 3. projection — the reference Get/Scan familyMap is a UNION of
         # per-family selections: addFamily(F) selects the whole family,
@@ -314,7 +330,7 @@ class Table:
             scvf_source = _project(
                 self._read_view(
                     raw_cells, s.with_(max_versions=2**31 - 1), cell_pred,
-                    local,
+                    clustered,
                 )
             )
 
@@ -332,7 +348,7 @@ class Table:
         df = apply_filter(
             df, filt, single_version=single_version,
             reversed_scan=s.reversed, scvf_source=scvf_source,
-            semi=local_semi if local else None,
+            semi=partial(local_semi, pinned=pinned) if clustered else None,
         )
 
         # 5. intra-row per-CF paging. storeOffset/storeLimit count CELLS
@@ -357,12 +373,7 @@ class Table:
 
         # 6. row limit (ordered prefix; TakeOrderedAndProject, no full sort)
         if s.limit is not None:
-            order = F.col("row").desc() if s.reversed else F.col("row").asc()
-            rows = df.select("row").distinct().orderBy(order).limit(s.limit)
-            if local:
-                df = local_semi(df, rows)
-            else:
-                df = df.join(F.broadcast(rows), "row", "left_semi")
+            df = first_rows(df, s.limit, s.reversed)
         # postScannerNext hooks rewrite the visible cells (e.g. redaction)
         df = Observers.apply(self.observers.post_scan, df)
         return df.select(*CELL_COLUMNS)
@@ -446,7 +457,7 @@ class Table:
         df: DataFrame,
         s: Scan,
         cell_pred: Column | None = None,
-        local: bool = False,
+        clustered: bool = False,
     ) -> DataFrame:
         if self.meta.clean_log and not s.raw:
             out = self._read_view_clean(df, s)
@@ -496,7 +507,7 @@ class Table:
                     now_ms=self._now_ms,
                     raw=s.raw,
                     cell_filter=cell_pred,
-                    local=local,
+                    clustered=clustered,
                 )
             )
         out = outs[0]

@@ -1136,6 +1136,27 @@ def test_repeated_substring_dedup(spark):
     assert {d for d, _, _ in spans} == {2, 3}  # winners keep doc 1 whole
 
 
+def test_repeated_substring_packing_bound_raises(spark, monkeypatch):
+    """A window at position >= POS_PACK would pack into the next doc's
+    winner keys (``doc_id * POS_PACK + pos``) and silently pick a wrong
+    first occurrence; it must raise instead. POS_PACK is shrunk so the
+    bound is reachable with short documents."""
+    import pytest as _pytest
+
+    from hbase_1_3_0_spark.pipeline import substrings as ss
+
+    monkeypatch.setattr(ss, "POS_PACK", 100)
+    shared = "the same long boilerplate passage appears in both documents"
+    df = spark.createDataFrame(
+        [(0, "x" * 150 + shared), (1, shared + "y" * 150)],
+        "doc_id: long, text: string",
+    )
+    out = ss.remove_repeated_spans(df, k=20)
+    assert "raise_error" in out._jdf.queryExecution().executedPlan().toString()
+    with _pytest.raises(Exception, match="POS_PACK"):
+        out.collect()
+
+
 def test_opq_rotation_balances_variance_for_pq(spark):
     """On a corpus whose variance is concentrated in a few raw dims
     (PQ's worst case: one contiguous subspace hoards the signal while

@@ -5,6 +5,8 @@ plans — pushdown, pruning, codegen, no accidental Python eval.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,14 +43,48 @@ def test_clean_scan_is_shuffle_free_single_codegen_stage(disk_table):
     assert not inspect.has_python_eval(df)
 
 
-def test_full_read_view_broadcasts_markers_not_puts(spark, sf_dir, disk_table):
-    # same cells without the clean flag: marker joins must be broadcasts;
-    # the only shuffle is the version-limit aggregation
+# --------------------------------------------------------------------------
+# General path: a scan that needs the full read view clusters its cells by
+# row exactly once; marker masking, the version limit and row-level filter
+# verdicts then run inside those partitions as windows.
+# --------------------------------------------------------------------------
+
+SCVF_LIST = (
+    "(SingleColumnValueFilter ('d', 'c_mktsegment', =, 'binary:BUILDING', "
+    "true, true) AND SingleColumnValueFilter ('d', 'c_name', =, "
+    "'substring:0', true, true))"
+)
+SKIP = "SKIP ValueFilter (!=, 'binary:BUILDING')"
+WHILE = "WHILE ValueFilter (!=, 'binary:BUILDING')"
+
+
+def test_general_scan_shuffles_once_by_row(disk_table):
+    """A non-clean scan plans exactly one shuffle, hash-partitioned on
+    row, and no join — with an SCVF list or a Skip filter too — and its
+    row range still reaches the parquet scan."""
     t = Table(TableMeta(name="c2"), disk_table.cells, now_ms=1)
-    df = t.scan(start_row=_k(10), stop_row=_k(50))
+    for f in (None, SCVF_LIST, SKIP):
+        df = t.scan(start_row=_k(10), stop_row=_k(50), filter=f)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert inspect.exchange_count(df) == 1, f  # broadcasts included
+        assert len(re.findall(r"Exchange hashpartitioning\(row#", plan)) == 1, f
+        assert "Join" not in plan, f
+        assert inspect.pushes_down(df, "row"), f
+
+
+def test_general_while_match_shuffles_cells_once(disk_table):
+    """WhileMatch needs the first failing cell of the whole range: a
+    scalar subquery over the same clustered cells, whose exchange AQE
+    reuses. The cells shuffle once; the only other exchange carries one
+    partial minimum per partition. No join."""
+    t = Table(TableMeta(name="c2"), disk_table.cells, now_ms=1)
+    df = t.scan(start_row=_k(10), stop_row=_k(50), filter=WHILE)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    assert "Join" not in plan
     assert inspect.pushes_down(df, "row")
+    ran = inspect.exchanges_run(df)
+    assert len(ran) == 2 and ran[0].startswith("SinglePartition")
+    assert re.match(r"hashpartitioning\(row#\d+, \d+\)$", ran[1])
 
 
 # --------------------------------------------------------------------------
@@ -87,6 +123,7 @@ def test_small_key_reads_plan_zero_exchanges(disk_table):
         get,
         t.get(_k(7), filter="SingleColumnValueFilter ('d', 'c_name', =, "
                             "'binary:x', true, true)"),
+        *(t.get(_k(7), filter=f) for f in (SCVF_LIST, SKIP, WHILE)),
         t.multi_get([_k(1), _k(2), _k(40)]),
         t.exists([_k(3), b"missing"]),
     ]

@@ -22,7 +22,7 @@ from hbase_1_3_0_spark.cells import (
     TYPE_DELETE_VERSION,
     TYPE_PUT,
 )
-from hbase_1_3_0_spark.operators.read_view import read_view
+from hbase_1_3_0_spark.operators.read_view import cluster_rows, read_view
 
 ROWS = [b"r1", b"r2", b"\x00", b"\xff\x01"]  # incl. negative-byte keys
 QUALS = [b"a", b"b"]
@@ -99,13 +99,27 @@ def _to_df(spark, cells):
     return spark.createDataFrame(rows, CELL_SCHEMA)
 
 
+def _read_view(spark, cells, clustered: bool, **kw):
+    """The read view over ``cells`` in either marker form: the join form
+    unclustered callers get, or the window form over cells clustered by
+    row (what a Table scan runs)."""
+    df = _to_df(spark, cells)
+    if clustered:
+        df = cluster_rows(df)
+    return read_view(df, clustered=clustered, **kw)
+
+
 @settings(
     max_examples=ex(30),
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@given(batch=batch_st, max_versions=st.integers(min_value=1, max_value=3))
-def test_read_view_matches_model(spark, batch, max_versions):
+@given(
+    batch=batch_st,
+    max_versions=st.integers(min_value=1, max_value=3),
+    clustered=st.booleans(),
+)
+def test_read_view_matches_model(spark, batch, max_versions, clustered):
     # distinct cell identities: the log is a set of cells (a put replayed at
     # the same identity is idempotent); drop duplicate (row,qual,ts,type,seq)
     seen = {}
@@ -116,7 +130,9 @@ def test_read_view_matches_model(spark, batch, max_versions):
     expected = model_read_view(batch, max_versions)
     got = {
         (bytes(r["row"]), bytes(r["qualifier"]), r["ts"], r["seq"])
-        for r in read_view(_to_df(spark, batch), max_versions=max_versions).collect()
+        for r in _read_view(
+            spark, batch, clustered, max_versions=max_versions
+        ).collect()
     }
     assert got == expected
 
@@ -329,9 +345,10 @@ def model_ttl_view(
     max_versions=st.integers(min_value=1, max_value=3),
     min_versions=st.integers(min_value=0, max_value=2),
     ttl_seconds=st.integers(min_value=4, max_value=11),
+    clustered=st.booleans(),
 )
 def test_read_view_ttl_min_versions_matches_model(
-    spark, batch, max_versions, min_versions, ttl_seconds
+    spark, batch, max_versions, min_versions, ttl_seconds, clustered
 ):
     """Fuzz the hard corner SURVEY.md flags first: TTL expiry interacting
     with the minVersions keep-floor and all four tombstone kinds. Cell ts
@@ -352,8 +369,10 @@ def test_read_view_ttl_min_versions_matches_model(
     )
     got = {
         (bytes(r["row"]), bytes(r["qualifier"]), r["ts"], r["seq"])
-        for r in read_view(
-            _to_df(spark, batch),
+        for r in _read_view(
+            spark,
+            batch,
+            clustered,
             max_versions=max_versions,
             min_versions=min_versions,
             ttl_seconds=ttl_seconds,
@@ -372,8 +391,9 @@ def test_read_view_ttl_min_versions_matches_model(
     batch=batch_st,
     hi=st.integers(min_value=2, max_value=7),
     kdc=st.booleans(),
+    clustered=st.booleans(),
 )
-def test_read_view_kdc_time_travel_matches_model(spark, batch, hi, kdc):
+def test_read_view_kdc_time_travel_matches_model(spark, batch, hi, kdc, clustered):
     """KEEP_DELETED_CELLS x time-travel fuzz: with KDC=TRUE a time-range
     read ignores delete markers at/above the range's upper bound (sees
     through later deletes); with KDC=FALSE every marker masks regardless
@@ -403,8 +423,10 @@ def test_read_view_kdc_time_travel_matches_model(spark, batch, hi, kdc):
 
     got = {
         (bytes(r["row"]), bytes(r["qualifier"]), r["ts"], r["seq"])
-        for r in read_view(
-            _to_df(spark, batch),
+        for r in _read_view(
+            spark,
+            batch,
+            clustered,
             max_versions=1,
             keep_deleted_cells="TRUE" if kdc else "FALSE",
             time_range=(0, hi),

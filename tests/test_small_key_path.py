@@ -4,8 +4,9 @@ A Get, a literal ``multi_get``/``exists`` list and a driver-side RMW
 mutation frame of at most ``spark.sql.parquet.pushdown.inFilterThreshold``
 keys under ``spark.sql.autoBroadcastJoinThreshold`` take the small-key path: ``row IN (...)`` pruned in the scan, one pinned partition,
 window lookups instead of joins, and a local-checkpointed RMW delta. The
-general path (a broadcast semi join of the keys, AQE-planned joins) is what
-every larger or computed key set takes. Setting the threshold to -1 turns
+general path (a broadcast semi join of the keys, then one hash-on-row
+exchange and the same window forms over the clustered cells) is what every
+larger or computed key set takes. Setting the threshold to -1 turns
 the small-key path off, so each operation below runs both ways on the same
 log and the results must match cell for cell — over random logs with all
 four tombstone kinds, TTL with ``min_versions``, KEEP_DELETED_CELLS time

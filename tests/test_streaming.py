@@ -235,7 +235,20 @@ def test_stateful_ttl_counters_accumulate_across_batches(spark, tmp_path):
         if last.get(b"r1") == 10 and b"r2" in last:
             break
         _time.sleep(0.5)
+    # grace: let at least two more timeout-check micro-batches run after
+    # the state accumulated, so a wrongly early expiry has the chance to
+    # reach the sink before expired=False is asserted
+    def batch_id() -> int:
+        return (q.lastProgress or {}).get("batchId", -1)
+
+    settled = batch_id() + 2
+    grace_deadline = _time.time() + 30
+    while batch_id() < settled and _time.time() < grace_deadline:
+        _time.sleep(0.5)
+    rows = spark.table("ttl_ctrs").collect()
+    ran = batch_id()
     q.stop()
+    assert ran >= settled, f"only reached batch {ran}, wanted {settled}"
     assert last[b"r1"] == 10
     assert last[b"r2"] == 1
     assert all(r.expired is False for r in rows)

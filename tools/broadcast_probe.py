@@ -4,10 +4,13 @@ The 10x scale probes show plan-SHAPE stability, but three hot paths
 depend on a build side staying under the ~10 MB adaptive broadcast
 threshold, and none had been pushed past it:
 
-1. **fused-SCVF verdict row set** (b-filter-scan shape,
-   compiler.py _scvf_multi_transform): AQE-decided — the staged
+1. **fused-SCVF verdict row set on UNCLUSTERED input**
+   (compiler.py _scvf_multi_transform): AQE-decided — the staged
    round-robin exchange exists precisely so AQE sizes the REAL verdict
-   set. This probe sweeps filter selectivity (~1% -> 100%) and also
+   set. Only unclustered callers reach that join: the probe's table is
+   a clean log, whose scan is not clustered by row (a non-clean scan
+   clusters its cells and judges SCVFs as windows, with no join to
+   flip). This probe sweeps filter selectivity (~1% -> 100%) and also
    forces the 100x-representative crossing by lowering
    spark.sql.adaptive.autoBroadcastJoinThreshold, recording the
    BHJ->SMJ flip and the fallback's cost.
@@ -89,7 +92,8 @@ def _strategy(df) -> dict:
 
 
 def probe_scvf(spark, li, results):
-    """Selectivity sweep x threshold sweep over the fused-SCVF path."""
+    """Selectivity sweep x threshold sweep over the fused-SCVF staged
+    join, as a clean-log (unclustered) scan takes it."""
     cases = {
         # ~1% of lineitem rows
         "sel_1pct": (

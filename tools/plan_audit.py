@@ -96,6 +96,10 @@ GUARDS = {
         "raise_error",
         "be8 width guard — 'Field is not a long' (HRegion.java:7920)",
     ),
+    "substring_dedup": (
+        "raise_error",
+        "winner-key packing bound — window position < POS_PACK",
+    ),
 }
 
 # intentional plan shapes, reviewed and documented at the operator:
