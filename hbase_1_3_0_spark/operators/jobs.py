@@ -173,8 +173,7 @@ def _md5_long(col) -> "F.Column":
 
 
 def _hash_bucket(num_buckets: int) -> "F.Column":
-    """Row -> bucket id, md5-derived (shared by hash_table and the SyncTable
-    prefilter so bucket assignments always agree)."""
+    """Row -> bucket id, md5-derived (HashTable's row ranges)."""
     h = F.conv(
         F.substring(F.md5(F.encode(F.hex(F.col("row")), "UTF-8")), 1, 8), 16, 10
     ).cast("long")
@@ -209,13 +208,7 @@ def hash_table(cells: DataFrame, *, num_buckets: int = 1024) -> DataFrame:
     )
 
 
-def sync_table(
-    source: DataFrame,
-    target: DataFrame,
-    *,
-    hash_prefilter: bool = False,
-    num_buckets: int = 1024,
-) -> DataFrame:
+def sync_table(source: DataFrame, target: DataFrame) -> DataFrame:
     """SyncTable (SyncTable.java:56): compute the mutation stream that makes
     ``target`` identical to ``source`` — a distributed diff/merge.
 
@@ -229,45 +222,9 @@ def sync_table(
     the visible newest would expose the next-newest hidden version and the
     repair would not converge.
 
-    ``hash_prefilter=True`` is the reference's actual two-phase algorithm
-    (HashTable then sync only differing ranges, SyncTable.java:56): compare
-    per-bucket digests first and full-outer-join ONLY rows of differing
-    buckets. Worth it when diffs are sparse/localized (the steady-state
-    replication-repair case at 100 TB: most buckets match, the big join
-    shrinks to the diff neighborhoods); for dense diffs the direct join
-    does strictly less work, hence the default."""
-    if hash_prefilter:
-        hs = hash_table(source, num_buckets=num_buckets)
-        ht = hash_table(target, num_buckets=num_buckets)
-        changed = (
-            hs.withColumnRenamed("digest", "s_d")
-            .withColumnRenamed("cells", "s_c")
-            .join(
-                ht.withColumnRenamed("digest", "t_d").withColumnRenamed(
-                    "cells", "t_c"
-                ),
-                "bucket",
-                "full_outer",
-            )
-            .where(
-                F.col("s_d").isNull()
-                | F.col("t_d").isNull()
-                | (F.col("s_d") != F.col("t_d"))
-                | (F.col("s_c") != F.col("t_c"))
-            )
-            .select("bucket")
-        )
-        bucket = _hash_bucket(num_buckets)
-        source = source.withColumn("_bk", bucket).join(
-            F.broadcast(changed.withColumnRenamed("bucket", "_bk")),
-            "_bk",
-            "left_semi",
-        ).drop("_bk")
-        target = target.withColumn("_bk", bucket).join(
-            F.broadcast(changed.withColumnRenamed("bucket", "_bk")),
-            "_bk",
-            "left_semi",
-        ).drop("_bk")
+    The reference's HashTable digest prefilter (diff only the ranges whose
+    digests differ) is not applied: measured on dense and sparse diffs
+    (SYNC_PROBE_r14.json) it cost more than the direct join every time."""
     s = read_view(source, max_versions=1).select(
         "row", "family", "qualifier",
         F.col("ts").alias("s_ts"), F.col("value").alias("s_value"),

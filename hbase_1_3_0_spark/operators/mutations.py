@@ -4,6 +4,13 @@ Reference write path (SURVEY.md §3.3): client mutations flow through
 HRegion.batchMutate (HRegion.java:2925) with row locks + MVCC sequence
 numbers; read-modify-write ops (increment HRegion.java:7665, append :7383,
 checkAndMutate :3493) read the current row view under the lock and apply.
+Here too: every RMW op reads the table's read view through a ``view``
+callable that :class:`~hbase_1_3_0_spark.table.Table` supplies
+(``Table._rmw_view``), so family TTL, ``min_versions``,
+KEEP_DELETED_CELLS and the table clock judge the current value exactly as
+a Get would. Like the reference, which reads the row under its lock below
+the coprocessor scan hooks, it applies no ``pre_scan``/``post_scan``
+observers and no cell-security predicates.
 
 Spark model: a mutation batch is a DataFrame of typed mutation records
 (FIXTURES.md §F5); applying a batch = a deterministic transformation
@@ -31,10 +38,13 @@ for the session). Computed or larger mutation frames keep the general
 path: a broadcast semi join of the key set against the log, after which
 only the touched rows are clustered by row (one exchange) for the read
 view's window forms, so the 100 TB cell log is never shuffled to apply a
-batch.
+batch. Either way the pruning is :func:`read_view.prune_rows`, the one a
+keyed Table read uses.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,14 +59,23 @@ from hbase_1_3_0_spark.cells import (
     TYPE_PUT,
 )
 from hbase_1_3_0_spark.functions import codecs
+from hbase_1_3_0_spark.operators import security
 from hbase_1_3_0_spark.operators.read_view import (
-    cluster_rows,
     local_lookup,
-    pin_rows,
-    read_view,
+    prune_rows,
+    # not called (RMW ops read ``view``); perfbench/layers.py wraps it
+    read_view,  # noqa: F401
     small_key_limit,
     small_key_set,
 )
+
+#: pruned cells (clustered by row, or pinned to one partition) -> the
+#: visible cells an RMW op reads its current values from (Table._rmw_view)
+View = Callable[[DataFrame], DataFrame]
+
+#: optional per-cell tag columns (the reference's cell tags): a cell TTL,
+#: a visibility expression and an ACL
+TAG_COLUMNS = ("ttl_ms", security.VISIBILITY_COLUMN, security.ACL_COLUMN)
 
 OP_TO_TYPE = {
     "put": TYPE_PUT,
@@ -80,8 +99,15 @@ def _encode(num: Column, codec: str) -> Column:
 
 
 def put_cells(cells: DataFrame, new_cells: DataFrame) -> DataFrame:
-    """Append Put/tombstone cells to the log (Table.put, Table.java:227)."""
-    return cells.unionByName(new_cells.select(*CELL_COLUMNS))
+    """Append Put/tombstone cells to the log (Table.put, Table.java:227).
+    Cell tags (:data:`TAG_COLUMNS`) travel with their cells: a tag the new
+    cells carry is kept, and the log gains its column if it had none (null,
+    i.e. untagged, on the older cells); a tag column of the log is null on
+    new cells written without it."""
+    tags = [c for c in TAG_COLUMNS if c in new_cells.columns]
+    return cells.unionByName(
+        new_cells.select(*CELL_COLUMNS, *tags), allowMissingColumns=True
+    )
 
 
 def mutations_to_cells(mutations: DataFrame, *, now_ms: int) -> DataFrame:
@@ -202,27 +228,21 @@ def _attach(left: DataFrame, cur: DataFrame, on: list[str], pinned: bool) -> Dat
 def _current_values(
     cells: DataFrame,
     keys: DataFrame,
+    view: View,
     pinned: list[bytes] | None = None,
-    **rv_kwargs,
 ) -> DataFrame:
     """Latest visible value for each (row,family,qualifier) in ``keys``.
 
     The key set is tiny relative to the log: ``pinned`` (the small-key
     path) prunes the log to those rows in the scan, in one partition;
     otherwise a broadcast semi-join keeps only the touched rows, which are
-    then clustered by row once. Either way the read view runs on its
-    exchange-free window forms.
+    then clustered by row once. Either way ``view`` runs the read view on
+    its exchange-free window forms.
     """
-    if pinned is not None:
-        touched = pin_rows(cells, pinned)
-    else:
-        touched = cluster_rows(
-            cells.join(
-                F.broadcast(keys.select("row").distinct()), "row", "left_semi"
-            )
-        )
-    view = read_view(touched, max_versions=1, clustered=True, **rv_kwargs)
-    return view.select(
+    touched = prune_rows(
+        cells, pinned if pinned is not None else keys.select("row").distinct()
+    )
+    return view(touched).select(
         "row", "family", "qualifier", F.col("value").alias("_cur"), F.col("ts")
     )
 
@@ -231,10 +251,10 @@ def increment(
     cells: DataFrame,
     increments: DataFrame,
     *,
+    view: View,
     now_ms: int,
     codec: str = "be8",
     batch_seq: int = 0,
-    time_range: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Atomic counter adds (Table.increment, Table.java:369; server
     HRegion.increment:7665). Counters are 8-byte big-endian longs
@@ -247,10 +267,11 @@ def increment(
     a per-column MAP — ``addColumn`` on the same column REPLACES the amount
     (TestIncrementsFromClientSide.java:288 testIncrementOnSameColumn) —
     while rows here are distinct increment OPERATIONS that fold by Σ;
-    callers porting a reference Increment should pre-dedup its columns. ``time_range`` restricts the read-back of the
-    current value (Increment.setTimeRange, Increment.java:158): a current
-    version outside the range reads as absent, so the counter re-initializes
-    to the delta. Returns (new_cells, results) — results mirror
+    callers porting a reference Increment should pre-dedup its columns.
+    ``view`` reads the current values; an Increment.setTimeRange
+    (Increment.java:158) is its scan time range, so a current version
+    outside the range reads as absent and the counter re-initializes to
+    the delta. Returns (new_cells, results) — results mirror
     setReturnResults (Increment.java:169) with the post-increment value.
     """
     increments, pinned = small_key_frame(increments)
@@ -258,7 +279,7 @@ def increment(
     folded = increments.groupBy("row", "family", "qualifier").agg(
         F.sum("delta").alias("_delta")
     )
-    cur = _current_values(cells, folded, pinned, time_range=time_range)
+    cur = _current_values(cells, folded, view, pinned)
     new_value = (
         F.coalesce(_decode(F.col("_cur"), codec), F.lit(0)) + F.col("_delta")
     )
@@ -310,16 +331,17 @@ def append_value(
     cells: DataFrame,
     appends: DataFrame,
     *,
+    view: View,
     now_ms: int,
     batch_seq: int = 0,
-    time_range: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Atomic byte-concatenation (Table.append, Table.java:354; server
     HRegion.append:7383). ``appends``: row, family, qualifier, value,
     batch_seq — multiple appends to one key concatenate in batch_seq order
     (within-batch ordering determinism, SURVEY.md §7 watch-list #4).
-    ``time_range`` bounds the current-value read-back (Append inherits
-    Mutation's time range, as Increment.java:158 does for Increment)."""
+    ``view`` reads the current values; its scan time range bounds the
+    read-back (Append inherits Mutation's time range, as
+    Increment.java:158 does for Increment)."""
     appends, pinned = small_key_frame(appends)
     local = pinned is not None
     folded = appends.groupBy("row", "family", "qualifier").agg(
@@ -331,7 +353,7 @@ def append_value(
             lambda acc, x: F.concat(acc, x["value"]),
         ).alias("_suffix")
     )
-    cur = _current_values(cells, folded, pinned, time_range=time_range)
+    cur = _current_values(cells, folded, view, pinned)
     new_vals = (
         _attach(folded, cur, ["row", "family", "qualifier"], local)
         .select(
@@ -386,7 +408,10 @@ def _check_pred(op_col: Column, cur: Column, expected: Column) -> Column:
 
 
 def _judge_checks(
-    cells: DataFrame, checks: DataFrame, pinned: list[bytes] | None = None
+    cells: DataFrame,
+    checks: DataFrame,
+    view: View,
+    pinned: list[bytes] | None = None,
 ) -> DataFrame:
     """Shared CAS judging: attach the pre-batch current value of each
     record's checked column and evaluate its CompareOp predicate into a
@@ -399,7 +424,7 @@ def _judge_checks(
         F.col("check_family").alias("family"),
         F.col("check_qualifier").alias("qualifier"),
     )
-    cur = _current_values(cells, keys, pinned).select(
+    cur = _current_values(cells, keys, view, pinned).select(
         "row",
         F.col("family").alias("check_family"),
         F.col("qualifier").alias("check_qualifier"),
@@ -417,6 +442,7 @@ def check_and_mutate(
     cells: DataFrame,
     mutations: DataFrame,
     *,
+    view: View,
     now_ms: int,
 ) -> tuple[DataFrame, DataFrame]:
     """Single-row CAS, batch form (HRegion.checkAndMutate, HRegion.java:3493).
@@ -427,7 +453,7 @@ def check_and_mutate(
     mutations apply as cells. Returns (new_cells, per-mutation verdicts).
     """
     mutations, pinned = small_key_frame(mutations)
-    judged = _judge_checks(cells, mutations, pinned)
+    judged = _judge_checks(cells, mutations, view, pinned)
     if pinned is not None:
         judged = _delta_once(judged)
     passing = judged.where(F.col("_pass"))
@@ -448,6 +474,7 @@ def check_and_mutate_row(
     groups: DataFrame,
     mutations: DataFrame,
     *,
+    view: View,
     now_ms: int,
 ) -> tuple[DataFrame, DataFrame]:
     """CAS-guarded RowMutations: one predicate gates an atomic multi-op
@@ -472,7 +499,7 @@ def check_and_mutate_row(
 
     Returns (new_cells, verdicts) — verdicts: group_id, row, applied.
     """
-    judged = _judge_checks(cells, groups)
+    judged = _judge_checks(cells, groups, view)
     passing_ids = judged.where(F.col("_pass")).select("group_id")
     applied = mutations.join(F.broadcast(passing_ids), "group_id", "left_semi")
     new_cells = mutations_to_cells(
@@ -586,6 +613,7 @@ def apply_mutation_batch(
     cells: DataFrame,
     mutations: DataFrame,
     *,
+    view: View,
     now_ms: int,
     codec: str = "be8",
 ) -> DataFrame:
@@ -595,7 +623,8 @@ def apply_mutation_batch(
 
     Routing is decided from ONE tiny aggregation over the op column (not one
     ``isEmpty()`` action per kind): a single driver pass before the commit
-    job regardless of how many op kinds the batch mixes."""
+    job regardless of how many op kinds the batch mixes. Each RMW kind
+    reads ``view`` over the log as the batch's earlier kinds left it."""
     present = {
         r[0] for r in mutations.select("op").distinct().collect()
     }
@@ -610,6 +639,7 @@ def apply_mutation_batch(
             incs.select(
                 "row", "family", "qualifier", _decode(F.col("value"), codec).alias("delta")
             ),
+            view=view,
             now_ms=now_ms,
             codec=codec,
         )
@@ -618,6 +648,7 @@ def apply_mutation_batch(
         out, _ = append_value(
             out,
             apps.select("row", "family", "qualifier", "value", "batch_seq"),
+            view=view,
             now_ms=now_ms,
         )
     if any(op.startswith("check_and_") for op in present):
@@ -630,6 +661,7 @@ def apply_mutation_batch(
                 "op",
                 F.regexp_replace(F.col("op"), "^check_and_delete$", "delete_column"),
             ),
+            view=view,
             now_ms=now_ms,
         )
     return out

@@ -136,6 +136,19 @@ def cluster_rows(cells: DataFrame) -> DataFrame:
     return cells.repartition("row")
 
 
+def prune_rows(
+    cells: DataFrame, keys: list[bytes] | DataFrame, cluster: bool = True
+) -> DataFrame:
+    """Prune ``cells`` to a key set, as every keyed read does: a small key
+    list (:func:`small_key_set`) is pinned (:func:`pin_rows`); a key frame
+    (one ``row`` column) is broadcast-semi-joined, then clustered by row
+    (:func:`cluster_rows`) unless ``cluster`` is false."""
+    if isinstance(keys, DataFrame):
+        pruned = cells.join(F.broadcast(keys), "row", "left_semi")
+        return cluster_rows(pruned) if cluster else pruned
+    return pin_rows(cells, keys)
+
+
 def local_lookup(
     left: DataFrame, right: DataFrame, on: list[str], pinned: bool = False
 ) -> DataFrame:

@@ -585,19 +585,8 @@ def _dedup_commit_batch(
     id_col: str = "doc_id",
 ) -> None:
     """One idempotent micro-batch commit for :func:`dedup_ingest_stream`
-    (module-level so crash/replay tests can drive it directly).
-
-    Only a genuinely EMPTY store reads as empty — a missing directory,
-    or a directory holding no committed parquet files yet (the state a
-    crash during the very first store write leaves behind:
-    FileOutputCommitter creates the base dir before any file commits).
-    Any other read error (corrupt files, permissions) propagates and
-    fails the batch rather than silently admitting duplicates against
-    an assumed-empty store. A store written by a pre-batch_id layout
-    (flat files, no partition column) fails loudly: writing the new
-    batch_id=N partitions next to flat files would produce a mixed
-    layout Spark cannot read back — rewrite the old digests under a
-    batch_id=-1 partition before upgrading in place."""
+    (module-level so crash/replay tests can drive it directly). The store
+    states it accepts and rejects are :func:`_load_ingest_store`'s."""
     from hbase_1_3_0_spark.pipeline.dedup import incremental_dedup
 
     store = _load_ingest_store(spark, store_dir, batch_id)

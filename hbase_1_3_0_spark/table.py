@@ -10,14 +10,15 @@ Execution order of a scan (mirrors the reference read path, SURVEY.md §3.1):
 1. row-range predicate on the raw cell log — applied FIRST so Catalyst pushes
    it into the parquet scan (region pruning + HFile key-range pruning analog);
    masking is per-row, so pre-filtering by row is semantics-preserving.
-   A small driver-side key set — a Get's row, a literal ``multi_get`` /
-   ``exists`` list that passes ``read_view.small_key_set`` — is the
+   Keyed reads (``multi_get`` / ``exists``) enter here too, with their key
+   set (``read_view.prune_rows``). A small driver-side key set — a Get's
+   row, a literal list that passes ``read_view.small_key_set`` — is the
    small-key path: ``row IN (...)`` pruned in the scan, the cells pinned to
    one partition, and every later step plans without an exchange (the one
-   region RPC of a reference Get). Range scans, and larger or computed key
-   sets (a broadcast semi join first), take the general path: the cells
-   are hash-partitioned on row ONCE, and every later row-keyed step runs
-   inside those partitions without another exchange. A clean-log scan
+   region RPC of a reference Get). Range scans, and larger literal lists or
+   key DataFrames (a broadcast semi join first), take the general path: the
+   cells are hash-partitioned on row ONCE, and every later row-keyed step
+   runs inside those partitions without another exchange. A clean-log scan
    (TableMeta.clean_log) needs no row-keyed read-view step and stays
    unclustered and shuffle-free.
 2. read view (versions / tombstones / TTL / timerange) per family group.
@@ -53,7 +54,7 @@ from hbase_1_3_0_spark.operators.coprocessor import Observers
 from hbase_1_3_0_spark.operators.read_view import (
     cluster_rows,
     local_semi,
-    pin_rows,
+    prune_rows,
     read_view,
     small_key_set,
 )
@@ -168,12 +169,16 @@ class Table:
             s = s.with_(**kw)
         return self._scan(s)
 
-    def _scan(self, s: Scan, keys: list[bytes] | None = None) -> DataFrame:
-        """The one read path. ``keys``: a small driver-side key set
-        (read_view.small_key_set) — the scan is pruned to it and pinned to
-        one partition, so the read view, the filters and the row limit plan
-        without exchanges. A single-row range (a Get) takes that path by
-        itself. Otherwise the scanned cells are clustered by row once
+    def _scan(
+        self, s: Scan, keys: list[bytes] | DataFrame | None = None
+    ) -> DataFrame:
+        """The one read path. ``keys`` prunes the scan to a key set
+        (read_view.prune_rows): a small driver-side list
+        (read_view.small_key_set) is pinned to one partition, so the read
+        view, the filters and the row limit plan without exchanges; a key
+        DataFrame (one ``row`` column) is broadcast-semi-joined. A
+        single-row range (a Get) takes the small-key path by itself.
+        Otherwise the scanned cells are clustered by row once
         (read_view.cluster_rows) unless the read view is the clean-log one."""
         if s.row_prefix is not None:
             # setRowPrefixFilter (Scan.java:397): pure start/stop sugar
@@ -213,7 +218,7 @@ class Table:
             and s.stop_inclusive
         ):
             keys = small_key_set(self.cells.sparkSession, [s.start_row])
-        pinned = keys is not None
+        pinned = isinstance(keys, list)
         # preScannerOpen/preGetOp hooks rewrite the raw cell stream; filters
         # they add still push down through Catalyst
         df = Observers.apply(self.observers.pre_scan, self.cells)
@@ -244,8 +249,8 @@ class Table:
         # the row limit) then runs inside the partitions. A clean-log scan
         # has no row-keyed step in its read view and stays unclustered.
         clustered = pinned or s.raw or not self.meta.clean_log
-        if pinned:
-            df = pin_rows(df, keys)
+        if keys is not None:
+            df = prune_rows(df, keys, cluster=clustered)
         elif clustered:
             df = cluster_rows(df)
 
@@ -515,6 +520,19 @@ class Table:
             out = out.unionByName(o)
         return out
 
+    def _rmw_view(self, time_range: tuple[int, int] | None = None) -> mut.View:
+        """The read view a read-modify-write op judges its current values
+        by: cells the op has pruned to its touched rows
+        (clustered or pinned) -> visible cells under
+        ``Scan(time_range=time_range)``, with the family parameters and the
+        table's clock. No observers and no cell-security predicates, as in
+        the reference's row read under the lock. Always the full view, even
+        on a clean log: a mixed batch appends its puts before its RMW ops
+        read, and the clean-log view would then see duplicate versions."""
+        full = self._with(self.cells)
+        s = Scan(time_range=time_range)
+        return lambda cells: full._read_view(cells, s, clustered=True)
+
     def _read_view_clean(self, df: DataFrame, s: Scan) -> DataFrame:
         """Fast path for a clean log (single-version, tombstone-free —
         TableMeta.clean_log): no version-limit aggregation, no tombstone
@@ -577,26 +595,23 @@ class Table:
 
     def multi_get(self, rows: list[bytes] | DataFrame, **kw) -> DataFrame:
         """Batch point reads (Table.get(List<Get>), Table.java:183) — one
-        job, no per-key RPCs. A literal key list that passes
-        read_view.small_key_set takes the small-key path (pruned in the
-        scan, one partition, no exchanges); a DataFrame or larger key set
-        is a broadcast semi join of the keys against the cell log."""
-        spark = self.cells.sparkSession
+        job, no per-key RPCs, through the one read path (observers
+        included). A literal key list that passes read_view.small_key_set
+        takes the small-key path (pruned in the scan, one partition, no
+        exchanges); a DataFrame (its first column holds the keys) or a
+        larger key set is a broadcast semi join of the keys against the
+        cell log."""
         if isinstance(rows, DataFrame):
             keys = rows.select(F.col(rows.columns[0]).alias("row"))
         else:
-            small = small_key_set(spark, rows)
-            if small is not None:
-                return Table(self.meta, self.cells, self._now_ms)._scan(
-                    Scan(**kw), small
+            spark = self.cells.sparkSession
+            keys = small_key_set(spark, rows)
+            if keys is None:
+                keys = spark.createDataFrame(
+                    [(bytes(r),) for r in rows],
+                    T.StructType([T.StructField("row", T.BinaryType())]),
                 )
-            keys = spark.createDataFrame(
-                [(bytes(r),) for r in rows],
-                T.StructType([T.StructField("row", T.BinaryType())]),
-            )
-        pruned = self.cells.join(F.broadcast(keys), "row", "left_semi")
-        view = Table(self.meta, pruned, self._now_ms)
-        return view.scan(Scan(**kw))
+        return self._scan(Scan(**kw), keys)
 
     def get_row_or_before(self, row: bytes, family: str) -> DataFrame:
         """Closest-row-at-or-before point lookup (Table.getRowOrBefore /
@@ -615,7 +630,7 @@ class Table:
             F.broadcast(winner), F.col("row") == F.col("_rob_row"), "inner"
         ).drop("_rob_row")
 
-    def exists(self, rows: list[bytes]) -> DataFrame:
+    def exists(self, rows: list[bytes] | DataFrame) -> DataFrame:
         """Existence probe (Table.exists / setCheckExistenceOnly, Get.java:139)."""
         return (
             self.multi_get(rows)
@@ -678,9 +693,9 @@ class Table:
         new_cells, results = mut.increment(
             self.cells,
             increments,
+            view=self._rmw_view(time_range),
             now_ms=self._now(),
             codec=codec,
-            time_range=time_range,
         )
         # postIncrement analog (RegionObserver.java:772): each hook may
         # REPLACE the returned Result — chained, committed cells untouched
@@ -691,7 +706,10 @@ class Table:
         self, appends: DataFrame, time_range: tuple[int, int] | None = None
     ):
         new_cells, results = mut.append_value(
-            self.cells, appends, now_ms=self._now(), time_range=time_range
+            self.cells,
+            appends,
+            view=self._rmw_view(time_range),
+            now_ms=self._now(),
         )
         # postAppend analog (RegionObserver.java:887) — chained Result
         # rewrite, same contract as post_increment
@@ -700,7 +718,7 @@ class Table:
 
     def check_and_mutate(self, mutations: DataFrame):
         new_cells, verdicts = mut.check_and_mutate(
-            self.cells, mutations, now_ms=self._now()
+            self.cells, mutations, view=self._rmw_view(), now_ms=self._now()
         )
         return self._with(new_cells), verdicts
 
@@ -709,7 +727,11 @@ class Table:
         Table.java:596): each group's single predicate gates its whole
         atomic multi-op payload."""
         new_cells, verdicts = mut.check_and_mutate_row(
-            self.cells, groups, mutations, now_ms=self._now()
+            self.cells,
+            groups,
+            mutations,
+            view=self._rmw_view(),
+            now_ms=self._now(),
         )
         return self._with(new_cells), verdicts
 
@@ -733,7 +755,11 @@ class Table:
     def batch(self, mutations: DataFrame, codec: str = "be8") -> "Table":
         out = self._with(
             mut.apply_mutation_batch(
-                self.cells, mutations, now_ms=self._now(), codec=codec
+                self.cells,
+                mutations,
+                view=self._rmw_view(),
+                now_ms=self._now(),
+                codec=codec,
             )
         )
         # postBatchMutate analog (RegionObserver.java:637): hooks get the

@@ -28,7 +28,17 @@ def _table(spark, rows):
 def test_pre_scan_observer_filters_before_read_view(spark):
     t = _table(spark, [_put(b"r1", b"a", b"x"), _put(b"r2", b"a", b"y")])
     t2 = t.with_observers(pre_scan=lambda df: df.where(F.col("row") != b"r2"))
-    assert {r["row"] for r in t2.scan().collect()} == {b"r1"}
+    keys = [b"r1", b"r2"]
+    key_frame = spark.createDataFrame([(k,) for k in keys], "row binary")
+    # keyed reads take the same read path: the hidden row stays hidden
+    for read in (
+        t2.scan(),
+        t2.multi_get(keys),
+        t2.exists(keys),
+        t2.multi_get(key_frame),
+        t2.exists(key_frame),
+    ):
+        assert {r["row"] for r in read.collect()} == {b"r1"}
     # the original table is untouched (observers are per-handle)
     assert {r["row"] for r in t.scan().collect()} == {b"r1", b"r2"}
 

@@ -106,11 +106,6 @@ def test_hash_table_and_sync_table(spark, orders_cells):
     assert (b"zzz-extra", b"q", "delete_column") in got
     assert len(got) == 3
 
-    # two-phase (HashTable prefilter) emits the identical mutation stream
-    muts2 = jobs.sync_table(cells, target, hash_prefilter=True, num_buckets=64)
-    got2 = {(bytes(r.row), bytes(r.qualifier), r.op) for r in muts2.collect()}
-    assert got2 == got
-
 
 def test_grouping_table_map(orders_cells):
     cells, df = orders_cells

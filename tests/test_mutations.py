@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hbase_1_3_0_spark.catalog import FamilyMeta, TableMeta
-from hbase_1_3_0_spark.cells import CELL_SCHEMA, TYPE_PUT
+from hbase_1_3_0_spark.cells import CELL_SCHEMA, TYPE_DELETE_COLUMN, TYPE_PUT
 from hbase_1_3_0_spark.functions import codecs
 from hbase_1_3_0_spark.operators.mutations import local_relation
 from hbase_1_3_0_spark.table import Scan, Table
@@ -712,3 +712,149 @@ def test_check_and_delete_with_compare_op(spark):
         want = None if expect else pre[i]
         have = final.get((b"r%02d" % i, "d", b"q"))
         assert (have[0] if have else None) == want, (i, op, probe)
+
+
+# ---------------------------------------------------------------------------
+# RMW ops read the row's read view (HRegion increment :7665, append :7383,
+# checkAndMutate :3493): the family parameters and the table clock decide
+# what they read, exactly as for a Get.
+# ---------------------------------------------------------------------------
+
+APP_SCHEMA = (
+    "row binary, family string, qualifier binary, value binary, batch_seq long"
+)
+
+
+def _be8(n: int) -> bytes:
+    return n.to_bytes(8, "big")
+
+
+def test_rmw_reads_expired_cells_as_absent(spark):
+    """A 10 s family TTL read 999 s after the write: a Get sees nothing, so
+    increment starts from its delta, append from empty, and an EQUAL CAS
+    against the expired value fails."""
+    meta = TableMeta(name="t", families=(FamilyMeta(name="d", ttl_seconds=10),))
+    cells = local_relation(spark, [
+        (b"r1", "d", b"cnt", 1_000, TYPE_PUT, _be8(10), 0),
+        (b"r1", "d", b"log", 1_000, TYPE_PUT, b"old", 0),
+    ], CELL_SCHEMA)
+    t = Table(meta, cells, now_ms=1_000 + 999_000)
+    assert t.get(b"r1").count() == 0
+    _, res = t.increment(
+        spark.createDataFrame([(b"r1", "d", b"cnt", 5)], INC_SCHEMA)
+    )
+    assert res.first().new_value == 5
+    _, res = t.append(
+        spark.createDataFrame([(b"r1", "d", b"log", b"+x", 0)], APP_SCHEMA)
+    )
+    assert bytes(res.first().new_value) == b"+x"
+    _, verdicts = t.check_and_mutate(spark.createDataFrame(
+        [("put", b"r1", "d", b"out", None, b"v", "d", b"cnt", "EQUAL",
+          _be8(10), 0)],
+        CAS_SCHEMA,
+    ))
+    assert verdicts.first().applied is False
+
+
+def test_increment_time_range_sees_through_kept_deletes(spark):
+    """KEEP_DELETED_CELLS=TRUE: a delete newer than the time range does not
+    mask the older put, for an increment's read-back as for a scan."""
+    meta = TableMeta(
+        name="t", families=(FamilyMeta(name="d", keep_deleted_cells="TRUE"),)
+    )
+    cells = local_relation(spark, [
+        (b"r1", "d", b"cnt", 100, TYPE_PUT, _be8(10), 0),
+        (b"r1", "d", b"cnt", 200, TYPE_DELETE_COLUMN, None, 0),
+    ], CELL_SCHEMA)
+    t = Table(meta, cells, now_ms=1_000)
+    seen = t.scan(time_range=(0, 150)).collect()
+    assert [bytes(r.value) for r in seen] == [_be8(10)]
+    _, res = t.increment(
+        spark.createDataFrame([(b"r1", "d", b"cnt", 5)], INC_SCHEMA),
+        time_range=(0, 150),
+    )
+    assert res.first().new_value == 15
+
+
+def test_rmw_judges_cell_ttl_tags_at_the_table_clock(spark):
+    """A per-cell ``ttl_ms`` tag expires against the table's pinned
+    ``now_ms`` for an increment as for a Get, not against the wall clock;
+    the counter cell the increment writes carries no tag."""
+    cells = local_relation(spark, [
+        (b"r1", "d", b"cnt", 1_000, TYPE_PUT, _be8(10), 0),
+    ], CELL_SCHEMA).withColumn("ttl_ms", F.lit(60_000).cast("long"))
+    t = Table(TableMeta(name="t"), cells, now_ms=2_000)
+    assert t.get(b"r1").count() == 1
+    t2, res = t.increment(
+        spark.createDataFrame([(b"r1", "d", b"cnt", 5)], INC_SCHEMA)
+    )
+    assert res.first().new_value == 15
+    assert cellmap(t2.get(b"r1"))[(b"r1", "d", b"cnt")] == (_be8(15), 2_000)
+
+
+def test_batch_rmw_reads_own_puts_through_the_table_view(spark):
+    """A mixed batch judges its increments on the table's read view over
+    the log its own earlier puts extend: the family TTL hides r1's
+    expired counter, and on a clean-log table r3's two puts still read as
+    one version (the clean-log view would return both)."""
+    now = 1_000_000
+    meta = TableMeta(
+        name="t",
+        families=(FamilyMeta(name="d", ttl_seconds=10),),
+        clean_log=True,
+    )
+    cells = local_relation(spark, [
+        (b"r1", "d", b"cnt", 1_000, TYPE_PUT, _be8(7), 0),
+        (b"r3", "d", b"cnt", now - 1_000, TYPE_PUT, _be8(1), 0),
+    ], CELL_SCHEMA)
+    muts = spark.createDataFrame(
+        [
+            ("put", b"r3", "d", b"cnt", now - 500, _be8(10), 1),
+            ("increment", b"r1", "d", b"cnt", None, _be8(5), 2),
+            ("increment", b"r3", "d", b"cnt", None, _be8(1), 3),
+        ],
+        MUT_SCHEMA,
+    )
+    got = cellmap(Table(meta, cells, now_ms=now).batch(muts).scan())
+    assert got == {
+        (b"r1", "d", b"cnt"): (_be8(5), now),
+        (b"r3", "d", b"cnt"): (_be8(11), now),
+    }
+
+
+def _rows(df) -> list[bytes]:
+    return sorted(bytes(r.row) for r in df.collect())
+
+
+def test_put_keeps_cell_security_tags(spark):
+    """Table.put keeps the tags its cells carry, onto a labeled log and
+    onto a plain one: a ``pii`` cell stays hidden from a scan without
+    authorizations, an ACL cell from other users, and a ``ttl_ms`` tag
+    expires at the table clock. Untagged cells put onto a tagged log read
+    as untagged."""
+    base = local_relation(spark, [
+        (b"r1", "d", b"q", 100, TYPE_PUT, b"open", 0),
+    ], CELL_SCHEMA)
+    labeled = base.withColumn("vis", F.lit(None).cast("string"))
+    for log in (labeled, base):
+        t = Table(TableMeta(name="t"), log, now_ms=1_000)
+        t = t.put(local_relation(spark, [
+            (b"r2", "d", b"q", 100, TYPE_PUT, b"secret", 0),
+        ], CELL_SCHEMA).withColumn("vis", F.lit("pii")))
+        t = t.put(local_relation(spark, [
+            (b"r3", "d", b"q", 100, TYPE_PUT, b"plain", 0),
+        ], CELL_SCHEMA))
+        assert _rows(t.scan()) == [b"r1", b"r3"]
+        assert _rows(t.scan(Scan(authorizations=("pii",)))) == [
+            b"r1", b"r2", b"r3"
+        ]
+        t = t.put(local_relation(spark, [
+            (b"r4", "d", b"q", 100, TYPE_PUT, b"alice", 0),
+        ], CELL_SCHEMA).withColumn("acl", F.array(F.lit("alice"))))
+        assert _rows(t.scan(Scan(user="bob"))) == [b"r1", b"r3"]
+        assert _rows(t.scan(Scan(user="alice"))) == [b"r1", b"r3", b"r4"]
+        t = t.put(local_relation(spark, [
+            (b"r5", "d", b"q", 900, TYPE_PUT, b"brief", 0),
+        ], CELL_SCHEMA).withColumn("ttl_ms", F.lit(1).cast("long")))
+        assert t.get(b"r5").count() == 0
+        assert t.get(b"r1").count() == 1

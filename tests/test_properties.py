@@ -149,14 +149,15 @@ def test_increment_total_equals_sum_of_deltas(spark, deltas):
     """Σ per-key counter results == Σ deltas (the streaming-counter law)."""
     from pyspark.sql import functions as F
 
-    from hbase_1_3_0_spark.operators.mutations import increment
+    from hbase_1_3_0_spark.catalog import TableMeta
+    from hbase_1_3_0_spark.table import Table
 
     empty = spark.createDataFrame([], CELL_SCHEMA)
     incs = spark.createDataFrame(
         [(r, "d", b"c", d) for r, d in deltas],
         "row binary, family string, qualifier binary, delta long",
     )
-    _, results = increment(empty, incs, now_ms=1000)
+    _, results = Table(TableMeta(name="t"), empty, now_ms=1000).increment(incs)
     total = results.agg(F.sum("new_value").alias("t")).collect()[0]["t"]
     assert total == sum(d for _, d in deltas)
 
@@ -702,7 +703,8 @@ def test_check_and_mutate_matches_model(spark, current, checks):
     matches absent OR zero-length current; comparisons are unsigned-
     lexicographic on the current value; absent current fails every
     comparison."""
-    from hbase_1_3_0_spark.operators.mutations import check_and_mutate
+    from hbase_1_3_0_spark.catalog import TableMeta
+    from hbase_1_3_0_spark.table import Table
 
     cells_rows = [
         (r, "d", b"q", 1, TYPE_PUT, v, 0) for r, v in current
@@ -717,7 +719,7 @@ def test_check_and_mutate_matches_model(spark, current, checks):
         "value binary, check_family string, check_qualifier binary, "
         "check_op string, check_value binary, batch_seq long",
     )
-    _, verdicts = check_and_mutate(cells, muts, now_ms=5)
+    _, verdicts = Table(TableMeta(name="t"), cells, now_ms=5).check_and_mutate(muts)
     got = {bytes(r.row): r.applied for r in verdicts.collect()}
 
     cur_map = dict(current)

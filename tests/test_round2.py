@@ -314,9 +314,10 @@ def test_increment_time_range_reads_old_version(spark):
     incs = spark.createDataFrame(
         [(b"r1", "d", b"c", 5)], "row binary, family string, qualifier binary, delta long"
     )
-    _, res = mut.increment(cells, incs, now_ms=300, time_range=(0, 150))
+    t = Table(TableMeta(name="t"), cells, now_ms=300)
+    _, res = t.increment(incs, time_range=(0, 150))
     assert res.first().new_value == 12  # 7 + 5, not 70 + 5
-    _, res2 = mut.increment(cells, incs, now_ms=300)
+    _, res2 = t.increment(incs)
     assert res2.first().new_value == 75
 
 
@@ -329,7 +330,9 @@ def test_append_time_range(spark):
         [(b"r1", "d", b"q", b"+x", 0)],
         "row binary, family string, qualifier binary, value binary, batch_seq long",
     )
-    _, res = mut.append_value(cells, apps, now_ms=300, time_range=(0, 150))
+    _, res = Table(TableMeta(name="t"), cells, now_ms=300).append(
+        apps, time_range=(0, 150)
+    )
     assert bytes(res.first().new_value) == b"old+x"
 
 
@@ -344,7 +347,9 @@ def test_check_and_put_zero_length_matches_null_expected(spark):
         "value binary, check_family string, check_qualifier binary, "
         "check_op string, check_value binary, batch_seq long",
     )
-    _, verdicts = mut.check_and_mutate(cells, muts, now_ms=200)
+    _, verdicts = Table(TableMeta(name="t"), cells, now_ms=200).check_and_mutate(
+        muts
+    )
     assert verdicts.first().applied is True
 
 

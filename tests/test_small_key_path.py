@@ -18,7 +18,7 @@ from __future__ import annotations
 from contextlib import contextmanager
 from datetime import datetime
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tests._prop_budget import ex
@@ -137,6 +137,31 @@ def _is_small_key_path(df) -> bool:
     return "Repartition 1, false" in df._jdf.queryExecution().analyzed().toString()
 
 
+def _read(t: Table, row, fam, qual, tr=None) -> bytes | None:
+    """The value a Get returns for one column: what an RMW op must read."""
+    got = t.get(row, columns=[(fam, qual)], time_range=tr).collect()
+    return bytes(got[0].value) if got else None
+
+
+def _passes(op: str, expected, cur) -> bool:
+    """checkAndMutate's predicate: ``expected <op> cur``; a null expected
+    value matches an absent or zero-length one."""
+    if expected is None:
+        return cur is None or cur == b""
+    if cur is None:
+        return False
+    return {
+        "EQUAL": expected == cur,
+        "NOT_EQUAL": expected != cur,
+        "LESS": expected < cur,
+        "GREATER": expected > cur,
+    }[op]
+
+
+def _counter(value) -> int:
+    return int.from_bytes(value, "big") if value is not None else 0
+
+
 def _both(spark, build):
     """``build()`` on each path -> (small result, general result), checking
     that the two really took different paths and that the small-key one
@@ -185,6 +210,26 @@ def _both_rmw(spark, build):
     probe=st.sampled_from([None, b"v1000.0", b"v5000.1", b"v9"]),
     delta=st.integers(min_value=-5, max_value=5),
 )
+# always run: r1's cells expired under each family's TTL (a CAS probe that
+# matches the expired value must fail, the counter starts from the delta,
+# the append from empty), and r2's live counter in "b" is read through a
+# delete newer than the time range under KEEP_DELETED_CELLS=TRUE
+@example(
+    cells=[
+        (b"r1", "a", b"q", 1, TYPE_PUT, 0),
+        (b"r1", "a", b"n", 1, TYPE_PUT, 0),
+        (b"r1", "b", b"q", 1, TYPE_PUT, 0),
+        (b"r2", "b", b"n", 3, TYPE_PUT, 0),
+        (b"r2", "b", b"n", 6, TYPE_DELETE_COLUMN, 0),
+    ],
+    fam_a=FamilyMeta(name="a", ttl_seconds=4),
+    fam_b=FamilyMeta(name="b", ttl_seconds=8, keep_deleted_cells="TRUE"),
+    read_kw={"time_range": (0, 5000)},
+    row=b"r1",
+    check_op="EQUAL",
+    probe=b"v1000.0",
+    delta=1,
+)
 def test_small_key_path_matches_general_path(
     spark, cells, fam_a, fam_b, read_kw, row, check_op, probe, delta
 ):
@@ -209,6 +254,11 @@ def test_small_key_path_matches_general_path(
     )
     got, want = _both_rmw(spark, lambda: t.check_and_mutate(cas))
     assert got == want
+    # each RMW op reads what a Get of its column reads
+    assert got[0] == {
+        (r, "b", b"q", "put", _passes(check_op, probe, _read(t, r, "a", b"q")))
+        for r in (row, other)
+    }
 
     incs = spark.createDataFrame(
         [(row, "a", b"n", delta), (row, "a", b"n", 1), (other, "b", b"n", delta)],
@@ -217,6 +267,10 @@ def test_small_key_path_matches_general_path(
     tr = read_kw.get("time_range")
     got, want = _both_rmw(spark, lambda: t.increment(incs, time_range=tr))
     assert got == want
+    assert got[0] == {
+        (row, "a", b"n", _counter(_read(t, row, "a", b"n", tr)) + delta + 1),
+        (other, "b", b"n", _counter(_read(t, other, "b", b"n", tr)) + delta),
+    }
 
     apps = spark.createDataFrame(
         [(row, "b", b"q", b"+x", 2), (row, "b", b"q", b"+y", 1),
@@ -225,6 +279,10 @@ def test_small_key_path_matches_general_path(
     )
     got, want = _both_rmw(spark, lambda: t.append(apps))
     assert got == want
+    # (not the NULL-qualifier append: both paths read that column as
+    # absent, a known divergence, ROADMAP item 3)
+    appended = {(r, f, q): v for r, f, q, v in got[0]}
+    assert appended[(row, "b", b"q")] == (_read(t, row, "b", b"q") or b"") + b"+y+x"
 
 
 def test_small_key_path_matches_general_path_on_parquet(spark, tmp_path):
