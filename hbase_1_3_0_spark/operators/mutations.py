@@ -40,6 +40,29 @@ only the touched rows are clustered by row (one exchange) for the read
 view's window forms, so the 100 TB cell log is never shuffled to apply a
 batch. Either way the pruning is :func:`read_view.prune_rows`, the one a
 keyed Table read uses.
+
+Engagement without a job: deciding the path needs the frame's rows (its
+row keys and their count). For PySpark's own ``createDataFrame(list)``
+lineage the driver already holds them, so :func:`small_key_frame` reads
+them there, with no Spark job, as the reference reads an Increment's
+request without any distributed step. It does so only where it can prove
+the lineage: a bare LogicalRDD over exactly one PythonRDD over a
+ParallelCollectionRDD, flat-typed columns, no broadcast variable, and a
+Python function that is PySpark's identity re-serialisation (compared by
+code object with the installed ``RDD.map`` and ``RDD._reserialize``). A
+``createDataFrame(sc.parallelize(rows).map(f))`` frame has the same JVM
+chain; without the proof its rows would read as they were before ``f``.
+Every other driver frame (a projection or filter over the list, a plain
+or mapped RDD, a timestamp or nested column, a pandas/Arrow local
+relation, Spark Connect, any exception on the way) reads its rows with
+``take(limit + 1)``, as before.
+
+Plan building: the CAS predicate (:data:`_CHECK_PASSES`) and the
+mutation-to-cell projection are each one parsed SQL expression
+(``selectExpr``/``F.expr``), as is the read view's ``max_by`` version
+limit, not a composition of ``F.*`` calls, each of which is a py4j round
+trip to the driver JVM — on a point op the round trips, not Catalyst,
+were most of the build.
 """
 
 from __future__ import annotations
@@ -112,47 +135,138 @@ def put_cells(cells: DataFrame, new_cells: DataFrame) -> DataFrame:
 
 def mutations_to_cells(mutations: DataFrame, *, now_ms: int) -> DataFrame:
     """Typed mutation records (op/row/family/qualifier/ts/value/batch_seq) ->
-    cells. Timestamp defaults to server now (Put.java:52 semantics)."""
-    op_type = F.create_map(
-        *[x for k, v in OP_TO_TYPE.items() for x in (F.lit(k), F.lit(v))]
-    )[F.col("op")]
-    return mutations.select(
-        F.col("row"),
-        F.col("family"),
-        F.col("qualifier"),
-        F.coalesce(F.col("ts"), F.lit(now_ms)).cast(T.LongType()).alias("ts"),
-        op_type.cast(T.IntegerType()).alias("type"),
-        F.col("value"),
-        F.coalesce(F.col("batch_seq"), F.lit(0)).cast(T.LongType()).alias("seq"),
-    ).select(*CELL_COLUMNS)
+    cells. Timestamp defaults to server now (Put.java:52 semantics); an op
+    outside :data:`OP_TO_TYPE` gets a null type. One parsed projection: a
+    py4j round trip, not one per column operator."""
+    op_type = ", ".join(f"'{k}', {v}" for k, v in OP_TO_TYPE.items())
+    return mutations.selectExpr(
+        "`row`",
+        "family",
+        "qualifier",
+        f"CAST(coalesce(ts, {int(now_ms)}) AS BIGINT) AS ts",
+        f"CAST(map({op_type})[op] AS INT) AS type",
+        "value",
+        "CAST(coalesce(batch_seq, 0) AS BIGINT) AS seq",
+    )
 
 
 #: logical operators a driver-data mutation frame may carry above its
 #: leaf relation and still count as driver data
 _NARROW_NODES = frozenset({"Project", "Filter"})
 
+#: column types a collect() + Arrow rebuild returns unchanged (a timestamp,
+#: for one, comes back as a naive local-time datetime), and the only ones
+#: whose rows are read from the driver without a job (:func:`_driver_rows`)
+_FLAT_TYPES = (
+    T.BinaryType, T.StringType, T.LongType, T.IntegerType, T.BooleanType
+)
 
-def _parallelized(rdd) -> bool:
-    """True for an RDD that is a chain of one-to-one maps over a
-    ParallelCollectionRDD — the shape ``createDataFrame(list)`` builds."""
-    while rdd.getClass().getSimpleName() != "ParallelCollectionRDD":
-        deps = rdd.dependencies()
+
+def _driver_source(plan) -> tuple[bool, tuple | None]:
+    """One walk of a mutation frame's optimized plan: ``(driver data,
+    source)``. Driver data is a local relation or a one-to-one RDD chain
+    down to a ParallelCollectionRDD, under projections and filters only.
+    ``source`` is the ``(PythonRDD, ParallelCollectionRDD)`` pair when the
+    plan is a bare LogicalRDD whose chain holds exactly one PythonRDD,
+    directly above the ParallelCollectionRDD — the JVM chain
+    ``createDataFrame(list)`` builds (the other links are the JVM's own
+    pickle-to-row conversions); otherwise None."""
+    bare = True
+    while (name := plan.getClass().getSimpleName()) in _NARROW_NODES:
+        plan, bare = plan.child(), False
+    if name == "LocalRelation":
+        return True, None
+    if name != "LogicalRDD":
+        return False, None
+    chain = [plan.rdd()]
+    kinds = [chain[0].getClass().getSimpleName()]
+    while kinds[-1] != "ParallelCollectionRDD":
+        deps = chain[-1].dependencies()
         if deps.size() != 1:
-            return False
+            return False, None
         dep = deps.head()
         if dep.getClass().getSimpleName() != "OneToOneDependency":
-            return False
-        rdd = dep.rdd()
-    return True
+            return False, None
+        chain.append(dep.rdd())
+        kinds.append(chain[-1].getClass().getSimpleName())
+    if bare and kinds.count("PythonRDD") == 1 and kinds[-2:-1] == ["PythonRDD"]:
+        return True, (chain[-2], chain[-1])
+    return True, None
 
 
-def _driver_data(plan) -> bool:
-    name = plan.getClass().getSimpleName()
-    if name in _NARROW_NODES:
-        return _driver_data(plan.child())
-    if name == "LocalRelation":
-        return True
-    return name == "LogicalRDD" and _parallelized(plan.rdd())
+def _private(obj, name: str):
+    """A private field of a JVM object, read by reflection."""
+    field = obj.getClass().getDeclaredField(name)
+    field.setAccessible(True)
+    return field.get(obj)
+
+
+def _nested_code(fn, name: str):
+    """The code object of the function ``name`` defined inside ``fn``."""
+    return next(
+        c for c in fn.__code__.co_consts if getattr(c, "co_name", None) == name
+    )
+
+
+def _batch_loader(python_rdd) -> Callable[[bytes], object] | None:
+    """The loader of the pickled row batches under ``python_rdd`` when its
+    function is PySpark's identity re-serialisation
+    (``RDD._reserialize``): ``RDD.map``'s inner ``func``, whose one closure
+    cell is ``_reserialize``'s ``lambda x: x``, reading plain pickle
+    batches and using no broadcast variable; else None. Without this
+    proof a ``createDataFrame(sc.parallelize(rows).map(f))`` frame, whose
+    JVM chain is the same, would read as its rows before ``f``."""
+    from pyspark.core.rdd import RDD
+    from pyspark.serializers import (
+        BatchedSerializer,
+        CloudPickleSerializer,
+        PickleSerializer,
+    )
+
+    function = _private(python_rdd, "func")
+    if not function.broadcastVars().isEmpty():
+        return None
+    command = CloudPickleSerializer().loads(function.command().unsafeArray())
+    func, _profiler, batches, _out = command
+    cells = getattr(func, "__closure__", None) or ()
+    if not (
+        getattr(func, "__code__", None) == _nested_code(RDD.map, "func")
+        and len(cells) == 1
+        and getattr(cells[0].cell_contents, "__code__", None)
+        == _nested_code(RDD._reserialize, "<lambda>")
+        and type(batches) is BatchedSerializer
+        and type(batches.serializer) in (PickleSerializer, CloudPickleSerializer)
+    ):
+        return None
+    return batches.serializer.loads
+
+
+def _driver_rows(source: tuple, schema: T.StructType, limit: int) -> list | None:
+    """The first ``limit + 1`` rows of a proven ``createDataFrame(list)``
+    frame (:func:`_driver_source`), read on the driver without a job: the
+    ParallelCollectionRDD holds the list as pickled batches of the rows'
+    internal form (its ``data``, which its partitions slice in order; read
+    whole, the round trips do not grow with the partition count). None
+    when the function is not the identity (:func:`_batch_loader`) or
+    anything fails. The caller has checked that every column is
+    flat-typed (:data:`_FLAT_TYPES`)."""
+    python_rdd, parallel = source
+    try:
+        load = _batch_loader(python_rdd)
+        if load is None:
+            return None
+        data = _private(parallel, "data")
+        rows: list = []
+        for i in range(data.length()):
+            batch = load(data.apply(i))
+            if type(batch) is not list:
+                return None
+            rows += map(schema.fromInternal, batch)
+            if len(rows) > limit:
+                return rows[: limit + 1]
+        return rows
+    except Exception:
+        return None
 
 
 def local_relation(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
@@ -170,13 +284,6 @@ def local_relation(spark: SparkSession, rows: list, schema: T.StructType) -> Dat
     return spark.createDataFrame(table, schema)
 
 
-#: column types a collect() + Arrow rebuild returns unchanged (a timestamp,
-#: for one, comes back as a naive local-time datetime)
-_FLAT_TYPES = (
-    T.BinaryType, T.StringType, T.LongType, T.IntegerType, T.BooleanType
-)
-
-
 def small_key_frame(frame: DataFrame) -> tuple[DataFrame, list[bytes] | None]:
     """The small-key path's engagement rule for a mutation frame.
 
@@ -184,26 +291,42 @@ def small_key_frame(frame: DataFrame) -> tuple[DataFrame, list[bytes] | None]:
     relation or a parallelized driver list, under projections and filters
     only — of at most read_view.small_key_limit rows, and its row-key set
     passes read_view.small_key_set. Returns ``(one-partition frame,
-    keys)``. A parallelized list of flat-typed columns is rebuilt from its
-    collected rows as a LocalRelation, so later plans over it run no
-    Python worker; other frames are coalesced as they are. Otherwise
-    ``(frame, None)``: computed or larger frames keep the general path
-    untouched."""
+    keys)``; otherwise ``(frame, None)``: computed or larger frames keep
+    the general path untouched.
+
+    Reading the rows runs no job for PySpark's own ``createDataFrame(list)``
+    lineage of flat-typed columns (:func:`_driver_source`,
+    :func:`_driver_rows`): a bare LogicalRDD over one PythonRDD over a
+    ParallelCollectionRDD, whose Python function is proven to be the
+    identity re-serialisation by its code objects. The rows are then
+    unpickled from the ParallelCollectionRDD's driver-side batches, at
+    most ``limit + 1`` of them. Every other driver frame reads them with
+    ``take(limit + 1)``: a projection or filter over the list, a mapped or
+    plain RDD, a timestamp or nested column, a pandas/Arrow local
+    relation, a broadcast command, Spark Connect, or any exception on the
+    way.
+
+    A parallelized list of flat-typed columns is rebuilt from its rows as
+    a LocalRelation, so later plans over it run no Python worker; other
+    frames are coalesced as they are."""
     plan = frame._jdf.queryExecution().optimizedPlan()
-    if not _driver_data(plan):
+    driver, source = _driver_source(plan)
+    if not driver:
         return frame, None
     spark = frame.sparkSession
     limit = small_key_limit(spark)
-    rows = frame.take(limit + 1)
+    schema = frame.schema
+    flat = all(isinstance(f.dataType, _FLAT_TYPES) for f in schema)
+    rows = _driver_rows(source, schema, limit) if source and flat else None
+    if rows is None:
+        rows = frame.take(limit + 1)
     if len(rows) > limit:
         return frame, None
     keys = small_key_set(spark, (r["row"] for r in rows))
     if keys is None:
         return frame, None
-    if plan.getClass().getSimpleName() != "LocalRelation" and all(
-        isinstance(f.dataType, _FLAT_TYPES) for f in frame.schema
-    ):
-        frame = local_relation(spark, rows, frame.schema)
+    if flat and plan.getClass().getSimpleName() != "LocalRelation":
+        frame = local_relation(spark, rows, schema)
     return frame.coalesce(1), keys
 
 
@@ -379,32 +502,33 @@ def append_value(
     return put_cells(cells, new_cells), new_vals
 
 
-def _check_pred(op_col: Column, cur: Column, expected: Column) -> Column:
-    """CompareOp predicate for CAS (Table.checkAndPut, Table.java:257).
-
-    DIRECTION (fixed r11 — found by the TestFromClientSide
-    testCheckAndPutWithCompareOp battery): the reference computes
-    ``compareResult = comparator(EXPECTED).compareTo(cellValue)`` and
-    matches ``compareResult <op> 0`` (HRegion.checkAndMutate:3549-3573),
-    i.e. the check passes iff ``expected <op> cellValue`` — with cell
-    "bbbb", a LESS check against "aaaa" MATCHES (aaaa < bbbb). Note this
-    is the opposite operand order from the filter algebra's
-    CompareFilter convention.
-
-    A null expected value means "column must not exist"; an existing
-    ZERO-LENGTH value also matches a null expected value (HRegion.checkAndMutate
-    treats getValueLength()==0 as absent)."""
-    missing_ok = expected.isNull() & (cur.isNull() | (F.length(cur) == 0))
-    cmp = (
-        F.when(op_col == "LESS", expected < cur)
-        .when(op_col == "LESS_OR_EQUAL", expected <= cur)
-        .when(op_col == "EQUAL", expected == cur)
-        .when(op_col == "NOT_EQUAL", expected != cur)
-        .when(op_col == "GREATER_OR_EQUAL", expected >= cur)
-        .when(op_col == "GREATER", expected > cur)
-        .otherwise(F.lit(False))
-    )
-    return missing_ok | F.coalesce(cmp, F.lit(False))
+#: CompareOp predicate for CAS (Table.checkAndPut, Table.java:257), over
+#: a judged record's ``check_op``, ``check_value`` (expected) and ``_cur``
+#: (the current value). One parsed SQL expression: one py4j round trip.
+#:
+#: DIRECTION (fixed r11 — found by the TestFromClientSide
+#: testCheckAndPutWithCompareOp battery): the reference computes
+#: ``compareResult = comparator(EXPECTED).compareTo(cellValue)`` and
+#: matches ``compareResult <op> 0`` (HRegion.checkAndMutate:3549-3573),
+#: i.e. the check passes iff ``expected <op> cellValue`` — with cell
+#: "bbbb", a LESS check against "aaaa" MATCHES (aaaa < bbbb). Note this
+#: is the opposite operand order from the filter algebra's CompareFilter
+#: convention.
+#:
+#: A null expected value means "column must not exist"; an existing
+#: ZERO-LENGTH value also matches a null expected value
+#: (HRegion.checkAndMutate treats getValueLength()==0 as absent).
+_CHECK_PASSES = (
+    "(check_value IS NULL AND (_cur IS NULL OR length(_cur) = 0))"
+    " OR coalesce(CASE check_op"
+    " WHEN 'LESS' THEN check_value < _cur"
+    " WHEN 'LESS_OR_EQUAL' THEN check_value <= _cur"
+    " WHEN 'EQUAL' THEN check_value = _cur"
+    " WHEN 'NOT_EQUAL' THEN check_value <> _cur"
+    " WHEN 'GREATER_OR_EQUAL' THEN check_value >= _cur"
+    " WHEN 'GREATER' THEN check_value > _cur"
+    " ELSE false END, false)"
+)
 
 
 def _judge_checks(
@@ -432,10 +556,7 @@ def _judge_checks(
     )
     return _attach(
         checks, cur, ["row", "check_family", "check_qualifier"], pinned is not None
-    ).withColumn(
-        "_pass",
-        _check_pred(F.col("check_op"), F.col("_cur"), F.col("check_value")),
-    )
+    ).withColumn("_pass", F.expr(_CHECK_PASSES))
 
 
 def check_and_mutate(
@@ -456,13 +577,7 @@ def check_and_mutate(
     judged = _judge_checks(cells, mutations, view, pinned)
     if pinned is not None:
         judged = _delta_once(judged)
-    passing = judged.where(F.col("_pass"))
-    new_cells = mutations_to_cells(
-        passing.select(
-            "op", "row", "family", "qualifier", "ts", "value", "batch_seq"
-        ),
-        now_ms=now_ms,
-    )
+    new_cells = mutations_to_cells(judged.where("_pass"), now_ms=now_ms)
     verdicts = judged.select(
         "row", "family", "qualifier", "op", F.col("_pass").alias("applied")
     )
@@ -624,15 +739,29 @@ def apply_mutation_batch(
     Routing is decided from ONE tiny aggregation over the op column (not one
     ``isEmpty()`` action per kind): a single driver pass before the commit
     job regardless of how many op kinds the batch mixes. Each RMW kind
-    reads ``view`` over the log as the batch's earlier kinds left it."""
-    present = {
-        r[0] for r in mutations.select("op").distinct().collect()
-    }
+    reads ``view`` over the log as the batch's earlier kinds left it. The
+    same pass returns the batch's ``batch_seq`` range; the increment
+    cells, then the append cells, then the CAS cells (in their records'
+    order) are written above its top, so each kind's cells read as newer
+    than those of the kinds before it (at the same server timestamp), as
+    the RMW op read them."""
+    routed = (
+        mutations.groupBy("op")
+        .agg(
+            F.expr("min(coalesce(batch_seq, 0))"),
+            F.expr("max(coalesce(batch_seq, 0))"),
+        )
+        .collect()
+    )
+    present = {r[0] for r in routed}
+    low = min((r[1] for r in routed), default=0)
+    seq = max((r[2] for r in routed), default=0)
     out = cells
     if present & set(OP_TO_TYPE.keys()):
         plain = mutations.where(F.col("op").isin(*OP_TO_TYPE.keys()))
         out = put_cells(out, mutations_to_cells(plain, now_ms=now_ms))
     if "increment" in present:
+        seq += 1
         incs = mutations.where(F.col("op") == "increment")
         out, _ = increment(
             out,
@@ -642,17 +771,22 @@ def apply_mutation_batch(
             view=view,
             now_ms=now_ms,
             codec=codec,
+            batch_seq=seq,
         )
     if "append" in present:
+        seq += 1
         apps = mutations.where(F.col("op") == "append")
         out, _ = append_value(
             out,
             apps.select("row", "family", "qualifier", "value", "batch_seq"),
             view=view,
             now_ms=now_ms,
+            batch_seq=seq,
         )
     if any(op.startswith("check_and_") for op in present):
-        cas = mutations.where(F.col("op").startswith("check_and_"))
+        cas = mutations.where(F.col("op").startswith("check_and_")).withColumn(
+            "batch_seq", F.expr(f"coalesce(batch_seq, 0) + {seq + 1 - low}")
+        )
         out, _ = check_and_mutate(
             out,
             cas.withColumn(

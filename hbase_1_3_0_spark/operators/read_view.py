@@ -309,20 +309,17 @@ def limit_versions(cells: DataFrame, max_versions: int) -> DataFrame:
         # sort every cell. (The hash-agg alternative — max over a packed
         # decimal + self-join — would shuffle the whole table for the join;
         # measured worse.)
-        others = [c for c in cells.columns if c not in ("row", "family", "qualifier")]
-        picked = (
-            cells.groupBy("row", "family", "qualifier")
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in others]),
-                    F.struct(F.col("ts"), F.col("seq")),
-                ).alias("_newest")
-            )
-            .select(
-                "row", "family", "qualifier", *[F.col(f"_newest.{c}") for c in others]
-            )
+        # One parsed SQL expression per step: a py4j round trip each, not
+        # one per column reference.
+        key = ("row", "family", "qualifier")
+        others = [c for c in cells.columns if c not in key]
+        newest = ", ".join(f"`{c}`" for c in others)
+        picked = cells.groupBy(*key).agg(
+            F.expr(f"max_by(struct({newest}), struct(ts, seq)) AS _newest")
         )
-        return picked.select(*cells.columns)
+        return picked.selectExpr(
+            *[f"`{c}`" if c in key else f"_newest.`{c}` AS `{c}`" for c in cells.columns]
+        )
     # A same-ts re-put REPLACES the cell rather than adding a version:
     # the reference returns ONE cell per (column, ts) with the newest
     # write winning, and the dupe does NOT consume a version slot

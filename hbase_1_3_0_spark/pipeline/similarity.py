@@ -186,14 +186,37 @@ def lsh_topk(
     )
 
 
+class NonFiniteVectorError(ValueError):
+    """A training input vector holds NaN or +-inf. Every model trained
+    over it (a mean, a norm, a linear solve) would hold non-finite values,
+    which no literal of the model SQL can carry; the trainers refuse such
+    input on entry, before their first iteration."""
+
+
+def _require_finite(df: DataFrame, vec_col: str, trainer: str) -> None:
+    """One pass over ``vec_col``: raise :class:`NonFiniteVectorError` when
+    any element is NaN or +-inf."""
+    bad = df.where(
+        F.expr(
+            f"exists(`{vec_col}`, x -> isnan(x) OR abs(x) = CAST('Infinity' AS DOUBLE))"
+        )
+    ).select(vec_col).first()
+    if bad is not None:
+        raise NonFiniteVectorError(
+            f"{trainer}: column {vec_col!r} holds a non-finite element: "
+            f"{list(bad[0])[:8]}"
+        )
+
+
 def _sql_double(x: float) -> str:
     """Exact SQL double literal: ``repr`` emits the shortest string that
     round-trips to the same IEEE-754 double, and the JVM's
     correctly-rounded parse recovers the identical bits."""
     x = float(x)
     if math.isinf(x) or math.isnan(x):
-        # model floats are means/norms of finite data; specials would
-        # need SQL's CAST('Infinity' AS DOUBLE) spelling
+        # model floats are means/norms of finite data (the trainers
+        # check their input, _require_finite); specials would need SQL's
+        # CAST('Infinity' AS DOUBLE) spelling
         raise ValueError(f"non-finite model literal: {x}")
     return repr(x) + "D"
 
@@ -301,7 +324,9 @@ def kmeans_centroids(
     state, not data, so the driver round-trip is the correct topology at
     any corpus size (same shape as MLlib's KMeans). Empty lists keep
     their previous centroid. Seeded random-unit init keeps the whole
-    trainer deterministic."""
+    trainer deterministic. Raises :class:`NonFiniteVectorError` on a NaN
+    or infinite input element, before the first iteration."""
+    _require_finite(df, vec_col, "kmeans_centroids")
     cents = _random_unit_vectors(k, dim, seed)
     for _ in range(iters):
         assigned = ivf_assign(
@@ -421,10 +446,13 @@ def pq_train(
     scored structs), and the per-(subspace, code) means fold in one hash
     aggregation. Only the m*k*(dim/m) codebook floats reach the driver —
     model state, not data. Seeded init keeps training deterministic.
-    Empty cells keep their previous centroid."""
+    Empty cells keep their previous centroid. Raises
+    :class:`NonFiniteVectorError` on a NaN or infinite input element,
+    before the first iteration."""
     sub = dim // m
     if sub * m != dim:
         raise ValueError(f"dim {dim} not divisible by m {m}")
+    _require_finite(df, vec_col, "pq_train")
     v = F.col(vec_col)
     subv = df.select(
         F.explode(
@@ -637,7 +665,9 @@ def pq_train_anisotropic(
     numpy problem — model state, not data); corpus-scale encoding
     stays Spark-side via ``pq_encode(..., eta=eta)``. Returns
     codebooks shaped exactly like :func:`pq_train`, so persistence and
-    every PQ consumer compose unchanged."""
+    every PQ consumer compose unchanged. Raises
+    :class:`NonFiniteVectorError` on a NaN or infinite input element,
+    before the first iteration."""
     import numpy as np
 
     sub = dim // m
@@ -645,6 +675,7 @@ def pq_train_anisotropic(
         raise ValueError(f"dim {dim} not divisible by m {m}")
     if eta < 1.0:
         raise ValueError(f"eta must be >= 1 (1 = vanilla PQ), got {eta}")
+    _require_finite(df, vec_col, "pq_train_anisotropic")
     x = _collect_sample(df, id_col=id_col, vec_col=vec_col, sample_n=sample_n)
     books = [
         np.array(_random_unit_vectors(k, sub, seed + j)) for j in range(m)
@@ -1105,7 +1136,10 @@ def ivf_list_means(
     mean is the L2-optimal anchor (within-list variance <= total second
     moment), which is what FAISS actually subtracts. One dim-wide avg
     aggregation; only num_lists x dim floats reach the driver. Empty
-    lists anchor at the zero vector (residual = the vector itself)."""
+    lists anchor at the zero vector (residual = the vector itself).
+    Raises :class:`NonFiniteVectorError` on a NaN or infinite input
+    element."""
+    _require_finite(assigned, vec_col, "ivf_list_means")
     rows = (
         assigned.groupBy(list_col)
         .agg(_avg_vector_expr(vec_col, dim).alias("c"))

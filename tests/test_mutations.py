@@ -822,6 +822,58 @@ def test_batch_rmw_reads_own_puts_through_the_table_view(spark):
     }
 
 
+def test_batch_rmw_cells_shadow_the_batch_puts(spark):
+    """A batch's increment and append read the column after the batch's
+    own put of it, and their cells, at the same server timestamp, must
+    read as the newer version: ``put cnt=10`` plus ``increment +5`` reads
+    15, ``put log=a`` plus ``append b`` reads ``ab``."""
+    t = fresh_table(spark, [(b"r0", "d", b"q", 100, TYPE_PUT, b"v", 0)])
+    muts = spark.createDataFrame(
+        [
+            ("put", b"r1", "d", b"cnt", None, _be8(10), 1),
+            ("increment", b"r1", "d", b"cnt", None, _be8(5), 0),
+            ("put", b"r1", "d", b"log", None, b"a", 2),
+            ("append", b"r1", "d", b"log", None, b"b", 0),
+        ],
+        MUT_SCHEMA,
+    )
+    got = cellmap(t.batch(muts).get(b"r1"))
+    assert got == {
+        (b"r1", "d", b"cnt"): (_be8(15), 10_000),
+        (b"r1", "d", b"log"): (b"ab", 10_000),
+    }
+
+
+def test_batch_cas_cells_shadow_the_batch_rmw_cells(spark):
+    """A batch's CAS judges the column after the batch's own increment or
+    append of it, and its cells, at the same server timestamp, must read
+    as the newer version: ``increment cnt +5`` over 10 plus
+    ``check_and_put cnt EQUAL 15 -> 0`` reads 0, and ``append log b``
+    over ``a`` plus ``check_and_put log EQUAL ab -> z`` reads ``z``."""
+    t = fresh_table(spark, [
+        (b"r1", "d", b"cnt", 100, TYPE_PUT, _be8(10), 0),
+        (b"r1", "d", b"log", 100, TYPE_PUT, b"a", 0),
+    ])
+    muts = spark.createDataFrame(
+        [
+            ("increment", b"r1", "d", b"cnt", None, _be8(5),
+             None, None, None, None, 0),
+            ("check_and_put", b"r1", "d", b"cnt", None, _be8(0),
+             "d", b"cnt", "EQUAL", _be8(15), 1),
+            ("append", b"r1", "d", b"log", None, b"b",
+             None, None, None, None, 0),
+            ("check_and_put", b"r1", "d", b"log", None, b"z",
+             "d", b"log", "EQUAL", b"ab", 1),
+        ],
+        CAS_SCHEMA,
+    )
+    got = cellmap(t.batch(muts).get(b"r1"))
+    assert got == {
+        (b"r1", "d", b"cnt"): (_be8(0), 10_000),
+        (b"r1", "d", b"log"): (b"z", 10_000),
+    }
+
+
 def _rows(df) -> list[bytes]:
     return sorted(bytes(r.row) for r in df.collect())
 

@@ -2146,3 +2146,33 @@ def test_winnow_dedup_composition(spark):
         .select("doc_id").collect()
     )
     assert got == [1, 9]
+
+
+def test_trainers_refuse_non_finite_vectors_before_iterating(spark, monkeypatch):
+    """A NaN or infinite input element raises NonFiniteVectorError on
+    entry to every trainer, before its first iteration runs: the model
+    SQL could not carry the NaN or infinite means such input trains."""
+    from hbase_1_3_0_spark.pipeline import similarity as sim
+
+    def iterated(*_a, **_kw):
+        raise AssertionError("a training iteration ran")
+
+    monkeypatch.setattr(sim, "ivf_assign", iterated)
+    monkeypatch.setattr(sim, "_pq_sub_assign", iterated)
+    monkeypatch.setattr(sim, "_collect_sample", iterated)
+    dim = 4
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        df = spark.createDataFrame(
+            [(i, i % 2, [1.0, 0.5, -0.5, float(i)]) for i in range(6)]
+            + [(6, 0, [0.25, bad, 0.0, 1.0])],
+            "vec_id long, ivf_list int, embedding array<double>",
+        )
+        trainers = [
+            lambda: sim.kmeans_centroids(df, k=2, dim=dim, iters=2),
+            lambda: sim.pq_train(df, m=2, k=2, dim=dim, iters=2),
+            lambda: sim.pq_train_anisotropic(df, dim=dim, m=2, k=2, iters=2),
+            lambda: sim.ivf_list_means(df, num_lists=2, dim=dim),
+        ]
+        for train in trainers:
+            with pytest.raises(sim.NonFiniteVectorError, match="embedding"):
+                train()

@@ -22,7 +22,7 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tests._prop_budget import ex
-from tests._small_key import recorded_deltas
+from tests._small_key import jobs_run, py4j_calls, recorded_deltas
 
 from hbase_1_3_0_spark.catalog import FamilyMeta, TableMeta
 from hbase_1_3_0_spark.cells import (
@@ -35,6 +35,7 @@ from hbase_1_3_0_spark.cells import (
     TYPE_PUT,
 )
 from hbase_1_3_0_spark.operators.mutations import local_relation, small_key_frame
+from hbase_1_3_0_spark.operators.read_view import small_key_limit
 from hbase_1_3_0_spark.plans import inspect
 from hbase_1_3_0_spark.sources import writer
 from hbase_1_3_0_spark.table import Table
@@ -352,7 +353,9 @@ def test_small_key_cas_keeps_payload_types(spark):
         ],
         CAS_SCHEMA + ", at timestamp, seen array<timestamp>",
     )
-    pinned, keys = small_key_frame(cas)
+    with jobs_run(spark) as jobs:
+        pinned, keys = small_key_frame(cas)
+    assert jobs() > 0  # read with take: a timestamp is not read on the driver
     assert keys == [b"r1", b"r2"]
     assert pinned.collect() == cas.collect()
 
@@ -360,3 +363,99 @@ def test_small_key_cas_keeps_payload_types(spark):
     assert got == want
     verdicts, _log = got
     assert {(v[0], v[-1]) for v in verdicts} == {(b"r1", True), (b"r2", False)}
+
+
+def test_small_key_frame_reads_a_driver_list_without_a_job(spark):
+    """A ``createDataFrame(list)`` frame's rows are read on the driver:
+    deciding the path runs no Spark job, under the key limit (the rows
+    come back unchanged) and past it (the general path is kept)."""
+    limit = small_key_limit(spark)
+    for n in (1, limit, limit + 1, 150):
+        rows = [(b"k%03d" % i, "a", b"n", i) for i in range(n)]
+        frame = spark.createDataFrame(rows, INC_SCHEMA)
+        with jobs_run(spark) as jobs:
+            pinned, keys = small_key_frame(frame)
+        assert jobs() == 0, n
+        if n <= limit:
+            assert keys == [r[0] for r in rows]
+            assert pinned.collect() == frame.collect()
+        else:
+            assert keys is None and pinned is frame
+
+
+def test_small_key_frame_falls_back_to_take_off_the_list_lineage(spark):
+    """Driver frames whose rows are not provably the parallelized list's
+    are read with ``take`` (a job) and still match the general path: a
+    mapped RDD, whose JVM chain is the list's (a raw read of its
+    partitions would see the rows before the map, and prune the log to
+    the wrong row), a plain RDD, and a projection or filter over a list."""
+    t = _table(
+        spark,
+        [(r, "a", b"n", ts, TYPE_PUT, 0) for r in (b"r1", b"r2") for ts in (1, 2)],
+        [FamilyMeta(name="a", max_versions=2), FamilyMeta(name="b")],
+    )
+    rows = [(b"r1", "a", b"n", 5)]
+    sc = spark.sparkContext
+
+    def rewrite_row_key(r):
+        return (b"r2",) + tuple(r[1:])
+
+    frames = {
+        "mapped rdd": spark.createDataFrame(
+            sc.parallelize(rows).map(rewrite_row_key), INC_SCHEMA
+        ),
+        "rdd": spark.createDataFrame(sc.parallelize(rows), INC_SCHEMA),
+        "projected list": spark.createDataFrame(rows, INC_SCHEMA).selectExpr(
+            "`row`", "family", "qualifier", "delta * 2 AS delta"
+        ),
+        "filtered list": spark.createDataFrame(
+            rows + [(b"r2", "a", b"n", 7)], INC_SCHEMA
+        ).where("delta < 6"),
+    }
+    for name, frame in frames.items():
+        with jobs_run(spark) as jobs:
+            _, keys = small_key_frame(frame)
+        assert jobs() > 0, name
+        assert keys == sorted({bytes(r.row) for r in frame.collect()}), name
+        got, want = _both_rmw(spark, lambda: t.increment(frame))
+        assert got == want, name
+        assert got[0] == {
+            (bytes(r.row), "a", b"n", _counter(_read(t, bytes(r.row), "a", b"n")) + r.delta)
+            for r in frame.collect()
+        }, name
+
+
+def test_small_key_builds_stay_within_py4j_budgets(spark):
+    """Building a warm Get, CAS, increment and append sends a budgeted
+    number of py4j commands (each ``F.*`` call or JVM method call is
+    one; the plan is built, not run): the version limit, the CAS
+    predicate and the cell projection are each one parsed SQL
+    expression, and no job reads a driver list's keys. The budgets are
+    the counts reached plus about 25 %."""
+    t = _table(
+        spark,
+        [(b"r1", "a", b"q", 1, TYPE_PUT, 0), (b"r1", "a", b"n", 2, TYPE_PUT, 0),
+         (b"r2", "b", b"q", 3, TYPE_DELETE_COLUMN, 0)],
+        [FamilyMeta(name="a", max_versions=3), FamilyMeta(name="b")],
+    )
+    cas = spark.createDataFrame(
+        [("put", b"r1", "b", b"q", None, b"new", "a", b"q", "EQUAL", b"v1000.0", 1)],
+        CAS_SCHEMA,
+    )
+    incs = spark.createDataFrame([(b"r1", "a", b"n", 5)], INC_SCHEMA)
+    apps = spark.createDataFrame([(b"r1", "b", b"q", b"+x", 0)], APP_SCHEMA)
+    # reached: 291, 607, 951, 756
+    builds = {
+        "get": (lambda: t.get(b"r1"), 365),
+        "cas": (lambda: t.check_and_mutate(cas), 760),
+        "increment": (lambda: t.increment(incs), 1190),
+        "append": (lambda: t.append(apps), 945),
+    }
+    counts = {}
+    for name, (build, _) in builds.items():
+        build()
+        with py4j_calls(spark) as calls:
+            build()
+        counts[name] = calls()
+    for name, (_, budget) in builds.items():
+        assert counts[name] <= budget, (name, counts)
