@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hbase_1_3_0_spark.catalog import Catalog, TableMeta
 from hbase_1_3_0_spark.sources import writer
-from hbase_1_3_0_spark.table import Table
+from hbase_1_3_0_spark.table import Scan, Table, family_groups
 
 
 def build_session(
@@ -133,15 +133,11 @@ class Engine:
         from pyspark.sql import functions as F
 
         fams = table.meta.families
-        groups: dict[tuple, list] = {}
-        for fm in fams:
-            key = (fm.max_versions, fm.min_versions, fm.ttl_seconds, fm.keep_deleted_cells)
-            groups.setdefault(key, []).append(fm)
         outs = []
-        for (maxv, minv, ttl, kdc), members in groups.items():
+        for (maxv, minv, ttl, kdc, _tr), names in family_groups(table.meta, Scan()):
             sub = table.cells
-            if len(groups) > 1:
-                sub = sub.where(F.col("family").isin([m.name for m in members]))
+            if names is not None:
+                sub = sub.where(F.col("family").isin(names))
             outs.append(
                 jobs.compact(
                     sub,

@@ -21,6 +21,7 @@ a numeric column ('long'/'double'/'decimal' for the canonical UTF-8 codec,
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
@@ -127,32 +128,29 @@ def median_approx_bounded(
     )
 
 
-def _exact_median_partition_walk(vals: DataFrame) -> DataFrame:
-    """Exact unweighted median without a single-node sort buffer — the
-    same two-phase region walk the weighted path uses (guide §5; r14,
-    replacing Catalyst's ``percentile``, whose aggregation buffer holds
-    EVERY value and merges on one node).
-
-    Phase 1: range-partition by value, reduce each partition to
-    (count, min) — a <= num_partitions table — and locate the <= 2
-    partitions holding the interpolation ranks ``floor/ceil(0.5*(N-1))``.
-    Phase 2: rank only WITHIN those partitions and interpolate exactly
-    as Percentile.getPercentile does
-    (``lo + (hi - lo) * (0.5*(N-1) - floor(...))`` in doubles), so the
-    value is bit-identical to the old expression for double inputs and
-    matches the oracle's interpolated median for integral ones."""
-    vals = vals.where(F.col("v").isNotNull())
-    num_parts = max(vals.sparkSession.sparkContext.defaultParallelism, 2)
-    parted = vals.repartitionByRange(num_parts, "v").withColumn(
+def _cumulative_walk(pairs: DataFrame, targets: list[Column]) -> DataFrame:
+    """For each target cumulative weight, the smallest value whose
+    cumulative weight reaches it: the reference's two-phase region walk
+    (AggregationClient.getMedianArgs:647, :739-785), partitions standing in
+    for regions, with no single-node sort buffer. ``pairs``: (v, w), v not
+    null. Phase 1 range-partitions by value and reduces each partition to
+    (Σw, min v), whose sum is ``_total``; ``targets`` are the target
+    weights, written over that column. Phase 2 accumulates the weight only within the
+    partitions a target falls in. Returns one row: ``_v0``, ``_v1``, ...
+    (one value per target) and ``_total``; nulls on no input."""
+    num_parts = max(pairs.sparkSession.sparkContext.defaultParallelism, 2)
+    parted = pairs.repartitionByRange(num_parts, "v").withColumn(
         "_pid", F.spark_partition_id()
     )
+    # the weight before each partition and the total: windows over the
+    # per-partition table, no other pass over the pairs
     per_part = (
         parted.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_pc"), F.min("v").alias("_pmin"))
+        .agg(F.sum("w").alias("_pw"), F.min("v").alias("_pmin"))
         .withColumn(
             "_cum_before",
             F.coalesce(
-                F.sum("_pc").over(
+                F.sum("_pw").over(
                     Window.orderBy("_pmin", "_pid").rowsBetween(
                         Window.unboundedPreceding, -1
                     )
@@ -160,39 +158,28 @@ def _exact_median_partition_walk(vals: DataFrame) -> DataFrame:
                 F.lit(0),
             ),
         )
+        .withColumn("_total", F.sum("_pw").over(Window.partitionBy()))
     )
-    # N from the per-partition counts — no third pass over the values
-    total = per_part.agg(
-        F.coalesce(F.sum("_pc"), F.lit(0)).alias("_n")
-    ).select(
-        "_n",
-        F.floor(F.lit(0.5) * (F.col("_n") - 1)).alias("_rlo"),
-        F.ceil(F.lit(0.5) * (F.col("_n") - 1)).alias("_rhi"),
+    # a target's value lies in the first partition whose cumulative weight
+    # reaches it; a later partition that also qualifies holds larger values
+    holds = [
+        (F.col("_cum_before") <= t) & (F.col("_cum_before") + F.col("_pw") >= t)
+        for t in targets
+    ]
+    spans = per_part.where(reduce(lambda x, y: x | y, holds)).select(
+        "_pid", "_cum_before", "_total"
     )
-    targets = (
-        per_part.crossJoin(F.broadcast(total))
-        .where(
-            (F.col("_cum_before") <= F.col("_rhi"))
-            & ((F.col("_cum_before") + F.col("_pc")) > F.col("_rlo"))
-        )
-        .select("_pid", "_cum_before", "_rlo", "_rhi", "_n")
+    in_part = parted.join(F.broadcast(spans), "_pid")
+    w_cum = Window.partitionBy("_pid").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, 0
     )
-    in_part = parted.join(F.broadcast(targets), "_pid")
-    wr = Window.partitionBy("_pid").orderBy("v")
-    picked = in_part.withColumn(
-        "_rk", F.col("_cum_before") + F.row_number().over(wr) - 1
-    ).where((F.col("_rk") == F.col("_rlo")) | (F.col("_rk") == F.col("_rhi")))
-    vd = F.col("v").cast("double")
-    return picked.agg(
-        F.min(F.when(F.col("_rk") == F.col("_rlo"), vd)).alias("_vlo"),
-        F.min(F.when(F.col("_rk") == F.col("_rhi"), vd)).alias("_vhi"),
-        F.min(
-            F.lit(0.5) * (F.col("_n") - 1) - F.col("_rlo")
-        ).alias("_frac"),
-    ).select(
-        (
-            F.col("_vlo") + (F.col("_vhi") - F.col("_vlo")) * F.col("_frac")
-        ).alias("median")
+    cum = in_part.withColumn("_cw", F.col("_cum_before") + F.sum("w").over(w_cum))
+    return cum.agg(
+        *[
+            F.min(F.when(F.col("_cw") >= t, F.col("v"))).alias(f"_v{k}")
+            for k, t in enumerate(targets)
+        ],
+        F.min("_total").alias("_total"),
     )
 
 
@@ -208,19 +195,30 @@ def median(
     """Exact (or approximate) median; optionally weighted
     (AggregateImplementation.java:418, AggregationClient.java:728-785).
 
-    Weighted: the value at which cumulative weight crosses half the total —
-    computed with a cumulative-sum window ordered by value, mirroring the
-    reference's cumulative-weight region walk. Unweighted exact uses the
-    same two-phase partition walk (:func:`_exact_median_partition_walk` —
-    value-identical to Catalyst's ``percentile`` without its
-    all-values-on-one-node aggregation buffer); ``approximate=True``
+    Both exact forms are one two-phase partition walk
+    (:func:`_cumulative_walk`), the reference's cumulative-weight region
+    walk. Weighted: the smallest value at which the cumulative weight
+    reaches half the total. Unweighted: unit weights, and the two ranks
+    Catalyst's ``percentile`` interpolates between — value-identical to it
+    without its all-values-on-one-node aggregation buffer; ``approximate=True``
     uses ``percentile_approx`` (the 100 TB-scale path: one pass, mergeable
     sketches, no sort)."""
     if weight_qualifier is None:
         vals = _values(cells, family, qualifier, interpreter)
         if approximate:
             return vals.agg(F.percentile_approx("v", 0.5).alias("median"))
-        return _exact_median_partition_walk(vals)
+        # Percentile.getPercentile's interpolation between the values at
+        # 0-based ranks floor/ceil(0.5 * (N - 1)), in doubles: the value of
+        # Catalyst's ``percentile`` without its all-values buffer
+        pos = F.lit(0.5) * (F.col("_total") - 1)
+        walked = _cumulative_walk(
+            vals.where(F.col("v").isNotNull()).withColumn("w", F.lit(1)),
+            [F.floor(pos) + 1, F.ceil(pos) + 1],
+        )
+        lo, hi = F.col("_v0").cast("double"), F.col("_v1").cast("double")
+        return walked.select(
+            (lo + (hi - lo) * (pos - F.floor(pos))).alias("median")
+        )
 
     dec = _decode(interpreter)
     fam = cells.where(F.col("family") == family)
@@ -236,43 +234,8 @@ def median(
         )
         .where(F.col("v").isNotNull() & F.col("w").isNotNull())
     )
-    # Two-phase walk, exactly AggregationClient.getMedianArgs:647 +
-    # :739-785 with "partition" standing in for "region": range-partition
-    # by value, reduce each partition to (Σw) — a tiny per-partition
-    # table — locate the partition whose cumulative weight crosses Σw/2,
-    # then order only WITHIN that one partition. No global-sort window
-    # (a single-partition Window.orderBy dies at scale).
-    num_parts = max(pairs.sparkSession.sparkContext.defaultParallelism, 2)
-    parted = pairs.repartitionByRange(num_parts, "v").withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    per_part = (
-        parted.groupBy("_pid")
-        .agg(F.sum("w").alias("_pw"), F.min("v").alias("_pmin"))
-        .withColumn(
-            "_cum_before",
-            F.coalesce(
-                F.sum("_pw").over(
-                    Window.orderBy("_pmin", "_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-    )  # per-partition rows: ≤ num_parts of them — the region-partials table
-    total = pairs.agg((F.sum("w") / 2).alias("_half"))
-    target = (
-        per_part.crossJoin(F.broadcast(total))
-        .where(F.col("_cum_before") + F.col("_pw") >= F.col("_half"))
-        .orderBy("_pmin", "_pid")
-        .limit(1)
-        .select("_pid", "_cum_before", "_half")
-    )
-    in_part = parted.join(F.broadcast(target), "_pid")
-    w_cum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        in_part.withColumn("_cw", F.col("_cum_before") + F.sum("w").over(w_cum))
-        .where(F.col("_cw") >= F.col("_half"))
-        .agg(F.min("v").alias("median"))
+    # the value at which the cumulative weight crosses half the total; with
+    # every weight zero, the smallest value
+    return _cumulative_walk(pairs, [F.col("_total") / 2]).select(
+        F.col("_v0").alias("median")
     )

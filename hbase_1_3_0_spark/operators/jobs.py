@@ -14,8 +14,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hbase_1_3_0_spark.cells import CELL_COLUMNS, CELL_SCHEMA, TYPE_PUT
-from hbase_1_3_0_spark.operators.read_view import mask_deletes, read_view
+from hbase_1_3_0_spark.cells import CELL_COLUMNS, CELL_SCHEMA, TTL_FOREVER, TYPE_PUT
+from hbase_1_3_0_spark.operators.read_view import (
+    clock,
+    limit_versions,
+    mask_deletes,
+    read_view,
+    retain,
+    ttl_floor,
+)
 from hbase_1_3_0_spark.sources import kv_encoder, writer
 
 
@@ -431,9 +438,10 @@ def compact(
     now_ms: int | None = None,
 ) -> DataFrame:
     """Major compaction: rewrite the log applying the family's retention
-    semantics. Shares the read-view code exactly as the reference shares
-    ScanQueryMatcher in non-user-scan mode (StoreScanner.java:268-271;
-    SURVEY.md §2.5).
+    semantics. Both branches judge expiry with the read view's one
+    retention rule (:func:`read_view.retain`, stated in read_view's module
+    docstring), as the reference shares ScanQueryMatcher between user
+    scans and compactions (StoreScanner.java:268-271; SURVEY.md §2.5).
 
     ``keep_deleted_cells=FALSE`` (the default): tombstones and the cells
     they mask, over-version and expired cells are all dropped — the clean
@@ -442,48 +450,26 @@ def compact(
     ``keep_deleted_cells=TRUE/TTL``: the reference RETAINS delete markers
     and the deleted cells during compaction (COMPACT_RETAIN_DELETES,
     ScanQueryMatcher.java:349-381) so time-range reads can still see through
-    them; only TTL (for KDC=TTL) and version trimming apply. Dropping the
-    markers here would silently destroy data time-travel reads can see."""
-    import time as _time
-
-    from hbase_1_3_0_spark.cells import TTL_FOREVER, TYPE_PUT
-    from hbase_1_3_0_spark.operators.read_view import limit_versions
-
+    them; only retention and version trimming apply to the puts, and a
+    retained put counts toward the versions whether or not a marker masks
+    it. Under ``TTL``, a marker older than the family's TTL floor
+    (:func:`read_view.ttl_floor`) is tracked like a KEEP_DELETED_CELLS=FALSE
+    marker (SQM:349-352): it masks its puts and is dropped with them."""
     ttl = ttl_seconds if ttl_seconds is not None else TTL_FOREVER
 
     if keep_deleted_cells in ("TRUE", "TTL"):
+        now = clock(now_ms)
+        floor = ttl_floor(ttl, now) if keep_deleted_cells == "TTL" else None
         markers = cells.where(F.col("type") != TYPE_PUT)
-        puts = cells.where(F.col("type") == TYPE_PUT)
-        has_cell_ttl = "ttl_ms" in cells.columns
-        if has_cell_ttl:
-            # per-cell TTL tags are GC'd during compaction too
-            now = now_ms if now_ms is not None else int(_time.time() * 1000)
-            puts = puts.where(
-                F.col("ttl_ms").isNull()
-                | (F.lit(now) - F.col("ts") < F.col("ttl_ms"))
-            )
-        if ttl != TTL_FOREVER:
-            now = now_ms if now_ms is not None else int(_time.time() * 1000)
-            floor = now - ttl * 1000
-            alive = F.col("ts") >= floor
-            if min_versions > 0:
-                from pyspark.sql import Window
-
-                w = Window.partitionBy("row", "family", "qualifier").orderBy(
-                    F.col("ts").desc(), F.col("seq").desc()
-                )
-                puts = (
-                    puts.withColumn("_trank", F.row_number().over(w))
-                    .where(alive | (F.col("_trank") <= min_versions))
-                    .drop("_trank")
-                )
-            else:
-                puts = puts.where(alive)
-            if keep_deleted_cells == "TTL":
-                # markers older than the TTL floor only mask already-expired
-                # cells — droppable (KEEP_DELETED_CELLS=TTL semantics)
-                markers = markers.where(F.col("ts") >= floor)
-        return limit_versions(puts, max_versions).unionByName(markers)
+        if floor is None:
+            puts = cells.where(F.col("type") == TYPE_PUT)
+        else:
+            puts = mask_deletes(cells, marker_ts_below=floor)
+            markers = markers.where(F.col("ts") >= floor)
+        kept = retain(
+            puts, min_versions=min_versions, ttl_seconds=ttl, now_ms=now
+        )
+        return limit_versions(kept, max_versions).unionByName(markers)
 
     return read_view(
         cells,

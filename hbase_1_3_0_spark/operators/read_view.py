@@ -15,9 +15,16 @@ This reproduces the reference's ``ScanQueryMatcher`` state machine
    Masking is by *timestamp*, not arrival order — a put written after a
    delete but with an older-or-equal ts stays masked until compaction (the
    classic HBase "deletes mask puts" semantics).
-2. **TTL expiry** (SQM:329-331) with the ``minVersions`` floor: the newest
-   ``min_versions`` versions of a column survive expiry
-   (ScanQueryMatcher.java:347-395).
+2. **Retention** (:func:`retain`: TTL expiry, SQM:329-331, with the
+   ``minVersions`` floor, SQM:347-395). A put is alive at the table clock
+   unless it is older than the family TTL or than its own ``ttl_ms`` tag.
+   A put is retained when it is alive, or when it sits inside the
+   ``min_versions`` floor: the newest ``min_versions`` timestamps of its
+   column (``dense_rank`` over ``ts``: a same-ts re-put takes no slot),
+   whatever its tag says. On a single-version (clean) log that is "alive
+   or ``min_versions > 0``", with no window. User reads, clean-log scans
+   and compactions all apply this one function, as the reference shares
+   ScanQueryMatcher between scans and compactions (StoreScanner:268-271).
 3. **Time range** (Scan.setTimeRange, Scan.java:330): half-open ``[min, max)``
    over the surviving puts; version counting happens *within* the range
    (ColumnTracker counts post-timerange matches, ExplicitColumnTracker.java:160).
@@ -40,15 +47,16 @@ the join form: that one exchange carries every version and every marker
 of the scanned range, where the join form aggregates the markers apart,
 broadcasts them to the puts and shuffles only partially aggregated
 columns for the version limit — one wider shuffle against several
-narrower exchanges, each its own stage and job. A log with many versions
-per column and a wide value column pays the most for the wider shuffle.
-Callers whose cells are not clustered keep the join form, which never
-shuffles the puts for masking: the MapReduce jobs
-(``jobs.row_counter``, ``hash_table``, ``sync_table`` over its bucketed
-layout, ``compact``, ...) and a clean-log Table scan, which has no marker
-or version step at all. For ``max_versions == 1`` (the HBase default) the
-version limit is a ``groupBy().agg(max_by(...))`` — partial-aggregatable,
-no window sort — and only the general ``n > 1`` case pays a window.
+narrower exchanges, each its own stage and job. The MapReduce jobs over
+unclustered cells (``jobs.row_counter``, ``hash_table``, ``sync_table``,
+``compact``, ...) keep the join form: on a marker-free log (a bulk load)
+AQE drops its empty marker joins and it wins (sf0.1 ``orders`` on 4
+cores: row_counter 0.50 s against 1.33 s for windows), while on a
+tombstoned multi-version log windows win (row_counter 560–599 ms
+against 860–978); tests/test_plans.py pins the split. For
+``max_versions == 1`` (the HBase default) the version limit is a
+``groupBy().agg(max_by(...))`` — partial-aggregatable, no window sort —
+and only the general ``n > 1`` case pays a window.
 
 Small-key path (the one-region-RPC analog of a Get, HRegion.java:5707): when
 the key set is a driver-side list of at most
@@ -345,6 +353,62 @@ def limit_versions(cells: DataFrame, max_versions: int) -> DataFrame:
     )
 
 
+def clock(now_ms: int | None) -> int:
+    """The table clock: ``now_ms`` when pinned, else the wall clock."""
+    return now_ms if now_ms is not None else int(time.time() * 1000)
+
+
+def ttl_floor(ttl_seconds: int, now_ms: int | None) -> int | None:
+    """The oldest ``ts`` the family TTL keeps alive at the table clock, or
+    None when the family never expires (``TTL_FOREVER``)."""
+    if ttl_seconds == TTL_FOREVER:
+        return None
+    return clock(now_ms) - ttl_seconds * 1000
+
+
+def retain(
+    puts: DataFrame,
+    *,
+    min_versions: int = 0,
+    ttl_seconds: int = TTL_FOREVER,
+    now_ms: int | None = None,
+    single_version: bool = False,
+    families: list[str] | None = None,
+) -> DataFrame:
+    """The retention rule (module docstring, step 2) over ``puts``.
+    ``single_version``: one version per column (a clean log), so no window.
+    ``families``: judge only these families' cells; others pass."""
+    now = clock(now_ms)
+    alive = []
+    floor = ttl_floor(ttl_seconds, now)
+    if floor is not None:
+        alive.append(f"ts >= {floor}")
+    if "ttl_ms" in puts.columns:
+        # per-cell TTL tags (TagType.java:33, TTL_TAG_TYPE=8); the
+        # effective TTL is min(cell TTL, family TTL), SQM:329-331
+        alive.append(f"(ttl_ms IS NULL OR {now} - ts < ttl_ms)")
+    if not alive or (single_version and min_versions > 0):
+        return puts
+    keep = " AND ".join(alive)
+    if families is not None:
+        names = ", ".join("'" + f.replace("'", "\\'") + "'" for f in families)
+        keep = f"family NOT IN ({names}) OR ({keep})"
+    if min_versions == 0 or single_version:
+        return puts.where(keep)
+    # dense_rank by ts alone: a same-ts re-put shares its predecessor's
+    # version index and takes no floor slot (the ColumnTrackers skip
+    # same-ts cells in version counting, sameAsPreviousTS)
+    floor_rank = (
+        "dense_rank() OVER (PARTITION BY `row`, family, qualifier"
+        f" ORDER BY ts DESC) <= {int(min_versions)}"
+    )
+    return (
+        puts.selectExpr("*", f"({keep}) OR {floor_rank} AS _retained")
+        .where("_retained")
+        .drop("_retained")
+    )
+
+
 def read_view(
     cells: DataFrame,
     *,
@@ -397,35 +461,9 @@ def read_view(
         cells, marker_ts_below=marker_ts_below, clustered=clustered
     )
 
-    # Per-cell TTL tags (TagType.java:33, TTL_TAG_TYPE=8): an optional
-    # ``ttl_ms`` cell column; effective TTL = min(cell TTL, family TTL)
-    # (ScanQueryMatcher TTL check :329-331 consults the cell tag first).
-    has_cell_ttl = "ttl_ms" in cells.columns
-    if ttl_seconds != TTL_FOREVER or has_cell_ttl:
-        now = now_ms if now_ms is not None else int(time.time() * 1000)
-        alive = F.lit(True)
-        if ttl_seconds != TTL_FOREVER:
-            alive = alive & (F.col("ts") >= now - ttl_seconds * 1000)
-        if has_cell_ttl:
-            alive = alive & (
-                F.col("ttl_ms").isNull() | (F.lit(now) - F.col("ts") < F.col("ttl_ms"))
-            )
-        if min_versions > 0:
-            # dense_rank by ts alone: a same-ts duplicate re-put shares
-            # its predecessor's version index and must not consume a
-            # minVersions slot (the ColumnTrackers skip same-ts cells in
-            # version counting — sameAsPreviousTS; the per-ts winner is
-            # taken later in limit_versions)
-            w = Window.partitionBy("row", "family", "qualifier").orderBy(
-                F.col("ts").desc()
-            )
-            visible = (
-                visible.withColumn("_trank", F.dense_rank().over(w))
-                .where(alive | (F.col("_trank") <= min_versions))
-                .drop("_trank")
-            )
-        else:
-            visible = visible.where(alive)
+    visible = retain(
+        visible, min_versions=min_versions, ttl_seconds=ttl_seconds, now_ms=now_ms
+    )
 
     if time_range is not None:
         lo, hi = time_range

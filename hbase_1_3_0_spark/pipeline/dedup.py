@@ -36,7 +36,10 @@ from pyspark.sql import functions as F
 from hbase_1_3_0_spark.pipeline.parallelism import fan_out_small_scan
 from hbase_1_3_0_spark.pipeline.text import fingerprint
 
-_MERSENNE_P = (1 << 61) - 1
+#: the MinHash prime modulus: ``a·x + b`` (all ``< 2^31``) stays exact in a
+#: long and wraps the modulus many times; a modulus the product never
+#: reaches leaves each hash near-monotone in ``x``
+_MERSENNE_P = (1 << 31) - 1
 
 
 def exact_dedup(
@@ -216,7 +219,7 @@ def minhash_signatures(
     aggs = [
         F.min(
             F.pmod(
-                F.lit(a[i] % (1 << 31)) * F.col("_c") + F.lit(b[i] % (1 << 31)),
+                F.lit(a[i]) * F.col("_c") + F.lit(b[i]),
                 F.lit(_MERSENNE_P),
             )
         ).alias(f"_m{i}")

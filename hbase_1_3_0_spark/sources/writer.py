@@ -13,12 +13,20 @@ bloom (StoreFile.passesGeneralBloomFilter:1378).
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hbase_1_3_0_spark.cells import CELL_SCHEMA
+from hbase_1_3_0_spark.operators.mutations import TAG_COLUMNS
+
+#: the file in a log directory that names the cell-tag columns the log's
+#: parquet files hold, with their types (a leading ``_``: the parquet
+#: reader skips it). A log without tags has none.
+TAGS_FILE = "_cell_tags.json"
 
 
 def hex_string_split(n: int) -> list[bytes]:
@@ -98,6 +106,25 @@ def write_cells(
     if writer_part_cols:
         w = w.partitionBy(*writer_part_cols)
     w.parquet(str(path))
+    _record_tags(cells, path, mode)
+
+
+def _tag_fields(path: str | Path) -> list[T.StructField]:
+    f = Path(path) / TAGS_FILE
+    return T.StructType.fromJson(json.loads(f.read_text())).fields if f.exists() else []
+
+
+def _record_tags(cells: DataFrame, path: str | Path, mode: str) -> None:
+    """Name the log's tag columns (:data:`TAGS_FILE`), so that
+    :func:`read_cells` reads them back without inferring the schema: a
+    cell's TTL, visibility and ACL tags must survive a save."""
+    tags = {f.name: f for f in cells.schema.fields if f.name in TAG_COLUMNS}
+    if mode == "append":
+        tags = {f.name: f for f in _tag_fields(path)} | tags
+    if tags:
+        (Path(path) / TAGS_FILE).write_text(T.StructType(list(tags.values())).json())
+    else:
+        (Path(path) / TAGS_FILE).unlink(missing_ok=True)
 
 
 def write_cells_bucketed(
@@ -128,7 +155,8 @@ def write_cells_bucketed(
 
 
 def read_cells(spark: SparkSession, path: str | Path) -> DataFrame:
-    """Read a cell log with the declared CELL_SCHEMA enforced.
+    """Read a cell log with the declared CELL_SCHEMA enforced, plus the
+    cell-tag columns its :data:`TAGS_FILE` names.
 
     One explicit-schema read serves both layouts — no inference pass, so
     schema drift in rewritten logs can't leak into downstream plans and
@@ -136,5 +164,6 @@ def read_cells(spark: SparkSession, path: str | Path) -> DataFrame:
     pre-split (region=NNN partitioned) layout Spark appends the
     partition-discovery column after the declared schema; the select
     drops it."""
-    df = spark.read.schema(CELL_SCHEMA).parquet(str(path))
-    return df.select(*[f.name for f in CELL_SCHEMA.fields])
+    schema = T.StructType(CELL_SCHEMA.fields + _tag_fields(path))
+    df = spark.read.schema(schema).parquet(str(path))
+    return df.select(*schema.fieldNames())

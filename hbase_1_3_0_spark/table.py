@@ -38,8 +38,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hbase_1_3_0_spark.catalog import FamilyMeta, TableMeta
-from hbase_1_3_0_spark.cells import CELL_COLUMNS, TTL_FOREVER, TYPE_PUT
+from hbase_1_3_0_spark.catalog import TableMeta
+from hbase_1_3_0_spark.cells import CELL_COLUMNS, TYPE_PUT
 from hbase_1_3_0_spark.filters import ast as filter_ast
 from hbase_1_3_0_spark.filters.compiler import (
     apply_filter,
@@ -52,10 +52,12 @@ from hbase_1_3_0_spark.filters.parser import parse_filter
 from hbase_1_3_0_spark.operators import mutations as mut
 from hbase_1_3_0_spark.operators.coprocessor import Observers
 from hbase_1_3_0_spark.operators.read_view import (
+    clock,
     cluster_rows,
     local_semi,
     prune_rows,
     read_view,
+    retain,
     small_key_set,
 )
 from hbase_1_3_0_spark.sources import kv_encoder
@@ -130,6 +132,29 @@ class Get:
             max_versions=self.max_versions,
             filter=self.filter,
         )
+
+
+def family_groups(
+    meta: TableMeta, s: Scan
+) -> list[tuple[tuple, list[str] | None]]:
+    """The scan's families grouped by read-view parameters (max_versions,
+    min_versions, ttl_seconds, keep_deleted_cells, time range — a per-family
+    range, setColumnFamilyTimeRange:347, overrides the scan's), each with
+    its family names, or None when one group reads the whole log."""
+    fams = meta.families
+    sel_fams = s.selected_families()
+    if sel_fams is not None:
+        fams = tuple(f for f in fams if f.name in sel_fams)
+    cf_tr = {f: (lo, hi) for f, lo, hi in (s.cf_time_range or ())}
+    groups: dict[tuple, list[str]] = {}
+    for fm in fams:
+        key = (
+            fm.max_versions, fm.min_versions, fm.ttl_seconds,
+            fm.keep_deleted_cells, cf_tr.get(fm.name, s.time_range),
+        )
+        groups.setdefault(key, []).append(fm.name)
+    whole = len(groups) == 1 and s.families is None
+    return [(key, None if whole else names) for key, names in groups.items()]
 
 
 class Table:
@@ -472,28 +497,9 @@ class Table:
             # raw scans skip the matcher; the filter still applies per cell
             df = df.where(cell_pred)
             cell_pred = None
-        fams = self.meta.families
-        sel_fams = s.selected_families()
-        if sel_fams is not None:
-            fams = tuple(f for f in fams if f.name in sel_fams)
-        # per-family time ranges (setColumnFamilyTimeRange:347) override the
-        # scan-wide range for that family; families sharing identical
-        # (version/TTL/KDC/time-range) semantics still share one matcher pass
-        cf_tr = {f: (lo, hi) for f, lo, hi in (s.cf_time_range or ())}
-        groups: dict[tuple, list[FamilyMeta]] = {}
-        for fm in fams:
-            eff_tr = cf_tr.get(fm.name, s.time_range)
-            key = (
-                fm.max_versions, fm.min_versions, fm.ttl_seconds,
-                fm.keep_deleted_cells, eff_tr,
-            )
-            groups.setdefault(key, []).append(fm)
-        known = [fm.name for fm in fams]
         outs = []
-        for (maxv, minv, ttl, kdc, eff_tr), members in groups.items():
-            sub = df
-            if len(groups) > 1 or s.families is not None:
-                sub = df.where(F.col("family").isin([m.name for m in members]))
+        for (maxv, minv, ttl, kdc, eff_tr), names in family_groups(self.meta, s):
+            sub = df if names is None else df.where(F.col("family").isin(names))
             # raw ignores the FAMILY cap but honors the scan's
             # (testRawScanRespectsVersions: raw + setMaxVersions() shows
             # versions past the family limit — they exist until compaction)
@@ -536,55 +542,32 @@ class Table:
     def _read_view_clean(self, df: DataFrame, s: Scan) -> DataFrame:
         """Fast path for a clean log (single-version, tombstone-free —
         TableMeta.clean_log): no version-limit aggregation, no tombstone
-        joins, no shuffle. A full scan stays one codegen'd stage over the
+        masking, no shuffle. A full scan stays one codegen'd stage over the
         parquet files. The HBase analog: ScanQueryMatcher skips delete
-        tracking when no store has delete markers."""
+        tracking when no store has delete markers. Each family group
+        (:func:`family_groups`) applies read_view.retain and its time range
+        as row-local predicates over the one scan."""
+        groups = family_groups(self.meta, s)
         out = df.where(F.col("type") == TYPE_PUT)
-        fams = self.meta.families
-        if s.families is not None:
-            fams = tuple(f for f in fams if f.name in s.families)
-        # TTL with min_versions==0 is a plain ts filter; with min_versions>0
-        # the single existing version is the newest and always survives.
-        ttl_fams = [
-            f for f in fams if f.ttl_seconds != TTL_FOREVER and f.min_versions == 0
-        ]
-        has_cell_ttl = "ttl_ms" in df.columns
-        if ttl_fams or has_cell_ttl:
-            import time as _time
-
-            now = self._now_ms if self._now_ms is not None else int(
-                _time.time() * 1000
+        if not groups or groups[0][1] is not None:
+            out = out.where(
+                F.col("family").isin([n for _key, names in groups for n in names])
             )
-            cond = F.lit(True)
-            for fm in ttl_fams:
-                floor = now - fm.ttl_seconds * 1000
-                cond = cond & (
-                    (F.col("family") != fm.name) | (F.col("ts") >= floor)
-                )
-            if has_cell_ttl:
-                # per-cell TTL tags apply on the fast path too
-                cond = cond & (
-                    F.col("ttl_ms").isNull()
-                    | (F.lit(now) - F.col("ts") < F.col("ttl_ms"))
-                )
-            out = out.where(cond)
-        cf_tr = {f: (lo, hi) for f, lo, hi in (s.cf_time_range or ())}
-        if s.time_range is not None or cf_tr:
-            cond = F.lit(True)
-            if s.time_range is not None:
-                lo, hi = s.time_range
-                in_overridden = (
-                    F.col("family").isin(list(cf_tr)) if cf_tr else F.lit(False)
-                )
-                cond = cond & (
-                    in_overridden | ((F.col("ts") >= lo) & (F.col("ts") < hi))
-                )
-            for fam, (lo, hi) in cf_tr.items():
-                cond = cond & (
-                    (F.col("family") != fam)
-                    | ((F.col("ts") >= lo) & (F.col("ts") < hi))
-                )
-            out = out.where(cond)
+        for (_maxv, minv, ttl, _kdc, tr), names in groups:
+            scope = names if len(groups) > 1 else None
+            out = retain(
+                out,
+                min_versions=minv,
+                ttl_seconds=ttl,
+                now_ms=self._now_ms,
+                single_version=True,
+                families=scope,
+            )
+            if tr is not None:
+                in_range = (F.col("ts") >= tr[0]) & (F.col("ts") < tr[1])
+                if scope is not None:
+                    in_range = ~F.col("family").isin(scope) | in_range
+                out = out.where(in_range)
         return out.select(*CELL_COLUMNS)
 
     def get(self, g: Get | bytes, **kw) -> DataFrame:
@@ -645,11 +628,6 @@ class Table:
         return kv_encoder.cells_to_table(self.scan(), columns, family=family)
 
     # ----------------------------------------------------------------- write
-    def _now(self) -> int:
-        import time
-
-        return self._now_ms if self._now_ms is not None else int(time.time() * 1000)
-
     def put(self, new_cells: DataFrame) -> "Table":
         new_cells = Observers.apply(self.observers.pre_mutate, new_cells)
         out = self._with(mut.put_cells(self.cells, new_cells))
@@ -665,7 +643,7 @@ class Table:
             # Put(row, ts) timestamp check (TestFromClientSide.java:5322)
             raise ValueError("negative timestamps are not allowed")
         cells = kv_encoder.table_to_cells(
-            df, key_cols, family=family, ts=ts if ts is not None else self._now(), seq=seq
+            df, key_cols, family=family, ts=ts if ts is not None else clock(self._now_ms), seq=seq
         )
         return self.put(cells)
 
@@ -677,7 +655,7 @@ class Table:
         if "batch_seq" not in d.columns:
             d = d.withColumn("batch_seq", F.lit(0))
         tombstones = Observers.apply(
-            self.observers.pre_mutate, mut.mutations_to_cells(d, now_ms=self._now())
+            self.observers.pre_mutate, mut.mutations_to_cells(d, now_ms=clock(self._now_ms))
         )
         out = self._with(mut.put_cells(self.cells, tombstones))
         # postDelete analog (RegionObserver.java:592)
@@ -694,7 +672,7 @@ class Table:
             self.cells,
             increments,
             view=self._rmw_view(time_range),
-            now_ms=self._now(),
+            now_ms=clock(self._now_ms),
             codec=codec,
         )
         # postIncrement analog (RegionObserver.java:772): each hook may
@@ -709,7 +687,7 @@ class Table:
             self.cells,
             appends,
             view=self._rmw_view(time_range),
-            now_ms=self._now(),
+            now_ms=clock(self._now_ms),
         )
         # postAppend analog (RegionObserver.java:887) — chained Result
         # rewrite, same contract as post_increment
@@ -718,7 +696,7 @@ class Table:
 
     def check_and_mutate(self, mutations: DataFrame):
         new_cells, verdicts = mut.check_and_mutate(
-            self.cells, mutations, view=self._rmw_view(), now_ms=self._now()
+            self.cells, mutations, view=self._rmw_view(), now_ms=clock(self._now_ms)
         )
         return self._with(new_cells), verdicts
 
@@ -731,12 +709,12 @@ class Table:
             groups,
             mutations,
             view=self._rmw_view(),
-            now_ms=self._now(),
+            now_ms=clock(self._now_ms),
         )
         return self._with(new_cells), verdicts
 
     def mutate_row(self, mutations: DataFrame) -> "Table":
-        committed = mut.mutations_to_cells(mutations, now_ms=self._now())
+        committed = mut.mutations_to_cells(mutations, now_ms=clock(self._now_ms))
         out = self._with(mut.put_cells(self.cells, committed))
         # postBatchMutate analog for the atomic RowMutations group
         # (RegionObserver.java:637)
@@ -748,7 +726,7 @@ class Table:
         (MultiRowMutationEndpoint.java:84): atomic multi-ROW groups,
         each valid only if confined to one region of ``regions``."""
         new_cells, verdicts = mut.mutate_rows(
-            self.cells, mutations, regions, now_ms=self._now()
+            self.cells, mutations, regions, now_ms=clock(self._now_ms)
         )
         return self._with(new_cells), verdicts
 
@@ -758,7 +736,7 @@ class Table:
                 self.cells,
                 mutations,
                 view=self._rmw_view(),
-                now_ms=self._now(),
+                now_ms=clock(self._now_ms),
                 codec=codec,
             )
         )

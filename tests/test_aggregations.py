@@ -100,15 +100,23 @@ def test_median_approx_bounded_contract(lineitem):
 
 
 def test_exact_median_partition_walk_matches_percentile(spark):
-    """The r14 two-phase exact median (no single-node sort buffer) is
+    """The two-phase exact median (no single-node sort buffer) is
     value-identical to Catalyst's percentile(v, 0.5) across the
     interpolation cases: even/odd N, duplicates, single value, nulls,
     empty input."""
     from pyspark.sql import functions as F
 
-    from hbase_1_3_0_spark.operators.aggregations import (
-        _exact_median_partition_walk,
-    )
+    def cells(data):
+        return spark.createDataFrame(
+            [
+                (b"r%03d" % i, "d", b"v", None if x is None else str(x).encode())
+                for i, x in enumerate(data)
+            ],
+            "row binary, family string, qualifier binary, value binary",
+        )
+
+    def exact(data, interpreter="double"):
+        return agg.median(cells(data), "d", b"v", interpreter=interpreter)
 
     cases = [
         [1.0, 2.0, 3.0, 4.0],          # even: interpolated 2.5
@@ -120,11 +128,9 @@ def test_exact_median_partition_walk_matches_percentile(spark):
     for data in cases:
         df = spark.createDataFrame([(x,) for x in data], "v double")
         want = df.agg(F.percentile("v", 0.5).alias("m")).first().m
-        got = _exact_median_partition_walk(df).first().median
+        got = exact(data).first().median
         assert got == want, (data, got, want)
-    empty = spark.createDataFrame([], "v double")
-    rows = _exact_median_partition_walk(empty).collect()
+    rows = exact([]).collect()
     assert len(rows) == 1 and rows[0].median is None
     # integral input interpolates in doubles, like percentile
-    dfl = spark.createDataFrame([(x,) for x in range(10)], "v bigint")
-    assert _exact_median_partition_walk(dfl).first().median == 4.5
+    assert exact(list(range(10)), "long").first().median == 4.5

@@ -2176,3 +2176,68 @@ def test_trainers_refuse_non_finite_vectors_before_iterating(spark, monkeypatch)
         for train in trainers:
             with pytest.raises(sim.NonFiniteVectorError, match="embedding"):
                 train()
+
+
+def _random_word_corpus(seed: int, n_docs: int) -> list[tuple[int, str]]:
+    """Random-word documents over a 2,000-word vocabulary, 40–120 words
+    each, plus exact copies of some (one in eleven documents)."""
+    import random
+
+    rnd = random.Random(seed)
+    vocab = [
+        "".join(rnd.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rnd.randrange(3, 9)))
+        for _ in range(2000)
+    ]
+    n_orig = n_docs * 10 // 11
+    docs = [
+        (i, " ".join(rnd.choice(vocab) for _ in range(rnd.randrange(40, 120))))
+        for i in range(n_orig)
+    ]
+    docs += [(n_orig + j, docs[rnd.randrange(n_orig)][1]) for j in range(n_docs - n_orig)]
+    return docs
+
+
+def test_minhash_estimates_unrelated_documents_apart(spark, tmp_path):
+    """Unrelated random-word documents share almost no 5-gram shingles, so
+    no pair of distinct texts may estimate a Jaccard of 0.8; the near-dup
+    stream (threshold 0.8) then keeps exactly one copy of every distinct
+    text. A near-monotone hash (the affine product never wrapping its
+    modulus) makes documents that share one low shingle agree on most
+    minima and kills distinct texts."""
+    from itertools import combinations
+
+    from hbase_1_3_0_spark.streaming import wal
+
+    docs = _random_word_corpus(201, 120)
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    sigs = {
+        r["_id"]: r["_sig"] for r in dedup.minhash_signatures(df).collect()
+    }
+    text = dict(docs)
+    close = [
+        (a, b)
+        for a, b in combinations(sorted(sigs), 2)
+        if text[a] != text[b]
+        and sum(x == y for x, y in zip(sigs[a], sigs[b])) / 64 >= 0.8
+    ]
+    assert close == []
+
+    src = tmp_path / "src"
+    src.mkdir()
+    third = -(-len(docs) // 3)
+    for b in range(3):
+        spark.createDataFrame(
+            docs[b * third:(b + 1) * third], "doc_id long, text string"
+        ).coalesce(1).write.parquet(str(tmp_path / f"b{b}"))
+        (part,) = (tmp_path / f"b{b}").glob("part-*.parquet")
+        part.rename(src / f"b{b}.parquet")
+    q = wal.neardup_ingest_stream(
+        spark, str(src),
+        out_dir=str(tmp_path / "out"), store_dir=str(tmp_path / "store"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        schema="doc_id long, text string",
+        threshold=0.8, max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
+    kept = [r.text for r in spark.read.parquet(str(tmp_path / "out")).collect()]
+    assert sorted(kept) == sorted(set(text.values()))

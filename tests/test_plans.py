@@ -72,6 +72,22 @@ def test_general_scan_shuffles_once_by_row(disk_table):
         assert inspect.pushes_down(df, "row"), f
 
 
+def test_read_view_forms_split_by_caller(disk_table):
+    """Both read-view forms stay (read_view.py "Scale notes"): the
+    MapReduce jobs over unclustered cells mask with the join form, which
+    plans no Window (AQE drops its marker joins on a marker-free log), and a
+    general Table scan masks with windows over its row-clustered cells,
+    which plans no join."""
+    from hbase_1_3_0_spark.operators import jobs
+
+    counted = jobs.row_counter(disk_table.cells)
+    assert "Window" not in inspect._executed_plan(counted)
+    assert "Join" in inspect._executed_plan(counted)
+    scan = Table(TableMeta(name="c3"), disk_table.cells, now_ms=1).scan()
+    assert "Window" in inspect._executed_plan(scan)
+    assert "Join" not in inspect._executed_plan(scan)
+
+
 def test_general_while_match_shuffles_cells_once(disk_table):
     """WhileMatch needs the first failing cell of the whole range: a
     scalar subquery over the same clustered cells, whose exchange AQE

@@ -9,13 +9,14 @@ generates mutation batches and the Spark read view must agree cell-for-cell.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tests._prop_budget import ex
 
 from hbase_1_3_0_spark.cells import (
     CELL_SCHEMA,
+    TTL_FOREVER,
     TYPE_DELETE_COLUMN,
     TYPE_DELETE_FAMILY,
     TYPE_DELETE_FAMILY_VERSION,
@@ -162,28 +163,100 @@ def test_increment_total_equals_sum_of_deltas(spark, deltas):
     assert total == sum(d for _, d in deltas)
 
 
-@settings(max_examples=ex(15), deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(batch=batch_st)
-def test_compaction_preserves_visible_view(spark, batch):
+#: retention logs: a table clock, timestamps on both sides of a 1 s family
+#: TTL floor (999_000) and optional ``ttl_ms`` cell tags
+RET_NOW = 1_000_000
+ret_cell_st = st.tuples(
+    st.sampled_from(ROWS),
+    st.sampled_from(QUALS),
+    st.sampled_from([998_000, 998_500, 999_000, 999_500, 999_900]),  # ts
+    st.sampled_from(TYPES),
+    st.integers(min_value=0, max_value=3),  # seq: same-ts re-puts
+    st.sampled_from([None, 50, 700, 5_000]),  # ttl_ms
+)
+
+
+@settings(max_examples=ex(30), deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    batch=st.lists(ret_cell_st, min_size=1, max_size=25),
+    kdc=st.sampled_from(["FALSE", "TRUE", "TTL"]),
+    max_versions=st.integers(min_value=1, max_value=3),
+    min_versions=st.integers(min_value=0, max_value=2),
+    ttl_seconds=st.sampled_from([TTL_FOREVER, 1]),
+    tagged=st.booleans(),
+)
+# one column: A@100 (seq 0), its same-ts re-put B@100 (seq 1), C@50 —
+# the re-put takes no min_versions slot in either view
+@example(
+    batch=[
+        (b"r1", b"a", 100, TYPE_PUT, 0, None),
+        (b"r1", b"a", 100, TYPE_PUT, 1, None),
+        (b"r1", b"a", 50, TYPE_PUT, 0, None),
+    ],
+    kdc="TRUE", max_versions=3, min_versions=2, ttl_seconds=1, tagged=False,
+)
+# an expired ttl_ms tag inside the min_versions floor
+@example(
+    batch=[(b"r1", b"a", 900, TYPE_PUT, 0, 10)],
+    kdc="TRUE", max_versions=1, min_versions=1, ttl_seconds=TTL_FOREVER,
+    tagged=True,
+)
+# KEEP_DELETED_CELLS=TTL: a marker below the TTL floor masks the put that
+# the min_versions floor would otherwise keep
+@example(
+    batch=[
+        (b"r1", b"a", 998_000, TYPE_PUT, 0, None),
+        (b"r1", b"a", 998_500, TYPE_DELETE_COLUMN, 0, None),
+    ],
+    kdc="TTL", max_versions=1, min_versions=1, ttl_seconds=1, tagged=False,
+)
+def test_compaction_preserves_visible_view(
+    spark, batch, kdc, max_versions, min_versions, ttl_seconds, tagged
+):
     """compact(log) then read_view == read_view(log): GC must never change
-    what a scan sees (the major-compaction correctness law)."""
+    what a scan sees (the major-compaction correctness law), for every
+    KEEP_DELETED_CELLS mode, version limit, min_versions floor, family TTL
+    and ttl_ms tag. A KEEP_DELETED_CELLS compaction retains the markers it
+    keeps and the puts they mask, and a retained put counts toward the
+    versions whether masked or not (the reference's compaction matcher does
+    not track those markers), so those logs hold only the markers it
+    applies: none under TRUE, the ones below the TTL floor under TTL."""
     from hbase_1_3_0_spark.operators.jobs import compact
 
+    floor = RET_NOW - ttl_seconds * 1000
     seen = {}
     for c in batch:
-        seen[(c[0], c[1], c[2], c[3], c[4])] = c
-    df = _to_df(spark, list(seen.values()))
+        applied = kdc == "FALSE" or (
+            kdc == "TTL" and ttl_seconds != TTL_FOREVER and c[2] < floor
+        )
+        if c[3] == TYPE_PUT or applied:
+            seen[c[:5]] = c
+    if not seen:
+        return
+    df = spark.createDataFrame(
+        [
+            (row, "d", qual, ts, typ, f"{ts}:{seq}".encode(), seq, ttl)
+            for row, qual, ts, typ, seq, ttl in seen.values()
+        ],
+        "row binary, family string, qualifier binary, ts long, type int, "
+        "value binary, seq long, ttl_ms long",
+    )
+    if not tagged:
+        df = df.drop("ttl_ms")
+    family = dict(
+        max_versions=max_versions,
+        min_versions=min_versions,
+        ttl_seconds=ttl_seconds,
+        keep_deleted_cells=kdc,
+    )
 
-    before = {
-        (bytes(r["row"]), bytes(r["qualifier"]), r["ts"], r["seq"])
-        for r in read_view(df, max_versions=1).collect()
-    }
-    compacted = compact(df, max_versions=1, now_ms=1000)
-    after = {
-        (bytes(r["row"]), bytes(r["qualifier"]), r["ts"], r["seq"])
-        for r in read_view(compacted, max_versions=1).collect()
-    }
-    assert before == after
+    def visible(cells):
+        return {
+            (bytes(r["row"]), bytes(r["qualifier"]), r["ts"], r["seq"])
+            for r in read_view(cells, now_ms=RET_NOW, **family).collect()
+        }
+
+    assert visible(compact(df, now_ms=RET_NOW, **family)) == visible(df)
 
 
 def test_binary_row_order_is_unsigned_lexicographic(spark):

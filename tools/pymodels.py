@@ -118,14 +118,14 @@ def minhash_pairs_model(
 ) -> tuple[list[str], list[tuple]]:
     """Expected output of q_minhash_pairs (pair_mode='all'): LSH band
     candidates verified by exact shingle Jaccard."""
-    mersenne = (1 << 61) - 1
+    mersenne = (1 << 31) - 1
     rng = random.Random(seed)
     a = np.array(
-        [rng.randrange(1, mersenne) % (1 << 31) for _ in range(num_hashes)],
+        [rng.randrange(1, mersenne) for _ in range(num_hashes)],
         dtype=np.uint64,
     )
     b = np.array(
-        [rng.randrange(0, mersenne) % (1 << 31) for _ in range(num_hashes)],
+        [rng.randrange(0, mersenne) for _ in range(num_hashes)],
         dtype=np.uint64,
     )
     docs = _load_docs(sf_dir)
@@ -406,14 +406,14 @@ def neardup_ingest_model(
     minhash_pairs_model."""
     import duckdb
 
-    mersenne = (1 << 61) - 1
+    mersenne = (1 << 31) - 1
     rng = random.Random(seed)
     a = np.array(
-        [rng.randrange(1, mersenne) % (1 << 31) for _ in range(num_hashes)],
+        [rng.randrange(1, mersenne) for _ in range(num_hashes)],
         dtype=np.uint64,
     )
     b = np.array(
-        [rng.randrange(0, mersenne) % (1 << 31) for _ in range(num_hashes)],
+        [rng.randrange(0, mersenne) for _ in range(num_hashes)],
         dtype=np.uint64,
     )
     con = duckdb.connect()
