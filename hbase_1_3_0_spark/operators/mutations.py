@@ -34,28 +34,37 @@ increment-append ``new_vals``) is local-checkpointed lazily
 Table's cells share ONE computation, and a chain of RMW calls plans in
 constant depth — the memstore analog. Each such checkpoint is a few rows, one per RMW call,
 held in the block manager while a frame built on it is reachable (at most
-for the session). Computed or larger mutation frames keep the general
+for the session). Larger or computed mutation frames take the general
 path: a broadcast semi join of the key set against the log, after which
 only the touched rows are clustered by row (one exchange) for the read
 view's window forms, so the 100 TB cell log is never shuffled to apply a
 batch. Either way the pruning is :func:`read_view.prune_rows`, the one a
 keyed Table read uses.
 
-Engagement without a job: deciding the path needs the frame's rows (its
-row keys and their count). For PySpark's own ``createDataFrame(list)``
-lineage the driver already holds them, so :func:`small_key_frame` reads
-them there, with no Spark job, as the reference reads an Increment's
-request without any distributed step. It does so only where it can prove
-the lineage: a bare LogicalRDD over exactly one PythonRDD over a
+Driver lists enter as LocalRelations: every ``Table`` write entry that
+takes a frame (put, delete, mutate_row, batch, check_and_mutate_row,
+mutate_rows, put_wide, BufferedMutator.mutate) and :func:`small_key_frame`
+pass it through :func:`driver_list`. For PySpark's own
+``createDataFrame(list)`` lineage the driver already holds the rows, so
+they are read there, with no Spark job — as the reference ships a client's
+batch to the region server once, in one multi RPC — and rebuilt as a
+LocalRelation, whatever the path: a plan over the batch then scans a local
+table, where a Python-backed frame re-runs a Python worker on each of its
+partitions for every leaf over it. The rows are read only where the
+lineage is proven: a bare LogicalRDD over exactly one PythonRDD over a
 ParallelCollectionRDD, flat-typed columns, no broadcast variable, and a
 Python function that is PySpark's identity re-serialisation (compared by
 code object with the installed ``RDD.map`` and ``RDD._reserialize``). A
 ``createDataFrame(sc.parallelize(rows).map(f))`` frame has the same JVM
 chain; without the proof its rows would read as they were before ``f``.
-Every other driver frame (a projection or filter over the list, a plain
-or mapped RDD, a timestamp or nested column, a pandas/Arrow local
-relation, Spark Connect, any exception on the way) reads its rows with
-``take(limit + 1)``, as before.
+The read stops, and the frame is kept as it is, once the pickled batches'
+bytes pass ``spark.sql.autoBroadcastJoinThreshold`` (the bound the
+small-key path applies; a disabled threshold disables both). Every other
+driver frame (a projection or filter over the list, a plain or mapped RDD,
+a timestamp or nested column, a pandas/Arrow local relation, Spark
+Connect, any exception on the way) keeps its frame there;
+:func:`small_key_frame` reads its rows with ``take(limit + 1)`` and rebuilds
+a flat-typed one that takes the small-key path from those rows, as before.
 
 Plan building: the CAS predicate (:data:`_CHECK_PASSES`) and the
 mutation-to-cell projection are each one parsed SQL expression
@@ -84,6 +93,7 @@ from hbase_1_3_0_spark.cells import (
 from hbase_1_3_0_spark.functions import codecs
 from hbase_1_3_0_spark.operators import security
 from hbase_1_3_0_spark.operators.read_view import (
+    broadcast_threshold,
     local_lookup,
     prune_rows,
     # not called (RMW ops read ``view``); perfbench/layers.py wraps it
@@ -156,16 +166,21 @@ _NARROW_NODES = frozenset({"Project", "Filter"})
 
 #: column types a collect() + Arrow rebuild returns unchanged (a timestamp,
 #: for one, comes back as a naive local-time datetime), and the only ones
-#: whose rows are read from the driver without a job (:func:`_driver_rows`)
+#: whose rows are read from the driver without a job (:func:`driver_list`)
 _FLAT_TYPES = (
     T.BinaryType, T.StringType, T.LongType, T.IntegerType, T.BooleanType
 )
 
 
+def _flat(schema: T.StructType) -> bool:
+    return all(isinstance(f.dataType, _FLAT_TYPES) for f in schema)
+
+
 def _driver_source(plan) -> tuple[bool, tuple | None]:
-    """One walk of a mutation frame's optimized plan: ``(driver data,
-    source)``. Driver data is a local relation or a one-to-one RDD chain
-    down to a ParallelCollectionRDD, under projections and filters only.
+    """One walk of a mutation frame's plan (analyzed or optimized):
+    ``(driver data, source)``. Driver data is a local relation or a
+    one-to-one RDD chain down to a ParallelCollectionRDD, under
+    projections and filters only.
     ``source`` is the ``(PythonRDD, ParallelCollectionRDD)`` pair when the
     plan is a bare LogicalRDD whose chain holds exactly one PythonRDD,
     directly above the ParallelCollectionRDD — the JVM chain
@@ -241,15 +256,16 @@ def _batch_loader(python_rdd) -> Callable[[bytes], object] | None:
     return batches.serializer.loads
 
 
-def _driver_rows(source: tuple, schema: T.StructType, limit: int) -> list | None:
-    """The first ``limit + 1`` rows of a proven ``createDataFrame(list)``
-    frame (:func:`_driver_source`), read on the driver without a job: the
+def _list_rows(source: tuple, schema: T.StructType, max_bytes: int) -> list | None:
+    """Every row of a proven ``createDataFrame(list)`` frame
+    (:func:`_driver_source`), read on the driver without a job: the
     ParallelCollectionRDD holds the list as pickled batches of the rows'
     internal form (its ``data``, which its partitions slice in order; read
     whole, the round trips do not grow with the partition count). None
-    when the function is not the identity (:func:`_batch_loader`) or
-    anything fails. The caller has checked that every column is
-    flat-typed (:data:`_FLAT_TYPES`)."""
+    once the batches' bytes pass ``max_bytes`` (so a negative bound reads
+    nothing), when the function is not the identity
+    (:func:`_batch_loader`), or when anything fails. The caller has
+    checked that every column is flat-typed (:data:`_FLAT_TYPES`)."""
     python_rdd, parallel = source
     try:
         load = _batch_loader(python_rdd)
@@ -257,22 +273,26 @@ def _driver_rows(source: tuple, schema: T.StructType, limit: int) -> list | None
             return None
         data = _private(parallel, "data")
         rows: list = []
+        size = 0
         for i in range(data.length()):
-            batch = load(data.apply(i))
+            blob = data.apply(i)
+            size += len(blob)
+            if size > max_bytes:
+                return None
+            batch = load(blob)
             if type(batch) is not list:
                 return None
             rows += map(schema.fromInternal, batch)
-            if len(rows) > limit:
-                return rows[: limit + 1]
-        return rows
+        return rows if size <= max_bytes else None
     except Exception:
         return None
 
 
 def local_relation(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
     """``rows`` as a LocalRelation: one Arrow batch handed to the JVM, so
-    plans over it run no Python worker (a ``createDataFrame(list)`` frame
-    re-runs one per partition on every action)."""
+    plans over it run no Python worker and no job (a
+    ``createDataFrame(list)`` frame re-runs a Python worker on each of its
+    partitions for every plan leaf over it, on every action)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -284,6 +304,35 @@ def local_relation(spark: SparkSession, rows: list, schema: T.StructType) -> Dat
     return spark.createDataFrame(table, schema)
 
 
+def driver_list(frame: DataFrame) -> tuple[DataFrame, list | None]:
+    """The one entry rule for driver-list frames: every ``Table`` write
+    entry that takes a frame, and :func:`small_key_frame`, pass it here.
+
+    When ``frame`` is a proven ``createDataFrame(list)`` of flat-typed
+    columns (:func:`_driver_source`, :func:`_batch_loader`), all its pickled
+    batches are read on the driver, with no job, and ``(LocalRelation,
+    rows)`` is returned (:func:`local_relation`): the write path's plans
+    then scan a local table instead of re-running a Python worker on each
+    partition for every leaf over the list — the reference ships a
+    client's batch to the server once. Otherwise ``(frame, None)``: any
+    other frame, and a list whose batches' bytes pass
+    read_view.broadcast_threshold (the bound small_key_set applies; a
+    disabled threshold disables the rebuild). The proof walks the
+    analyzed plan, which every frame already holds, so any other frame
+    costs a few py4j calls and no optimization."""
+    _driver, source = _driver_source(frame._jdf.queryExecution().analyzed())
+    if source is None:
+        return frame, None
+    schema = frame.schema
+    if not _flat(schema):
+        return frame, None
+    spark = frame.sparkSession
+    rows = _list_rows(source, schema, broadcast_threshold(spark))
+    if rows is None:
+        return frame, None
+    return local_relation(spark, rows, schema), rows
+
+
 def small_key_frame(frame: DataFrame) -> tuple[DataFrame, list[bytes] | None]:
     """The small-key path's engagement rule for a mutation frame.
 
@@ -291,42 +340,39 @@ def small_key_frame(frame: DataFrame) -> tuple[DataFrame, list[bytes] | None]:
     relation or a parallelized driver list, under projections and filters
     only — of at most read_view.small_key_limit rows, and its row-key set
     passes read_view.small_key_set. Returns ``(one-partition frame,
-    keys)``; otherwise ``(frame, None)``: computed or larger frames keep
-    the general path untouched.
+    keys)``; otherwise ``(frame, None)``, and the general path runs.
 
-    Reading the rows runs no job for PySpark's own ``createDataFrame(list)``
-    lineage of flat-typed columns (:func:`_driver_source`,
-    :func:`_driver_rows`): a bare LogicalRDD over one PythonRDD over a
-    ParallelCollectionRDD, whose Python function is proven to be the
-    identity re-serialisation by its code objects. The rows are then
-    unpickled from the ParallelCollectionRDD's driver-side batches, at
-    most ``limit + 1`` of them. Every other driver frame reads them with
-    ``take(limit + 1)``: a projection or filter over the list, a mapped or
-    plain RDD, a timestamp or nested column, a pandas/Arrow local
-    relation, a broadcast command, Spark Connect, or any exception on the
-    way.
-
-    A parallelized list of flat-typed columns is rebuilt from its rows as
-    a LocalRelation, so later plans over it run no Python worker; other
-    frames are coalesced as they are."""
-    plan = frame._jdf.queryExecution().optimizedPlan()
-    driver, source = _driver_source(plan)
-    if not driver:
-        return frame, None
+    The frame enters through :func:`driver_list` first, so a proven
+    ``createDataFrame(list)`` of flat-typed columns is decided from the
+    rows that rebuild already read, with no job, and comes back as its
+    LocalRelation on either path. Every other driver frame reads its rows
+    with ``take(limit + 1)``: a projection or filter over the list, a
+    mapped or plain RDD, a timestamp or nested column, a pandas/Arrow
+    local relation, a list past the byte bound, a broadcast command, Spark
+    Connect, or any exception on the way; a flat-typed one that passes is
+    rebuilt from those rows as a LocalRelation. A disabled broadcast
+    threshold turns the path off before any row is read."""
     spark = frame.sparkSession
+    if broadcast_threshold(spark) < 0:
+        return frame, None
     limit = small_key_limit(spark)
-    schema = frame.schema
-    flat = all(isinstance(f.dataType, _FLAT_TYPES) for f in schema)
-    rows = _driver_rows(source, schema, limit) if source and flat else None
+    frame, rows = driver_list(frame)
+    rebuild = False
     if rows is None:
+        plan = frame._jdf.queryExecution().optimizedPlan()
+        if not _driver_source(plan)[0]:
+            return frame, None
         rows = frame.take(limit + 1)
+        rebuild = (
+            plan.getClass().getSimpleName() != "LocalRelation" and _flat(frame.schema)
+        )
     if len(rows) > limit:
         return frame, None
     keys = small_key_set(spark, (r["row"] for r in rows))
     if keys is None:
         return frame, None
-    if flat and plan.getClass().getSimpleName() != "LocalRelation":
-        frame = local_relation(spark, rows, schema)
+    if rebuild:
+        frame = local_relation(spark, rows, frame.schema)
     return frame.coalesce(1), keys
 
 

@@ -109,18 +109,25 @@ def small_key_limit(spark: SparkSession) -> int:
     return spark._jsparkSession.sessionState().conf().parquetFilterPushDownInFilterThreshold()
 
 
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (-1: disabled):
+    the bound on driver-side data that the small-key path and the
+    driver-list rebuild (``mutations.driver_list``) take."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
 def small_key_set(
     spark: SparkSession, keys: Iterable[bytes | None]
 ) -> list[bytes] | None:
     """The small-key path's engagement rule: the sorted distinct keys when
     there are at most :func:`small_key_limit` of them and their estimated
-    size (key bytes + 8 per key) is under
-    ``spark.sql.autoBroadcastJoinThreshold``, else None (a disabled
-    threshold disables the path). Null keys match no row and drop out."""
+    size (key bytes + 8 per key) is under :func:`broadcast_threshold`,
+    else None (a disabled threshold disables the path). Null keys match no
+    row and drop out."""
     uniq = sorted({bytes(k) for k in keys if k is not None})
     if len(uniq) > small_key_limit(spark):
         return None
-    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    threshold = broadcast_threshold(spark)
     return uniq if sum(len(k) + 8 for k in uniq) < threshold else None
 
 

@@ -210,27 +210,19 @@ def minhash_signatures(
     h_i(s) = (a_i * x(s) + b_i) mod p with x(s) = xxhash64(shingle) folded
     to [0, 2^31); products stay within long range. Executed as K min()
     aggregates in ONE hash aggregation over the exploded shingle rows —
-    all whole-stage-codegen, one shuffle, map-side combined.
+    all whole-stage-codegen, one shuffle, map-side combined. The K
+    aggregates and their array are one parsed SQL expression: one py4j
+    round trip, where K ``F.min(F.pmod(...))`` Columns were thousands.
     """
     a, b = _hash_params(num_hashes, seed)
-    rows = _shingle_hash_rows(df, text_col, id_col, n).withColumn(
-        "_c", F.pmod(F.col("_h"), F.lit(1 << 31))
-    )
-    aggs = [
-        F.min(
-            F.pmod(
-                F.lit(a[i]) * F.col("_c") + F.lit(b[i]),
-                F.lit(_MERSENNE_P),
-            )
-        ).alias(f"_m{i}")
+    mins = ", ".join(
+        f"min(pmod({a[i]} * pmod(_h, {1 << 31}) + {b[i]}, {_MERSENNE_P}))"
         for i in range(num_hashes)
-    ]
+    )
     return (
-        rows.groupBy("_id")
-        .agg(*aggs)
-        .select(
-            "_id", F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("_sig")
-        )
+        _shingle_hash_rows(df, text_col, id_col, n)
+        .groupBy("_id")
+        .agg(F.expr(f"array({mins})").alias("_sig"))
     )
 
 

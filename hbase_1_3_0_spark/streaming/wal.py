@@ -1040,11 +1040,15 @@ def _neardup_commit_batch(
     )
 
     store = _load_ingest_store(spark, store_dir, batch_id)
-    # lazy localCheckpoint: materializes inside the FIRST action that
-    # reads it (the survivor write) instead of as its own eager job —
-    # one fewer scheduled job per micro-batch; every later consumer
-    # (store write, band write, both kill chains) reads the cached
-    # signature partitions exactly as before
+    # lazy localCheckpoint (eager=False). What runs when: the call plans
+    # the frame, and under AQE (the session default) planning runs the
+    # plan's shuffle-map stages as jobs right here — the shingle
+    # aggregation's exchange (1–2 jobs on a 67-document batch with AQE
+    # on, 0 with it off). Only the result stage, which fills the checkpoint
+    # blocks, waits for the FIRST action that reads the frame (the
+    # survivor write); eager=True would run it now as a job of its own.
+    # Every later consumer (store write, band write, both kill chains)
+    # reads the checkpointed signature partitions.
     sigs = minhash_signatures(
         batch_df.select(F.col(id_col), F.col(text_col)),
         text_col=text_col, id_col=id_col, n=n,
@@ -1155,7 +1159,10 @@ def _neardup_commit_batch(
         sigs, bands=bands, num_hashes=num_hashes, threshold=float(threshold)
     )
     kill = in_kill if kill is None else kill.unionByName(in_kill)
-    # lazy for the same one-job-fewer reason as the signature checkpoint
+    # lazy as the signature checkpoint is, with the same split: under AQE
+    # this call runs the anti join's query stages (the kill chains'
+    # shuffles and broadcasts) as jobs, 7–8 per micro-batch in the stream,
+    # and only the result stage waits for the survivor write below
     survivors = batch_df.join(
         kill.select(F.col("_id").alias(id_col)), id_col, "left_anti"
     ).localCheckpoint(eager=False)

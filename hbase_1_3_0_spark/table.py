@@ -229,6 +229,13 @@ class Table:
         # testRawScanWithColumns). Family selection stays allowed.
         if s.raw and s.columns is not None:
             raise ValueError("Cannot specify any column for a raw scan")
+        # a scan selecting only undeclared families is the reference's
+        # NoSuchColumnFamilyException, on the clean-log path too. Divergence:
+        # a selection mixing declared and undeclared families reads the
+        # declared ones' cells, where the reference throws as well.
+        sel = s.selected_families()
+        if sel and not sel & {f.name for f in self.meta.families}:
+            self.meta.family(min(sel))  # raises KeyError("no such column family")
         # negative timestamps rejected at the API surface (HTable
         # checkTimestamp / TestFromClientSide.java:5322 — data-embedded
         # cells may still carry them, the KeyValue backward-compat rule)
@@ -590,7 +597,8 @@ class Table:
             spark = self.cells.sparkSession
             keys = small_key_set(spark, rows)
             if keys is None:
-                keys = spark.createDataFrame(
+                keys = mut.local_relation(
+                    spark,
                     [(bytes(r),) for r in rows],
                     T.StructType([T.StructField("row", T.BinaryType())]),
                 )
@@ -628,7 +636,12 @@ class Table:
         return kv_encoder.cells_to_table(self.scan(), columns, family=family)
 
     # ----------------------------------------------------------------- write
+    # Every write entry that takes a frame passes it through
+    # mutations.driver_list: a createDataFrame(list) batch enters the write
+    # path as a LocalRelation (increment, append and check_and_mutate do so
+    # inside mutations.small_key_frame).
     def put(self, new_cells: DataFrame) -> "Table":
+        new_cells, _ = mut.driver_list(new_cells)
         new_cells = Observers.apply(self.observers.pre_mutate, new_cells)
         out = self._with(mut.put_cells(self.cells, new_cells))
         # postPut analog (RegionObserver.java:560): hooks observe the
@@ -642,6 +655,7 @@ class Table:
         if ts is not None and ts < 0:
             # Put(row, ts) timestamp check (TestFromClientSide.java:5322)
             raise ValueError("negative timestamps are not allowed")
+        df, _ = mut.driver_list(df)
         cells = kv_encoder.table_to_cells(
             df, key_cols, family=family, ts=ts if ts is not None else clock(self._now_ms), seq=seq
         )
@@ -649,7 +663,7 @@ class Table:
 
     def delete(self, deletes: DataFrame) -> "Table":
         """Append tombstones. ``deletes``: op/row/family/qualifier/ts[/batch_seq]."""
-        d = deletes
+        d, _ = mut.driver_list(deletes)
         if "value" not in d.columns:
             d = d.withColumn("value", F.lit(None).cast("binary"))
         if "batch_seq" not in d.columns:
@@ -706,14 +720,15 @@ class Table:
         atomic multi-op payload."""
         new_cells, verdicts = mut.check_and_mutate_row(
             self.cells,
-            groups,
-            mutations,
+            mut.driver_list(groups)[0],
+            mut.driver_list(mutations)[0],
             view=self._rmw_view(),
             now_ms=clock(self._now_ms),
         )
         return self._with(new_cells), verdicts
 
     def mutate_row(self, mutations: DataFrame) -> "Table":
+        mutations, _ = mut.driver_list(mutations)
         committed = mut.mutations_to_cells(mutations, now_ms=clock(self._now_ms))
         out = self._with(mut.put_cells(self.cells, committed))
         # postBatchMutate analog for the atomic RowMutations group
@@ -726,11 +741,15 @@ class Table:
         (MultiRowMutationEndpoint.java:84): atomic multi-ROW groups,
         each valid only if confined to one region of ``regions``."""
         new_cells, verdicts = mut.mutate_rows(
-            self.cells, mutations, regions, now_ms=clock(self._now_ms)
+            self.cells,
+            mut.driver_list(mutations)[0],
+            mut.driver_list(regions)[0],
+            now_ms=clock(self._now_ms),
         )
         return self._with(new_cells), verdicts
 
     def batch(self, mutations: DataFrame, codec: str = "be8") -> "Table":
+        mutations, _ = mut.driver_list(mutations)
         out = self._with(
             mut.apply_mutation_batch(
                 self.cells,
@@ -763,7 +782,7 @@ class BufferedMutator:
         self._flush_batches = flush_batches
 
     def mutate(self, cells: DataFrame) -> None:
-        self._buffer.append(cells)
+        self._buffer.append(mut.driver_list(cells)[0])
         if len(self._buffer) >= self._flush_batches:
             self.flush()
 

@@ -2241,3 +2241,18 @@ def test_minhash_estimates_unrelated_documents_apart(spark, tmp_path):
     q.awaitTermination(300)
     kept = [r.text for r in spark.read.parquet(str(tmp_path / "out")).collect()]
     assert sorted(kept) == sorted(set(text.values()))
+
+
+def test_minhash_signature_build_stays_within_py4j_budget(spark):
+    """Building the 64-hash signature plan sends a budgeted number of py4j
+    commands: the 64 min() aggregates and their array are one parsed SQL
+    expression, not 64 composed ``F.min(F.pmod(...))`` Columns (about
+    4,450 commands). The budget is the count reached plus about 25 %."""
+    from tests._small_key import py4j_calls
+
+    df = spark.createDataFrame(_random_word_corpus(7, 12), "doc_id long, text string")
+    dedup.minhash_signatures(df)
+    with py4j_calls(spark) as calls:
+        sig = dedup.minhash_signatures(df)
+    assert calls() <= 245  # reached: 195
+    assert sig.schema.simpleString() == "struct<_id:bigint,_sig:array<bigint>>"

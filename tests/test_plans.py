@@ -185,6 +185,35 @@ def test_chained_cas_plans_stay_flat(spark, disk_table):
     assert shapes[-1] == shapes[0]
 
 
+def test_list_batches_enter_the_write_path_as_local_relations(spark, disk_table):
+    """A chain shaped like a batched Engine.save (a put, then a delete,
+    then an increment, each a 150-row createDataFrame list) plans no RDD
+    leaf: every mutation batch is a LocalRelation
+    (mutations.driver_list), so no Python worker runs per partition per
+    leaf; the only other leaves are the parquet log's. The exchange count
+    is the one the Python-backed batches planned."""
+    t = _full_view(disk_table)
+    n = 150
+    t = t.put(spark.createDataFrame(
+        [(_k(i), "d", b"c_name", 5, 4, b"p%d" % i, 0) for i in range(n)],
+        "row binary, family string, qualifier binary, ts long, type int, "
+        "value binary, seq long",
+    ))
+    t = t.delete(spark.createDataFrame(
+        [("delete_column", _k(i + 200), "d", b"c_name", None) for i in range(n)],
+        "op string, row binary, family string, qualifier binary, ts long",
+    ))
+    t, results = t.increment(spark.createDataFrame(
+        [(_k(i + 400), "d", b"cnt", i) for i in range(n)],
+        "row binary, family string, qualifier binary, delta long",
+    ))
+    leaves = t.cells._jdf.queryExecution().optimizedPlan().collectLeaves()
+    names = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+    assert names == {"LocalRelation", "LogicalRelation"}
+    assert inspect.exchange_count(t.cells) == 9
+    assert results.count() == n
+
+
 def test_column_projection_prunes_parquet_read(disk_table):
     df = disk_table.scan().select("row", "qualifier")
     schemas = inspect.scan_read_schema(df)

@@ -298,3 +298,37 @@ def test_scan_metrics_counts(customer_table):
         Scan(start_row=key(10), stop_row=key(60), limit=3)
     ).first()
     assert (m3.rows_scanned, m3.rows_returned) == (exp_scanned, 3)
+
+
+@pytest.mark.parametrize("clean_log", [False, True])
+def test_scan_of_undeclared_families_raises(spark, clean_log):
+    """Selecting only families the table does not declare raises the
+    KeyError TableMeta.family raises (the reference's
+    NoSuchColumnFamilyException), before any plan is built, whether the
+    log is clean or not; by families or by columns."""
+    from hbase_1_3_0_spark.cells import CELL_SCHEMA, TYPE_PUT
+
+    cells = spark.createDataFrame([(b"r", "d", b"q", 1, TYPE_PUT, b"v", 0)], CELL_SCHEMA)
+    t = Table(TableMeta(name="t", clean_log=clean_log), cells, 5)
+    for kw in ({"families": ("zz",)}, {"columns": (("zz", b"q"),)}):
+        with pytest.raises(KeyError, match="no such column family: 'zz'"):
+            t.scan(**kw)
+    with pytest.raises(KeyError, match="no such column family"):
+        t.get(b"r", families=("zz", "zy"))
+    assert t.scan(families=("d",)).count() == 1
+
+
+@pytest.mark.parametrize("clean_log", [False, True])
+def test_scan_of_declared_and_undeclared_families_divergence(spark, clean_log):
+    """Known divergence: a selection mixing a declared family with an
+    undeclared one reads the declared family's cells, where the reference
+    throws NoSuchColumnFamilyException for the undeclared one."""
+    from hbase_1_3_0_spark.cells import CELL_SCHEMA, TYPE_PUT
+
+    cells = spark.createDataFrame(
+        [(b"r", "d", b"q", 1, TYPE_PUT, b"v", 0), (b"r", "zz", b"q", 1, TYPE_PUT, b"w", 0)],
+        CELL_SCHEMA,
+    )
+    t = Table(TableMeta(name="t", clean_log=clean_log), cells, 5)
+    got = [(r.family, bytes(r.value)) for r in t.scan(families=("d", "zz")).collect()]
+    assert got == [("d", b"v")]

@@ -368,7 +368,8 @@ def test_small_key_cas_keeps_payload_types(spark):
 def test_small_key_frame_reads_a_driver_list_without_a_job(spark):
     """A ``createDataFrame(list)`` frame's rows are read on the driver:
     deciding the path runs no Spark job, under the key limit (the rows
-    come back unchanged) and past it (the general path is kept)."""
+    come back unchanged, pinned) and past it (the general path gets the
+    same rows as a LocalRelation, so its plans run no Python worker)."""
     limit = small_key_limit(spark)
     for n in (1, limit, limit + 1, 150):
         rows = [(b"k%03d" % i, "a", b"n", i) for i in range(n)]
@@ -376,11 +377,13 @@ def test_small_key_frame_reads_a_driver_list_without_a_job(spark):
         with jobs_run(spark) as jobs:
             pinned, keys = small_key_frame(frame)
         assert jobs() == 0, n
+        assert pinned.collect() == frame.collect()
         if n <= limit:
             assert keys == [r[0] for r in rows]
-            assert pinned.collect() == frame.collect()
         else:
-            assert keys is None and pinned is frame
+            assert keys is None
+            plan = pinned._jdf.queryExecution().optimizedPlan()
+            assert plan.getClass().getSimpleName() == "LocalRelation", n
 
 
 def test_small_key_frame_falls_back_to_take_off_the_list_lineage(spark):
