@@ -38,9 +38,8 @@ from pyspark.sql import functions as F
 
 from hbase_1_3_0_spark.filters import ast
 from hbase_1_3_0_spark.functions import codecs
+from hbase_1_3_0_spark.operators.read_view import VERSION_INDEX
 
-#: ``semi(df, rows, anti)``: ``df`` LEFT SEMI (or ANTI) JOIN ``rows`` on row
-RowSemiJoin = Callable[[DataFrame, DataFrame, bool], DataFrame]
 
 def _w_row() -> Window:
     return Window.partitionBy("row")
@@ -403,7 +402,6 @@ def _multi_row_range_pred(ranges, col: Column | None = None) -> Column:
 def _scvf_multi_transform(
     fs: list[ast.SingleColumnValueFilter],
     single_version: bool = False,
-    verdict_source: DataFrame | None = None,
     combine: str = "and",
 ) -> Callable[[DataFrame], DataFrame]:
     """AND- or OR-composed SCVFs as ONE aggregation + ONE semi/anti-join.
@@ -422,36 +420,23 @@ def _scvf_multi_transform(
     computes without the full scan-on-row shuffle the window-predicate
     form pays.
 
-    This form serves UNCLUSTERED input (the MapReduce jobs' filters, a
-    clean-log scan) and SCVFs judged on a separate ``verdict_source``.
-    On unclustered input the window form would shuffle the ENTIRE scan by
-    row, and a per-filter join pays one shuffle of the big side per
-    filter. Here all tested columns reduce in a single groupBy over only
-    their cells (pushdown-friendly family/qualifier predicate), the
+    This form serves UNCLUSTERED input only: the MapReduce jobs' filters
+    and a clean-log scan. There the window form would shuffle the ENTIRE
+    scan by row, and a per-filter join pays one shuffle of the big side
+    per filter. Here all tested columns reduce in a single groupBy over
+    only their cells (pushdown-friendly family/qualifier predicate), the
     per-row verdict is the AND of each filter's verdict, and one join
     applies it — AQE broadcasts the row set when it is selective, so the
-    big side is often never shuffled. Input already clustered by row
-    takes the window form instead (``compile_filter(clustered=True)``):
-    there it costs no exchange, and a second branch of the scan would.
+    big side is often never shuffled. Input clustered by row judges SCVFs
+    as windows over ``row`` instead (:func:`compile_matcher`).
 
     All aggregates are plain int max() so the groupBy plans as a
     HashAggregate (a max-over-struct buffer would force a SortAggregate,
     whose generated sort-based code also JIT-compiles an order of magnitude
     slower). ``latest_version_only`` needs a per-column version rank, added
     as a row_number window over only the tested cells — and skipped
-    entirely when ``single_version`` says the scan's read view already
-    reduced every column to one version (the default scan).
-
-    ``verdict_source``: the MATCHER-VISIBLE cell stream to judge rows
-    from, when it is wider than the scanned frame. The reference runs
-    filterKeyValue inside ScanQueryMatcher BEFORE version counting
-    (ScanQueryMatcher.java match order: filter response precedes
-    columns.checkVersions), so an SCVF with latestVersionOnly=false
-    judges OLDER versions even on a maxVersions=1 scan — a row whose
-    newest value fails but whose older version passes is returned
-    (pinned to TestSingleColumnValueFilter.java:134-139). The verdict
-    aggregation then reads from this stream while the semi/anti join
-    still applies to the version-limited scan output.
+    entirely when ``single_version`` says the input carries one version
+    per column (a clean log, a default scan).
 
     Verdict per filter (SingleColumnValueFilter.java:73 semantics):
     column present -> compare (latest version only, or any version);
@@ -461,38 +446,25 @@ def _scvf_multi_transform(
         (F.col("family") == f.family) & (F.col("qualifier") == F.lit(f.qualifier))
         for f in fs
     ]
-    need_version_rank = (
-        verdict_source is not None or not single_version
-    ) and any(f.latest_version_only for f in fs)
+    need_version_rank = not single_version and any(
+        f.latest_version_only for f in fs
+    )
 
-    def t(
-        df: DataFrame,
-        base: DataFrame | None = None,
-        semi: RowSemiJoin | None = None,
-    ) -> DataFrame:
-        # The verdict stream, in precedence order: the scan's explicit
-        # matcher-visible stream (any-version SCVF), else the PRE-sibling-
-        # predicate frame. The reference consults SCVF filterKeyValue
-        # before every sibling in canonical member order, so a sibling
-        # cell predicate (ValueFilter etc.) must NOT hide the tested
-        # column's cells from the verdict — a row whose tested cell the
-        # sibling strips is still found-and-judged, not "missing"
-        # (caught by the r13 protocol walker on AND(OR(SCVF), ValueFilter)).
+    def t(df: DataFrame, base: DataFrame | None = None) -> DataFrame:
+        # The verdict stream is the PRE-sibling-predicate frame ``base``.
+        # The reference consults SCVF filterKeyValue before every sibling
+        # in canonical member order, so a sibling cell predicate
+        # (ValueFilter etc.) must NOT hide the tested column's cells from
+        # the verdict — a row whose tested cell the sibling strips is still
+        # found-and-judged, not "missing" (caught by the r13 protocol
+        # walker on AND(OR(SCVF), ValueFilter)).
         any_match = matches[0]
         for m in matches[1:]:
             any_match = any_match | m
-        src = verdict_source if verdict_source is not None else (
-            base if base is not None else df
-        )
-        tested = src.where(any_match)
+        tested = (base if base is not None else df).where(any_match)
         newest = F.lit(True)
         if need_version_rank:
-            rn = F.row_number().over(
-                Window.partitionBy("row", "family", "qualifier").orderBy(
-                    F.col("ts").desc(), F.col("seq").desc()
-                )
-            )
-            tested = tested.withColumn("_rn", rn)
+            tested = tested.withColumn("_rn", _newest_version_rank())
             newest = F.col("_rn") == 1
         aggs = []
         for i, (f, cm) in enumerate(zip(fs, matches)):
@@ -513,8 +485,7 @@ def _scvf_multi_transform(
                 verdict = v
             else:
                 verdict = (verdict | v) if combine == "or" else (verdict & v)
-        # Unclustered input (no ``semi``): the verdict row set goes
-        # behind its OWN exchange. AQE sizes a
+        # The verdict row set goes behind its OWN exchange. AQE sizes a
         # join's build side by its materialized shuffle stage, and
         # without this the stage it sees is the PRE-aggregate partials
         # of every tested cell (tens of MB at sf0.1 — over the adaptive
@@ -526,9 +497,7 @@ def _scvf_multi_transform(
         # boundary the materialized stats are the post-verdict row set
         # itself: small/selective -> AQE converts the join to broadcast
         # and the scanned side never shuffles; genuinely huge -> SMJ
-        # stands, paying one narrow row-set shuffle for the stats. On
-        # clustered input the caller's exchange-free ``semi`` replaces
-        # this staged join.
+        # stands, paying one narrow row-set shuffle for the stats.
         def _staged(rows: DataFrame) -> DataFrame:
             n = int(
                 rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -546,12 +515,9 @@ def _scvf_multi_transform(
         # absent rows pass -> anti join against the failing row set;
         # rows with none of the tested columns are excluded -> semi join
         rows = flags.where(~verdict if missing_passes else verdict).select("row")
-        if semi is not None:
-            out = semi(df, rows, missing_passes)
-        else:
-            out = df.join(
-                _staged(rows), "row", "left_anti" if missing_passes else "left_semi"
-            )
+        out = df.join(
+            _staged(rows), "row", "left_anti" if missing_passes else "left_semi"
+        )
         for f, cm in zip(fs, matches):
             if isinstance(f, ast.SingleColumnValueExcludeFilter):
                 out = out.where(~cm)
@@ -638,10 +604,17 @@ def _skip_code_pred(g: ast.Filter, reversed_scan: bool) -> Column:
     return inner.pred
 
 
-def _scvf_pred(f: ast.SingleColumnValueFilter) -> Column:
+def _scvf_pred(
+    f: ast.SingleColumnValueFilter, versions: int | None = None
+) -> Column:
+    """The SCVF verdict as a window over ``row``. ``versions``: an
+    any-version SCVF judges only the newest ``versions`` versions of its
+    column, by the version index ``_vi`` the input carries
+    (read_view.VERSION_INDEX); 1 judges the newest cell, as
+    latestVersionOnly=true does. None judges every cell of the input."""
     colmatch = (F.col("family") == f.family) & (F.col("qualifier") == F.lit(f.qualifier))
     exists = F.max(F.when(colmatch, F.lit(1)).otherwise(F.lit(0))).over(_w_row()) == 1
-    if f.latest_version_only:
+    if f.latest_version_only or versions == 1:
         # newest version's value via struct-max over one window pass:
         # max(struct(ts, seq, value)) == the (ts,seq)-greatest cell's struct.
         latest = F.max(
@@ -650,6 +623,8 @@ def _scvf_pred(f: ast.SingleColumnValueFilter) -> Column:
         matched = exists & compile_compare(latest["value"], f.op, f.comparator)
     else:
         per_cell = colmatch & compile_compare(F.col("value"), f.op, f.comparator)
+        if versions is not None:
+            per_cell = per_cell & (F.col("_vi") <= versions)
         matched = (
             F.max(F.when(per_cell, F.lit(1)).otherwise(F.lit(0))).over(_w_row()) == 1
         )
@@ -883,12 +858,94 @@ def is_cell_predicate(f: ast.Filter | None) -> bool:
     return type(f) in _CELL_PRED_TYPES
 
 
+@dataclass
+class Matcher:
+    """A scan filter split where ScanQueryMatcher judges it
+    (:func:`compile_matcher`): ``keep`` before the version quota, ``rest``
+    after it. ``version_index``: ``keep`` reads ``_vi``
+    (read_view.VERSION_INDEX)."""
+
+    keep: Column | None = None
+    rest: ast.Filter | None = None
+    version_index: bool = False
+
+    def judge(self, cells: DataFrame) -> DataFrame:
+        """The cells ``keep`` passes, its row verdicts read over all of
+        ``cells`` (clustered by row: the windows plan no exchange)."""
+        if self.keep is None:
+            return cells
+        if self.version_index:
+            cells = cells.selectExpr("*", f"{VERSION_INDEX} AS _vi")
+        keep = cells.withColumn("_keep", self.keep).where("_keep")
+        return keep.drop("_keep", "_vi")
+
+
+def _members(f: ast.Filter) -> list[ast.Filter]:
+    """The MUST_PASS_ALL members of ``f`` in order, nested lists flattened."""
+    if isinstance(f, ast.FilterList) and f.operator == "MUST_PASS_ALL":
+        return [m for x in f.filters for m in _members(x)]
+    return [f]
+
+
+def compile_matcher(
+    f: ast.Filter | None,
+    reversed_scan: bool = False,
+    versions: dict[str, int] | None = None,
+) -> Matcher:
+    """Split a scan filter at the version quota. ScanQueryMatcher runs the
+    filter before the column tracker counts versions (SQM:283-410), so a
+    newer version the filter rejects takes no version slot.
+
+    ``keep`` takes the members of ``f`` (a lone filter, or a MUST_PASS_ALL
+    list flattened) in order, up to the first order-dependent one:
+    - per-cell predicates (:func:`is_cell_predicate`);
+    - SCVF/SCVEF verdicts, alone or as a MUST_PASS_ONE list of plain SCVFs:
+      windows over ``row``, read over every visible cell before any sibling
+      predicate (canonical member order puts SCVFs first). A
+      latestVersionOnly=true SCVF judges the newest version of its column,
+      a latestVersionOnly=false one its newest ``versions[family]`` versions
+      (all of them for an unlisted family;
+      TestSingleColumnValueFilter.java:134-139).
+    That member and every later one are ``rest``: they judge the
+    version-limited cells with their own forms. The reference evaluates a
+    list's members lazily in member order (FilterList.java:260-276), so a
+    cell predicate after a stateful member sees only what that member saw."""
+    versions = versions or {}
+    keep, rest, version_index = None, [], False
+    members = _members(f) if f is not None else []
+    for i, m in enumerate(members):
+        scvfs = [m] if isinstance(m, ast.SingleColumnValueFilter) else []
+        if (
+            isinstance(m, ast.FilterList)
+            and m.operator == "MUST_PASS_ONE"
+            and m.filters
+            and all(type(x) is ast.SingleColumnValueFilter for x in m.filters)
+        ):
+            scvfs = list(m.filters)
+        if is_cell_predicate(m):
+            pred = compile_filter(m, reversed_scan=reversed_scan).pred
+        elif scvfs:
+            pred = None
+            for x in scvfs:
+                cap = None if x.latest_version_only else versions.get(x.family)
+                version_index = version_index or (cap or 0) > 1
+                v = _scvf_pred(x, cap)
+                pred = v if pred is None else (pred | v)
+        else:
+            rest = members[i:]
+            break
+        if pred is not None:
+            keep = pred if keep is None else (keep & pred)
+    if len(rest) > 1:
+        rest = [ast.FilterList("MUST_PASS_ALL", tuple(rest))]
+    return Matcher(keep, rest[0] if rest else None, version_index)
+
+
 def compile_filter(
     f: ast.Filter,
     allow_transform: bool = True,
     single_version: bool = False,
     reversed_scan: bool = False,
-    scvf_source: DataFrame | None = None,
     clustered: bool = False,
 ) -> Compiled:  # noqa: C901
     """Compile a filter AST.
@@ -902,15 +959,14 @@ def compile_filter(
     their version-rank window. ``reversed_scan`` flips the scan order for
     the order-dependent filters (PageFilter takes the first rows in
     descending order; WhileMatchFilter truncates from the top of the range —
-    Scan.setReversed:694 semantics). ``scvf_source``: matcher-visible
-    stream for any-version SCVF verdicts (see _scvf_multi_transform) —
-    consumed by the AND fuse and the pure-SCVF OR fuse; an SCVF nested
-    in a MIXED OR falls back to the window-predicate form, which judges
-    scan-visible versions (documented divergence). ``clustered``: the input
-    is clustered by row, so row verdicts cost no exchange as windows over
-    ``row``: SCVFs compile to their window-predicate form unless an
-    ``scvf_source`` must judge them, and SkipFilter keeps its transform but
-    judges rows with a window instead of an anti-join.
+    Scan.setReversed:694 semantics). ``clustered``: the input is
+    clustered by row, so row verdicts cost no exchange as windows over
+    ``row``: SCVFs compile to their window-predicate form, and SkipFilter
+    keeps its transform but judges rows with a window instead of an
+    anti-join. A Table scan compiles here only what
+    :func:`compile_matcher` leaves after the version quota; the SCVFs it
+    judges before the quota see every live version within their family's
+    limit, while an SCVF compiled here judges the cells of its input.
 
     MIXED MUST_PASS_ONE divergence (deliberate): under the reference's
     protocol, OR(SCVF, any cell-level filter) keeps EVERY ROW — the
@@ -928,7 +984,7 @@ def compile_filter(
     iff row-verdict OR cell-predicate)."""
     # SCVF verdicts as a fused aggregation + join (the transform form), or
     # as window predicates over the row-clustered input
-    scvf_join = allow_transform and not (clustered and scvf_source is None)
+    scvf_join = allow_transform and not clustered
     if isinstance(f, ast.FilterList):
         if f.operator == "MUST_PASS_ALL":
             children = list(f.filters)
@@ -940,13 +996,10 @@ def compile_filter(
                 ]
                 if scvfs:
                     children = [c for c in children if c not in scvfs]
-                    transforms.append(
-                        _scvf_multi_transform(scvfs, single_version, scvf_source)
-                    )
+                    transforms.append(_scvf_multi_transform(scvfs, single_version))
             parts = [
                 compile_filter(
-                    x, allow_transform, single_version, reversed_scan,
-                    scvf_source, clustered,
+                    x, allow_transform, single_version, reversed_scan, clustered
                 )
                 for x in children
             ]
@@ -961,8 +1014,7 @@ def compile_filter(
             # SCVF cell code is INCLUDE, the verdict lands in filterRow —
             # SingleColumnValueFilter.java:193 / FilterList MPO filterRow)
             # -> same fused aggregation+join form as the AND fuse, with
-            # OR'd verdicts; also the path that can consume scvf_source.
-            # The exclude subclass keeps the predicate form (its cell
+            # OR'd verdicts. The exclude subclass keeps the predicate form (its cell
             # stripping composes differently under OR).
             if (
                 scvf_join
@@ -975,8 +1027,7 @@ def compile_filter(
                     None,
                     [
                         _scvf_multi_transform(
-                            list(f.filters), single_version, scvf_source,
-                            combine="or",
+                            list(f.filters), single_version, combine="or"
                         )
                     ],
                 )
@@ -1011,9 +1062,7 @@ def compile_filter(
     # SingleColumnValueExcludeFilter subclasses SingleColumnValueFilter
     if isinstance(f, ast.SingleColumnValueFilter):
         if scvf_join:
-            return Compiled(
-                None, [_scvf_multi_transform([f], single_version, scvf_source)]
-            )
+            return Compiled(None, [_scvf_multi_transform([f], single_version)])
         return Compiled(_scvf_pred(f))
     if isinstance(f, ast.DependentColumnFilter):
         return Compiled(_dependent_pred(f))
@@ -1135,7 +1184,6 @@ def compile_filter(
                 single_version=single_version,
                 allow_transform=allow_transform,
                 reversed_scan=reversed_scan,
-                scvf_source=scvf_source,
                 clustered=clustered,
             )
         pred = _skip_code_pred(f.wrapped, reversed_scan)
@@ -1191,53 +1239,28 @@ def _strip_exclude(g: ast.Filter) -> ast.Filter:
     return g
 
 
-def has_any_version_scvf(f: "ast.Filter | None") -> bool:
-    """True when the tree holds an SCVF judging ALL versions
-    (latestVersionOnly=false) in a transform-compilable position —
-    the scan then supplies the matcher-visible verdict stream. Covered
-    positions: MUST_PASS_ALL members (the AND fuse) and pure-SCVF
-    MUST_PASS_ONE lists (the OR fuse); a MIXED OR compiles to the
-    window-predicate form, which judges scan-visible versions
-    (documented divergence)."""
-    if f is None:
-        return False
-    if isinstance(f, ast.FilterList):
-        if f.operator == "MUST_PASS_ALL":
-            return any(has_any_version_scvf(x) for x in f.filters)
-        return bool(f.filters) and all(
-            type(x) is ast.SingleColumnValueFilter for x in f.filters
-        ) and any(not x.latest_version_only for x in f.filters)
-    return (
-        isinstance(f, ast.SingleColumnValueFilter)
-        and not f.latest_version_only
-    )
-
-
 def apply_filter(
     df: DataFrame,
     f: ast.Filter | None,
     single_version: bool = False,
     reversed_scan: bool = False,
-    scvf_source: DataFrame | None = None,
-    semi: RowSemiJoin | None = None,
+    clustered: bool = False,
 ) -> DataFrame:
     """Apply a compiled filter to a cell DataFrame.
 
     Predicates containing window expressions cannot sit in a WHERE clause, so
     the predicate is materialized via withColumn first; Catalyst still pushes
-    the window-free conjuncts below the window/exchange. ``semi``: given
-    when ``df`` is clustered by row (hash-partitioned on it, or one
-    partition); row verdicts then compile to windows over ``row``
-    (``compile_filter(clustered=True)``) and only the SCVF verdicts judged
-    on a separate ``scvf_source`` stream reach ``df`` through ``semi``.
-    Without it the input is unclustered and verdicts join back: the staged
-    SCVF join, Skip's anti-join.
+    the window-free conjuncts below the window/exchange. ``clustered``: ``df``
+    is clustered by row (hash-partitioned on it, or one partition), so row
+    verdicts compile to windows over ``row``
+    (``compile_filter(clustered=True)``). Unclustered input joins its
+    verdicts back: the staged SCVF join, Skip's anti-join.
     """
     if f is None:
         return df
     c = compile_filter(
         f, single_version=single_version, reversed_scan=reversed_scan,
-        scvf_source=scvf_source, clustered=semi is not None,
+        clustered=clustered,
     )
     out = df
     if c.pred is not None:
@@ -1250,7 +1273,7 @@ def apply_filter(
         # applies to the filtered output — canonical member order puts
         # SCVFs before every sibling cell predicate.
         if getattr(t, "_scvf_verdict", False):
-            out = t(out, df, semi)
+            out = t(out, df)
         else:
             out = t(out)
     return out

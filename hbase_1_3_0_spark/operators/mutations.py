@@ -383,15 +383,32 @@ def _delta_once(delta: DataFrame) -> DataFrame:
     return delta.localCheckpoint(eager=False)
 
 
+#: the key an RMW op reads its current values by
+_KEY = ["row", "family", "_qnull", "_qkey"]
+
+
+def _column_key(qualifier: str = "qualifier") -> list[Column]:
+    """A column's qualifier as two never-null join keys, ``_qnull`` and
+    ``_qkey``. HBase's NULL qualifier is a real column (TestFromClientSide
+    testNull:1391), which an equi-join on the qualifier never matches; on
+    these keys it matches itself, and the fold, the lookup and the join
+    share one partitioning."""
+    return [
+        F.col(qualifier).isNull().alias("_qnull"),
+        F.coalesce(F.col(qualifier), F.lit(b"")).alias("_qkey"),
+    ]
+
+
+def _qualifier() -> Column:
+    """The qualifier back from its :func:`_column_key` columns."""
+    return F.when(~F.col("_qnull"), F.col("_qkey")).alias("qualifier")
+
+
 def _attach(left: DataFrame, cur: DataFrame, on: list[str], pinned: bool) -> DataFrame:
     """Left-join the current values onto the mutation records: a window
     lookup on the small-key path, a plain join (AQE broadcasts ``cur``)
     otherwise."""
-    return (
-        local_lookup(left, cur, on, pinned=True)
-        if pinned
-        else left.join(cur, on, "left")
-    )
+    return local_lookup(left, cur, on) if pinned else left.join(cur, on, "left")
 
 
 def _current_values(
@@ -406,13 +423,13 @@ def _current_values(
     path) prunes the log to those rows in the scan, in one partition;
     otherwise a broadcast semi-join keeps only the touched rows, which are
     then clustered by row once. Either way ``view`` runs the read view on
-    its exchange-free window forms.
+    its exchange-free window forms. The values come keyed by ``_KEY``.
     """
     touched = prune_rows(
         cells, pinned if pinned is not None else keys.select("row").distinct()
     )
     return view(touched).select(
-        "row", "family", "qualifier", F.col("value").alias("_cur"), F.col("ts")
+        "row", "family", *_column_key(), F.col("value").alias("_cur")
     )
 
 
@@ -445,7 +462,7 @@ def increment(
     """
     increments, pinned = small_key_frame(increments)
     local = pinned is not None
-    folded = increments.groupBy("row", "family", "qualifier").agg(
+    folded = increments.groupBy("row", "family", *_column_key()).agg(
         F.sum("delta").alias("_delta")
     )
     cur = _current_values(cells, folded, view, pinned)
@@ -473,14 +490,8 @@ def increment(
         new_value = new_value + F.coalesce(
             width_ok.cast("long"), F.lit(0).cast("long")
         )
-    new_vals = (
-        _attach(folded, cur, ["row", "family", "qualifier"], local)
-        .select(
-            "row",
-            "family",
-            "qualifier",
-            new_value.alias("new_value"),
-        )
+    new_vals = _attach(folded, cur, _KEY, local).select(
+        "row", "family", _qualifier(), new_value.alias("new_value")
     )
     if local:
         new_vals = _delta_once(new_vals)
@@ -513,7 +524,7 @@ def append_value(
     Increment.java:158 does for Increment)."""
     appends, pinned = small_key_frame(appends)
     local = pinned is not None
-    folded = appends.groupBy("row", "family", "qualifier").agg(
+    folded = appends.groupBy("row", "family", *_column_key()).agg(
         F.aggregate(
             F.array_sort(
                 F.collect_list(F.struct(F.col("batch_seq"), F.col("value")))
@@ -523,16 +534,13 @@ def append_value(
         ).alias("_suffix")
     )
     cur = _current_values(cells, folded, view, pinned)
-    new_vals = (
-        _attach(folded, cur, ["row", "family", "qualifier"], local)
-        .select(
-            "row",
-            "family",
-            "qualifier",
-            F.concat(
-                F.coalesce(F.col("_cur"), F.lit(b"")), F.col("_suffix")
-            ).alias("new_value"),
-        )
+    new_vals = _attach(folded, cur, _KEY, local).select(
+        "row",
+        "family",
+        _qualifier(),
+        F.concat(
+            F.coalesce(F.col("_cur"), F.lit(b"")), F.col("_suffix")
+        ).alias("new_value"),
     )
     if local:
         new_vals = _delta_once(new_vals)
@@ -589,20 +597,19 @@ def _judge_checks(
     check_qualifier, check_op, check_value (+ any payload columns, which
     pass through untouched). ``pinned``: the small-key path's keys, with
     ``checks`` already in one partition."""
-    keys = checks.select(
-        "row",
-        F.col("check_family").alias("family"),
-        F.col("check_qualifier").alias("qualifier"),
+    cur = _current_values(cells, checks, view, pinned).withColumnRenamed(
+        "family", "check_family"
     )
-    cur = _current_values(cells, keys, view, pinned).select(
-        "row",
-        F.col("family").alias("check_family"),
-        F.col("qualifier").alias("check_qualifier"),
-        F.col("_cur"),
+    return (
+        _attach(
+            checks.select("*", *_column_key("check_qualifier")),
+            cur,
+            ["row", "check_family", "_qnull", "_qkey"],
+            pinned is not None,
+        )
+        .drop("_qnull", "_qkey")
+        .withColumn("_pass", F.expr(_CHECK_PASSES))
     )
-    return _attach(
-        checks, cur, ["row", "check_family", "check_qualifier"], pinned is not None
-    ).withColumn("_pass", F.expr(_CHECK_PASSES))
 
 
 def check_and_mutate(

@@ -35,6 +35,14 @@ This reproduces the reference's ``ScanQueryMatcher`` state machine
    newer than the query's time-range upper bound do not mask — time-travel
    reads see through later deletes (SQM:347-395).
 
+The reference's filter runs between steps 3 and 4: the column tracker
+counts only the versions the filter INCLUDEs. A Table scan therefore reads
+each family group up to step 3 (``max_versions=None``), applies its column
+selection, security tags and the filter's pre-quota part to all groups at
+once (``compiler.compile_matcher``: per-cell conjuncts and SCVF row
+verdicts, windows over ``row``), and only then the version limit
+(:func:`limit_versions`, one limit per group).
+
 Scale notes (100 TB): a Table scan clusters the cells of its row range
 by ``row`` once (:func:`cluster_rows`, after the row-range predicates, so
 they still prune the parquet scan). Every row-keyed step after that runs
@@ -164,26 +172,20 @@ def prune_rows(
     return pin_rows(cells, keys)
 
 
-def local_lookup(
-    left: DataFrame, right: DataFrame, on: list[str], pinned: bool = False
-) -> DataFrame:
-    """``left`` LEFT JOIN ``right`` USING ``on`` for inputs clustered by
-    ``row`` (``on`` holds it), where ``right`` holds at most one row per
-    key: ``right``'s other columns reach the matching ``left`` rows through
-    a window over the union of both sides, so the lookup plans a sort and no
-    exchange whatever the size estimates (a two-sided join re-shuffles
-    one-partition children once their estimates pass
-    spark.sql.maxSinglePartitionBytes, and a product-of-children join
-    estimate does). Both sides hash-partitioned on ``row`` keep that
-    partitioning through the union; ``pinned`` sides (one partition each,
-    :func:`pin_rows`) are coalesced back to one. Null keys match nothing,
-    as in an equi-join."""
+def local_lookup(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
+    """``left`` LEFT JOIN ``right`` USING ``on`` for inputs pinned to one
+    partition each (:func:`pin_rows`), where ``right`` holds at most one
+    row per key: ``right``'s other columns reach the matching ``left`` rows
+    through a window over the union of both sides, coalesced back to one
+    partition, so the lookup plans a sort and no exchange whatever the size
+    estimates (a two-sided join re-shuffles one-partition children once
+    their estimates pass spark.sql.maxSinglePartitionBytes, and a
+    product-of-children join estimate does). Null keys match nothing, as in
+    an equi-join."""
     side = "_lk_right"
     both = left.withColumn(side, F.lit(False)).unionByName(
         right.withColumn(side, F.lit(True)), allowMissingColumns=True
-    )
-    if pinned:
-        both = both.coalesce(1)
+    ).coalesce(1)
     keyed = " AND ".join(f"`{k}` IS NOT NULL" for k in on)
     over = "PARTITION BY " + ", ".join(f"`{k}`" for k in on)
     looked = both.selectExpr(
@@ -197,20 +199,6 @@ def local_lookup(
         side,
     )
     return looked.where(f"NOT {side}").drop(side)
-
-
-def local_semi(
-    df: DataFrame, rows: DataFrame, anti: bool = False, pinned: bool = False
-) -> DataFrame:
-    """``df`` LEFT SEMI (or ANTI) JOIN ``rows`` on ``row``, as a
-    :func:`local_lookup` for inputs clustered by row."""
-    hit = local_lookup(
-        df,
-        rows.select("row").distinct().withColumn("_hit", F.lit(True)),
-        ["row"],
-        pinned,
-    )
-    return hit.where("_hit IS NULL" if anti else "_hit IS NOT NULL").drop("_hit")
 
 
 def mask_deletes(
@@ -314,9 +302,46 @@ def mask_deletes(
     return survived
 
 
-def limit_versions(cells: DataFrame, max_versions: int) -> DataFrame:
-    """Keep the newest ``max_versions`` per column by (ts desc, seq desc)."""
-    if max_versions == 1:
+#: a cell's version index within its column: 1 for the newest ts. A
+#: same-ts re-put REPLACES the cell rather than adding a version: the
+#: reference returns ONE cell per (column, ts), the newest write winning,
+#: and the dupe takes no version slot (TestFromClientSide.java:3490
+#: testDuplicateVersions), so it has no index. The per-ts winner is the
+#: first cell in (ts desc, seq desc) order; the index is a dense_rank by ts
+#: alone. Both windows share one partitioning and the (ts desc) ordering is
+#: a prefix of (ts desc, seq desc), so they plan as ONE sort.
+VERSION_INDEX = (
+    "CASE WHEN lag(ts) OVER (PARTITION BY `row`, family, qualifier"
+    " ORDER BY ts DESC, seq DESC) = ts THEN NULL"
+    " ELSE dense_rank() OVER (PARTITION BY `row`, family, qualifier"
+    " ORDER BY ts DESC) END"
+)
+
+
+def limit_versions(
+    cells: DataFrame, max_versions: int | Column, raw: bool = False
+) -> DataFrame:
+    """Keep the newest ``max_versions`` per column by (ts desc, seq desc).
+    ``max_versions`` may be a per-cell Column (family groups with different
+    limits in one frame). ``raw``: markers and same-ts re-puts count as
+    versions too, and ``2**31 - 1`` keeps every cell (a raw scan's
+    setMaxVersions())."""
+    if raw:
+        # raw scans still respect the SCAN's maxVersions — markers count
+        # as cells of their column (TestFromClientSide.java:5526
+        # testRawScanRespectsVersions; the family cap does NOT apply to
+        # raw, which is why callers dump stores with setRaw+setMaxVersions)
+        if isinstance(max_versions, int) and max_versions >= 2**31 - 1:
+            return cells
+        w = Window.partitionBy("row", "family", "qualifier").orderBy(
+            F.col("ts").desc(), F.col("seq").desc()
+        )
+        return (
+            cells.withColumn("_vrank", F.row_number().over(w))
+            .where(F.col("_vrank") <= max_versions)
+            .select(*cells.columns)
+        )
+    if isinstance(max_versions, int) and max_versions == 1:
         # Fast path: partial-aggregatable max_by, no window. Plans as a
         # SortAggregate (struct buffers can't hash-aggregate) but with a
         # map-side partial: the shuffle carries ONE cell per column, not the
@@ -335,28 +360,10 @@ def limit_versions(cells: DataFrame, max_versions: int) -> DataFrame:
         return picked.selectExpr(
             *[f"`{c}`" if c in key else f"_newest.`{c}` AS `{c}`" for c in cells.columns]
         )
-    # A same-ts re-put REPLACES the cell rather than adding a version:
-    # the reference returns ONE cell per (column, ts) with the newest
-    # write winning, and the dupe does NOT consume a version slot
-    # (TestFromClientSide.java:3490 testDuplicateVersions — 7 distinct
-    # stamps visible at maxVersions=7 with VALUES[14] at the re-put
-    # stamp). The per-ts winner is the first cell in (ts desc, seq desc)
-    # order whose ts differs from its predecessor; the version index is
-    # a dense_rank by ts alone (same-ts dups share it). Both windows
-    # share one partitioning and the (ts desc) ordering is a prefix of
-    # (ts desc, seq desc), so this plans as ONE exchange + ONE sort.
-    w_full = Window.partitionBy("row", "family", "qualifier").orderBy(
-        F.col("ts").desc(), F.col("seq").desc()
-    )
-    w_ts = Window.partitionBy("row", "family", "qualifier").orderBy(
-        F.col("ts").desc()
-    )
-    is_dup = F.coalesce(F.lag("ts").over(w_full) == F.col("ts"), F.lit(False))
     return (
-        cells.withColumn("_vdup", is_dup)
-        .withColumn("_vrank", F.dense_rank().over(w_ts))
-        .where(~F.col("_vdup") & (F.col("_vrank") <= max_versions))
-        .select(*cells.columns)
+        cells.selectExpr("*", f"{VERSION_INDEX} AS _vi")
+        .where(F.col("_vi") <= max_versions)
+        .drop("_vi")
     )
 
 
@@ -419,24 +426,22 @@ def retain(
 def read_view(
     cells: DataFrame,
     *,
-    max_versions: int = 1,
+    max_versions: int | None = 1,
     min_versions: int = 0,
     ttl_seconds: int = TTL_FOREVER,
     keep_deleted_cells: str = "FALSE",
     time_range: tuple[int, int] | None = None,
     now_ms: int | None = None,
     raw: bool = False,
-    cell_filter: Column | None = None,
     clustered: bool = False,
 ) -> DataFrame:
     """The user-visible cell stream for a Get/Scan over a cell log.
 
-    ``cell_filter`` is a per-cell predicate applied BETWEEN tombstone/TTL/
-    timerange masking and version counting — the ScanQueryMatcher order
-    (deletes -> TTL -> timerange -> filter -> ColumnTracker versions,
-    ScanQueryMatcher.java:283-410). With multi-version columns this makes
-    ``VERSIONS=1`` + a value filter return the newest *passing* version
-    (a failing newer version is SKIPped, not counted), matching HBase.
+    ``max_versions=None`` stops before the version limit (step 4): the
+    cells ScanQueryMatcher shows the filter. A Table scan judges its
+    filter there and limits versions after it (Table._read_view), so a
+    newer version the filter rejects takes no version slot
+    (ScanQueryMatcher.java:283-410).
 
     ``clustered``: ``cells`` is clustered by row (:func:`cluster_rows` or
     :func:`pin_rows`); the read view then plans without exchanges.
@@ -446,19 +451,9 @@ def read_view(
         if time_range is not None:
             lo, hi = time_range
             out = out.where((F.col("ts") >= lo) & (F.col("ts") < hi))
-        # raw scans still respect the SCAN's maxVersions — markers count
-        # as cells of their column (TestFromClientSide.java:5526
-        # testRawScanRespectsVersions; the family cap does NOT apply to
-        # raw, which is why callers dump stores with setRaw+setMaxVersions)
-        if max_versions < 2**31 - 1:
-            w = Window.partitionBy("row", "family", "qualifier").orderBy(
-                F.col("ts").desc(), F.col("seq").desc()
-            )
-            out = (
-                out.withColumn("_vrank", F.row_number().over(w))
-                .where(F.col("_vrank") <= max_versions)
-            )
-        return out.select(*cells.columns)
+        if max_versions is None:
+            return out
+        return limit_versions(out, max_versions, raw=True)
 
     marker_ts_below = None
     if keep_deleted_cells in ("TRUE", "TTL") and time_range is not None:
@@ -476,7 +471,6 @@ def read_view(
         lo, hi = time_range
         visible = visible.where((F.col("ts") >= lo) & (F.col("ts") < hi))
 
-    if cell_filter is not None:
-        visible = visible.where(cell_filter)
-
+    if max_versions is None:
+        return visible
     return limit_versions(visible, max_versions)

@@ -21,18 +21,24 @@ Execution order of a scan (mirrors the reference read path, SURVEY.md §3.1):
    runs inside those partitions without another exchange. A clean-log scan
    (TableMeta.clean_log) needs no row-keyed read-view step and stays
    unclustered and shuffle-free.
-2. read view (versions / tombstones / TTL / timerange) per family group.
-3. family / column projection (Scan.addFamily/addColumn).
-4. filter tree (compiled filter algebra).
-5. per-CF column offset/limit (setRowOffsetPerColumnFamily:502,
+2. read view, in ScanQueryMatcher order (SQM:283-410): tombstones, TTL
+   and time range per family group; then the family / column selection
+   (Scan.addFamily/addColumn) and the cell security tags; then the
+   filter's pre-quota part over every group at once — its per-cell
+   conjuncts and its SCVF row verdicts (compiler.compile_matcher); then
+   each group's version quota over the passing cells, so a newer version
+   the filter rejects takes no version slot.
+3. the rest of the filter tree (its order-dependent members, compiled
+   filter algebra) over the version-limited cells.
+4. per-CF column offset/limit (setRowOffsetPerColumnFamily:502,
    setMaxResultsPerColumnFamily:493).
-6. row limit, optionally reversed (setReversed:694) — ordered prefix.
+5. row limit, optionally reversed (setReversed:694) — ordered prefix.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
-from functools import partial
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -42,11 +48,11 @@ from hbase_1_3_0_spark.catalog import TableMeta
 from hbase_1_3_0_spark.cells import CELL_COLUMNS, TYPE_PUT
 from hbase_1_3_0_spark.filters import ast as filter_ast
 from hbase_1_3_0_spark.filters.compiler import (
+    Matcher,
     apply_filter,
     compile_filter,
+    compile_matcher,
     first_rows,
-    has_any_version_scvf,
-    is_cell_predicate,
 )
 from hbase_1_3_0_spark.filters.parser import parse_filter
 from hbase_1_3_0_spark.operators import mutations as mut
@@ -54,7 +60,7 @@ from hbase_1_3_0_spark.operators.coprocessor import Observers
 from hbase_1_3_0_spark.operators.read_view import (
     clock,
     cluster_rows,
-    local_semi,
+    limit_versions,
     prune_rows,
     read_view,
     retain,
@@ -223,6 +229,10 @@ class Table:
                 if s.row_prefix else None,
                 row_prefix=None,
             )
+        # an empty family map selects every family (Scan.hasFamilies false),
+        # on both read-view paths
+        if s.families == () or s.columns == ():
+            s = s.with_(families=s.families or None, columns=s.columns or None)
         # raw scans reject explicit column selection (StoreScanner.java:193
         # "Cannot specify any column for a raw scan" — the
         # ExplicitColumnTracker does not support raw; TestKeepDeletes
@@ -286,109 +296,42 @@ class Table:
         elif clustered:
             df = cluster_rows(df)
 
-        # 2. read view per family-parameter group. Window-free cell
-        # predicates evaluate INSIDE the read view, before version counting
-        # (ScanQueryMatcher order: a newer version failing the filter is
-        # SKIPped, not counted against VERSIONS) — and they also reach the
-        # parquet scan via pushdown since they sit below the version window.
+        # 2. read view per family-parameter group, then the scan's column
+        # selection and the cell security tags, then the filter's pre-quota
+        # part, then the version quota (Table._read_view) — ScanQueryMatcher
+        # order: a newer version the filter rejects is SKIPped, not counted
+        # against VERSIONS. Window-free predicates there still reach the
+        # parquet scan via pushdown. A clean log is single-version: its
+        # whole filter runs after the view.
         filt = s.filter
         if isinstance(filt, str):
             filt = parse_filter(filt)
-        cell_pred = None
-        if is_cell_predicate(filt):
-            # reversed_scan matters even for pure cell predicates:
-            # InclusiveStopFilter flips its comparison on reversed scans
-            cell_pred = compile_filter(filt, reversed_scan=s.reversed).pred
-            filt = None
-        # cell security tags (visibility labels / per-cell ACLs): enforced
-        # per cell before version counting, like the server-side
-        # VisibilityController/AccessController coprocessors
-        from hbase_1_3_0_spark.operators import security
+        matcher = None
+        if not self.meta.clean_log or s.raw:
+            # raw ignores the family limits; an any-version SCVF then
+            # judges the versions the scan returns
+            versions = {
+                f.name: (s.max_versions or 1) if s.raw else f.max_versions
+                for f in self.meta.families
+            }
+            matcher = compile_matcher(filt, s.reversed, versions)
+            filt = matcher.rest
+        df = self._read_view(df, s, self._visible(df, s), matcher, clustered)
 
-        if security.VISIBILITY_COLUMN in df.columns:
-            p = security.visibility_pred(
-                s.authorizations or (),
-                policies=self.meta.visibility_policies,
-            )
-            cell_pred = p if cell_pred is None else (cell_pred & p)
-        if security.ACL_COLUMN in df.columns and s.user is not None:
-            p = security.acl_pred(s.user)
-            cell_pred = p if cell_pred is None else (cell_pred & p)
-        raw_cells = df
-        df = self._read_view(df, s, cell_pred, clustered)
-
-        # 3. projection — the reference Get/Scan familyMap is a UNION of
-        # per-family selections: addFamily(F) selects the whole family,
-        # addColumn(F, q) one column, and combining them across families
-        # unions (Get.addFamily/addColumn; TestFromClientSide
-        # testSingleRowMultipleFamily's addFamily(F4)+addFamily(F7) and
-        # addColumn(F4,q)+addFamily(F4) probes — r11 fix: this was an
-        # intersection). A family in ``families`` wins whole-family over
-        # any ``columns`` entries for it (the reference's
-        # addColumn-then-addFamily order; declare just the columns to get
-        # the column-only selection).
-        def _project(frame: DataFrame) -> DataFrame:
-            if s.families is None and s.columns is None:
-                return frame
-            keep = F.lit(False)
-            if s.families is not None:
-                keep = keep | F.col("family").isin(list(s.families))
-            if s.columns is not None:
-                for fam, qual in s.columns:
-                    # addColumn(family, null) selects the NULL-qualifier
-                    # column (TestFromClientSide testScan_NullQualifier);
-                    # a plain == against a null literal matches nothing
-                    qcond = (
-                        F.col("qualifier").isNull()
-                        if qual is None
-                        else (F.col("qualifier") == F.lit(qual))
-                    )
-                    keep = keep | ((F.col("family") == fam) & qcond)
-            return frame.where(keep)
-
-        df = _project(df)
-
-        # 3b. any-version SCVF verdict stream: the reference runs
-        # filterKeyValue inside ScanQueryMatcher BEFORE version counting
-        # (checkVersions follows the filter response), so an SCVF with
-        # latestVersionOnly=false judges OLDER versions even when the
-        # scan returns only the newest (TestSingleColumnValueFilter
-        # .java:134-139, pinned in tests/test_filter_reference_suite.py).
-        # Supply the uncapped live-cell stream for the verdict
-        # aggregation; the join still applies to the version-limited
-        # view. Clean logs are single-version (streams identical) and
-        # raw scans skip the matcher, so both skip the extra frame.
-        scvf_source = None
-        if (
-            has_any_version_scvf(filt)
-            and not self.meta.clean_log
-            and not s.raw
-        ):
-            scvf_source = _project(
-                self._read_view(
-                    raw_cells, s.with_(max_versions=2**31 - 1), cell_pred,
-                    clustered,
-                )
-            )
-
-        # 4. filter algebra (whatever did not fold into the read view) —
-        # the read view already reduced each column to one version unless
-        # the scan asked for more (or raw), so version-sensitive filters
-        # can skip their version-rank window
-        fams = self.meta.families
-        sel_fams = s.selected_families()
-        if sel_fams is not None:
-            fams = tuple(f for f in fams if f.name in sel_fams)
+        # 3. what the filter judges after the version quota: the read view
+        # reduced each column to one version unless the scan asked for
+        # more (or raw), so version-sensitive filters can skip their
+        # version-rank window
         single_version = not s.raw and all(
-            min(s.max_versions or 1, fm.max_versions) == 1 for fm in fams
+            min(s.max_versions or 1, key[0]) == 1
+            for key, _names in family_groups(self.meta, s)
         )
         df = apply_filter(
             df, filt, single_version=single_version,
-            reversed_scan=s.reversed, scvf_source=scvf_source,
-            semi=partial(local_semi, pinned=pinned) if clustered else None,
+            reversed_scan=s.reversed, clustered=clustered,
         )
 
-        # 5. intra-row per-CF paging. storeOffset/storeLimit count CELLS
+        # 4. intra-row per-CF paging. storeOffset/storeLimit count CELLS
         # (individual versions), not columns (HRegion per-store offset/limit;
         # multi-version scans page through versions too), so the index is a
         # row_number over the intra-row cell order (qualifier asc, ts desc,
@@ -408,7 +351,7 @@ class Table:
                 cond = cond & (F.col("_ci") <= hi)
             df = df.where(cond).drop("_ci")
 
-        # 6. row limit (ordered prefix; TakeOrderedAndProject, no full sort)
+        # 5. row limit (ordered prefix; TakeOrderedAndProject, no full sort)
         if s.limit is not None:
             df = first_rows(df, s.limit, s.reversed)
         # postScannerNext hooks rewrite the visible cells (e.g. redaction)
@@ -468,14 +411,12 @@ class Table:
         filt = s.filter
         if isinstance(filt, str):
             filt = parse_filter(filt)
-        if filt is not None and not is_cell_predicate(filt):
-            c = compile_filter(filt)
-            if c.transforms:
-                raise ValueError(
-                    "cannot set batch on a scan whose filter has row-level "
-                    "semantics (IncompatibleFilterException analog, "
-                    "Scan.java:481)"
-                )
+        if filt is not None and compile_filter(filt).transforms:
+            raise ValueError(
+                "cannot set batch on a scan whose filter has row-level "
+                "semantics (IncompatibleFilterException analog, "
+                "Scan.java:481)"
+            )
         cells = self.scan(s)
         idx = F.row_number().over(
             Window.partitionBy("row").orderBy(
@@ -489,49 +430,82 @@ class Table:
             "result_id", F.floor((idx - 1) / F.lit(batch)).cast("long")
         )
 
+    def _visible(self, cells: DataFrame, s: Scan) -> Column | None:
+        """What the scan may see, per cell, or None. The column selection
+        is the reference familyMap, a UNION of per-family selections
+        (Get.addFamily/addColumn; TestFromClientSide
+        testSingleRowMultipleFamily — r11 fix: this was an intersection); a
+        family in ``families`` wins whole-family over its ``columns``
+        entries. It precedes the filter (SQM.java:428-431), so an SCVF on
+        an unselected column finds it missing. The security tags
+        (visibility labels / per-cell ACLs) hold before version counting,
+        like the VisibilityController/AccessController coprocessors."""
+        from hbase_1_3_0_spark.operators import security
+
+        preds, tags = [], cells.columns
+        if s.families is not None or s.columns is not None:
+            keep = F.lit(False)
+            if s.families is not None:
+                keep = keep | F.col("family").isin(list(s.families))
+            for fam, qual in s.columns or ():
+                # addColumn(family, null) selects the NULL-qualifier column
+                # (TestFromClientSide testScan_NullQualifier); a plain ==
+                # against a null literal matches nothing
+                qcond = (
+                    F.col("qualifier").isNull()
+                    if qual is None
+                    else (F.col("qualifier") == F.lit(qual))
+                )
+                keep = keep | ((F.col("family") == fam) & qcond)
+            preds.append(keep)
+        if security.VISIBILITY_COLUMN in tags:
+            preds.append(security.visibility_pred(
+                s.authorizations or (),
+                policies=self.meta.visibility_policies,
+            ))
+        if security.ACL_COLUMN in tags and s.user is not None:
+            preds.append(security.acl_pred(s.user))
+        return reduce(lambda a, b: a & b, preds) if preds else None
+
     def _read_view(
         self,
         df: DataFrame,
         s: Scan,
-        cell_pred: Column | None = None,
+        visible: Column | None = None,
+        matcher: Matcher | None = None,
         clustered: bool = False,
     ) -> DataFrame:
+        """The scan's read view: each family group's visible cells
+        (read_view up to its version limit), the ``visible`` predicate, the
+        ``matcher``'s pre-quota filter part over all groups at once (its
+        row verdicts read every family), then each group's version quota."""
         if self.meta.clean_log and not s.raw:
             out = self._read_view_clean(df, s)
-            # single-version log: filter-before-versions == filter-after
-            return out.where(cell_pred) if cell_pred is not None else out
-        if s.raw and cell_pred is not None:
-            # raw scans skip the matcher; the filter still applies per cell
-            df = df.where(cell_pred)
-            cell_pred = None
-        outs = []
+            return out.where(visible) if visible is not None else out
+        outs, caps, quota = [], [], s.max_versions or 1
         for (maxv, minv, ttl, kdc, eff_tr), names in family_groups(self.meta, s):
             sub = df if names is None else df.where(F.col("family").isin(names))
+            outs.append(read_view(
+                sub, max_versions=None, min_versions=minv, ttl_seconds=ttl,
+                keep_deleted_cells=kdc, time_range=eff_tr, now_ms=self._now_ms,
+                raw=s.raw, clustered=clustered,
+            ))
             # raw ignores the FAMILY cap but honors the scan's
             # (testRawScanRespectsVersions: raw + setMaxVersions() shows
             # versions past the family limit — they exist until compaction)
-            eff_versions = (
-                (s.max_versions or 1) if s.raw
-                else min(s.max_versions or 1, maxv)
-            )
-            outs.append(
-                read_view(
-                    sub,
-                    max_versions=eff_versions,
-                    min_versions=minv,
-                    ttl_seconds=ttl,
-                    keep_deleted_cells=kdc,
-                    time_range=eff_tr,
-                    now_ms=self._now_ms,
-                    raw=s.raw,
-                    cell_filter=cell_pred,
-                    clustered=clustered,
-                )
-            )
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
-        return out
+            caps.append((names, quota if s.raw else min(quota, maxv)))
+        out = reduce(DataFrame.unionByName, outs)
+        if visible is not None:
+            out = out.where(visible)
+        if matcher is not None:
+            out = matcher.judge(out)
+        cap = caps[0][1]
+        if any(n != cap for _names, n in caps):
+            # groups with different limits: each cell takes its group's
+            cap = F.when(F.col("family").isin(caps[0][0]), cap)
+            for names, n in caps[1:]:
+                cap = cap.when(F.col("family").isin(names), n)
+        return limit_versions(out, cap, raw=s.raw)
 
     def _rmw_view(self, time_range: tuple[int, int] | None = None) -> mut.View:
         """The read view a read-modify-write op judges its current values

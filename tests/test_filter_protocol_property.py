@@ -50,7 +50,7 @@ state):
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tests._prop_budget import ex
@@ -1098,8 +1098,8 @@ def test_protocol_reversed(spark, grid, f):
 # consumed ONLY by filter-INCLUDEd cells (ScanQueryMatcher order:
 # filterKeyValue precedes columns.checkVersions), so a rejected newer
 # version lets the older one fill the quota — the semantics behind the
-# engine's pre-version-count cell predicates and the scvf_source
-# matcher-visible verdict stream.
+# engine's one matcher pass (compiler.compile_matcher): a list's per-cell
+# conjuncts and its SCVF verdicts are judged before the version quota.
 # ---------------------------------------------------------------------------
 
 _MV_TSS = (2000, 1000)
@@ -1159,18 +1159,20 @@ _MV_VALUE_GRID = st.builds(
 )
 
 # Multi-version SCVFs are scoped to latestVersionOnly=true: the engine's
-# DOCUMENTED any-version contract (scvf_source; compiler.py
-# _scvf_multi_transform docstring, pinned at scan level by
+# DOCUMENTED any-version contract (compiler.compile_matcher docstring,
+# pinned at scan level by
 # test_filter_reference_suite.test_scvf_basic_latest_version_only) judges
-# ALL live versions of the tested column even on a maxVersions=1 scan,
-# per the TestSingleColumnValueFilter.java:134-139 protocol test. The
-# raw region walk differs for a LONE lvo=false SCVF: its non-matching
-# newest version is INCLUDEd (SCVF never SKIPs), fills the version
-# quota, and checkVersions seeks past the column, so deeper versions are
-# never consulted — but a sibling that SKIPs the newest version exposes
-# them again, i.e. the reference outcome is composition-dependent. The
-# engine keeps the order-independent any-version contract (same artifact
-# family as the documented mixed-OR divergence); excluded here.
+# the live versions of the tested column within its family's
+# max_versions, even on a maxVersions=1 scan, per the
+# TestSingleColumnValueFilter.java:134-139 protocol test. The raw region
+# walk differs for a LONE lvo=false SCVF: its non-matching newest version
+# is INCLUDEd (SCVF never SKIPs), fills the version quota, and
+# checkVersions seeks past the column, so deeper versions are never
+# consulted — but a sibling that SKIPs the newest version exposes them
+# again, i.e. the reference outcome is composition-dependent. The engine
+# keeps the order-independent any-version contract (same artifact family
+# as the documented mixed-OR divergence); excluded here, until the
+# contract is adjudicated against the Java.
 _mv_scvf_st = scvf_st.filter(lambda f: f.latest_version_only)
 
 mv_filter_st = st.one_of(
@@ -1193,12 +1195,33 @@ mv_filter_st = st.one_of(
 )
 
 
+# AND(SCVF latestVersionOnly=true, ValueFilter) at max_versions=1: the
+# ValueFilter SKIPs every newest 'w', so each older 'v1' fills the quota;
+# row d's newest tested value fails the SCVF and drops the row. An engine
+# that judges the ValueFilter after the quota returns only fa:qa.
+_AND_SCVF_VALUE = dict(
+    grid=lambda r, fam, q, ts: (
+        b"v1" if ts == 1000 or ((fam, q) == ("fa", b"qa") and r != b"d")
+        else b"w"
+    ),
+    f=ast.FilterList("MUST_PASS_ALL", (
+        ast.SingleColumnValueFilter(
+            "fa", b"qa", "EQUAL", ast.BinaryComparator(b"v1"),
+            filter_if_missing=False, latest_version_only=True,
+        ),
+        ast.ValueFilter(op="EQUAL", comparator=ast.BinaryComparator(b"v1")),
+    )),
+    max_versions=1,
+)
+
+
 @_SETTINGS
 @given(
     grid=_MV_VALUE_GRID,
     f=mv_filter_st,
     max_versions=st.sampled_from([1, 2]),
 )
+@example(**_AND_SCVF_VALUE)
 def test_protocol_multi_version(spark, grid, f, max_versions):
     _run_both_mv(spark, _make_mv_cells(grid), f, max_versions)
 
@@ -1210,6 +1233,7 @@ def test_protocol_multi_version(spark, grid, f, max_versions):
     f=mv_filter_st,
     max_versions=st.sampled_from([1, 2]),
 )
+@example(**_AND_SCVF_VALUE)
 def test_protocol_multi_version_reversed(spark, grid, f, max_versions):
     _run_both_mv(
         spark, _make_mv_cells(grid), f, max_versions, reversed_scan=True
@@ -1264,6 +1288,64 @@ def test_rejected_newer_version_does_not_consume_quota(spark):
     assert got == {(1000, b"old")}
     n = t.scan(filter=f, max_versions=1).count()
     assert n == len(_ROWS) * len(_FAMS) * len(_QUALS)
+
+
+@pytest.mark.parametrize("max_versions", [1, 2])
+def test_scvf_verdict_gates_family_groups_with_different_limits(
+    spark, max_versions
+):
+    """Families fa (max_versions=1) and fb (max_versions=2) read as two
+    family groups. An SCVF on one family judges before either group's
+    version quota and gates the other family's cells: latestVersionOnly
+    judges the newest tested version; an any-version SCVF the versions
+    within its family's limit; a sibling ValueFilter SKIPs fb's newest
+    version, so an older one fills the quota."""
+    cells = [
+        (b"r1", "fa", b"qa", 2000, TYPE_PUT, b"yes", 1),
+        (b"r2", "fa", b"qa", 2000, TYPE_PUT, b"no", 2),
+        (b"r2", "fa", b"qa", 1000, TYPE_PUT, b"yes", 3),
+    ] + [
+        (r, "fb", b"qb", ts, TYPE_PUT, b"x%d" % (ts // 1000), 10 + ts // 1000)
+        for r in (b"r1", b"r2")
+        for ts in (3000, 2000, 1000)
+    ]
+    meta = TableMeta(name="groups", families=(
+        FamilyMeta(name="fa", max_versions=1),
+        FamilyMeta(name="fb", max_versions=2),
+    ))
+    t = Table(meta, spark.createDataFrame(cells, CELL_SCHEMA), now_ms=10_000)
+
+    def scan(f):
+        return sorted(
+            (bytes(r["row"]), r["family"], r["ts"])
+            for r in t.scan(filter=f, max_versions=max_versions).collect()
+        )
+
+    def scvf(fam, q, value, lvo):
+        return ast.SingleColumnValueFilter(
+            fam, q, "EQUAL", ast.BinaryComparator(value),
+            filter_if_missing=True, latest_version_only=lvo,
+        )
+
+    fb_newest = [3000, 2000][:max_versions]
+    r1 = sorted([(b"r1", "fa", 2000)] + [(b"r1", "fb", ts) for ts in fb_newest])
+    r2 = sorted([(b"r2", "fa", 2000)] + [(b"r2", "fb", ts) for ts in fb_newest])
+    # fa's newest value gates fb; r2's older 'yes' is past fa's limit of
+    # one version, for the any-version SCVF too
+    assert scan(scvf("fa", b"qa", b"yes", True)) == r1
+    assert scan(scvf("fa", b"qa", b"yes", False)) == r1
+    # fb's second version is within fb's limit, its third is not
+    assert scan(scvf("fb", b"qb", b"x2", False)) == sorted(r1 + r2)
+    assert scan(scvf("fb", b"qb", b"x1", False)) == []
+    assert scan(scvf("fb", b"qb", b"x2", True)) == []
+    # a sibling ValueFilter rejects fb's newest version before the quota
+    no_x3 = ast.ValueFilter(op="NOT_EQUAL", comparator=ast.BinaryComparator(b"x3"))
+    got = scan(ast.FilterList(
+        "MUST_PASS_ALL", (scvf("fa", b"qa", b"yes", True), no_x3)
+    ))
+    assert got == sorted([(b"r1", "fa", 2000)] + [
+        (b"r1", "fb", ts) for ts in [2000, 1000][:max_versions]
+    ])
 
 
 # ---------------------------------------------------------------------------

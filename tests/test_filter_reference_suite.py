@@ -373,8 +373,8 @@ def test_filter_list_pure_scvf_or_is_row_level(spark):
 
 
 def test_filter_list_or_any_version_scvf_sees_older_versions(spark):
-    """The scvf_source stream feeds the OR fuse too: an any-version
-    member under MUST_PASS_ONE judges OLDER versions on a default
+    """A MUST_PASS_ONE list of SCVFs is judged before the version quota
+    too: an any-version member judges OLDER versions on a default
     maxVersions=1 scan (the same ScanQueryMatcher-order rule pinned for
     the AND path in test_scvf_basic_latest_version_only)."""
     rows = [

@@ -56,6 +56,16 @@ SCVF_LIST = (
 )
 SKIP = "SKIP ValueFilter (!=, 'binary:BUILDING')"
 WHILE = "WHILE ValueFilter (!=, 'binary:BUILDING')"
+# an any-version SCVF, and an SCVF with a sibling cell filter: both judged
+# before the version quota
+ANY_SCVF = (
+    "SingleColumnValueFilter ('d', 'c_mktsegment', =, 'binary:BUILDING', "
+    "true, false)"
+)
+SCVF_VALUE = (
+    "(SingleColumnValueFilter ('d', 'c_mktsegment', =, 'binary:BUILDING', "
+    "true, true) AND ValueFilter (!=, 'binary:x'))"
+)
 
 
 def test_general_scan_shuffles_once_by_row(disk_table):
@@ -63,7 +73,7 @@ def test_general_scan_shuffles_once_by_row(disk_table):
     row, and no join — with an SCVF list or a Skip filter too — and its
     row range still reaches the parquet scan."""
     t = Table(TableMeta(name="c2"), disk_table.cells, now_ms=1)
-    for f in (None, SCVF_LIST, SKIP):
+    for f in (None, SCVF_LIST, SKIP, ANY_SCVF, SCVF_VALUE):
         df = t.scan(start_row=_k(10), stop_row=_k(50), filter=f)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert inspect.exchange_count(df) == 1, f  # broadcasts included
@@ -139,7 +149,10 @@ def test_small_key_reads_plan_zero_exchanges(disk_table):
         get,
         t.get(_k(7), filter="SingleColumnValueFilter ('d', 'c_name', =, "
                             "'binary:x', true, true)"),
-        *(t.get(_k(7), filter=f) for f in (SCVF_LIST, SKIP, WHILE)),
+        *(
+            t.get(_k(7), filter=f)
+            for f in (SCVF_LIST, SKIP, WHILE, ANY_SCVF, SCVF_VALUE)
+        ),
         t.multi_get([_k(1), _k(2), _k(40)]),
         t.exists([_k(3), b"missing"]),
     ]

@@ -319,6 +319,30 @@ def test_scan_of_undeclared_families_raises(spark, clean_log):
 
 
 @pytest.mark.parametrize("clean_log", [False, True])
+def test_empty_family_selection_reads_all_families(spark, clean_log):
+    """An empty family map selects every family (the reference's
+    Scan.hasFamilies() is false), on the clean-log path and the full path
+    alike; an empty ``families`` next to ``columns`` leaves the columns."""
+    from hbase_1_3_0_spark.catalog import FamilyMeta
+    from hbase_1_3_0_spark.cells import CELL_SCHEMA, TYPE_PUT
+
+    cells = spark.createDataFrame(
+        [(b"r", "d", b"q", 1, TYPE_PUT, b"v", 0), (b"r", "e", b"q", 1, TYPE_PUT, b"w", 0)],
+        CELL_SCHEMA,
+    )
+    meta = TableMeta(
+        name="t", families=(FamilyMeta(name="d"), FamilyMeta(name="e")),
+        clean_log=clean_log,
+    )
+    t = Table(meta, cells, 5)
+    for kw in ({"families": ()}, {"columns": ()}, {"families": (), "columns": ()}):
+        assert t.scan(**kw).count() == 2, kw
+    assert t.get(b"r", families=()).count() == 2
+    got = t.scan(families=(), columns=(("e", b"q"),)).collect()
+    assert [(r.family, bytes(r.value)) for r in got] == [("e", b"w")]
+
+
+@pytest.mark.parametrize("clean_log", [False, True])
 def test_scan_of_declared_and_undeclared_families_divergence(spark, clean_log):
     """Known divergence: a selection mixing a declared family with an
     undeclared one reads the declared family's cells, where the reference

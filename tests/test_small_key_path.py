@@ -231,6 +231,18 @@ def _both_rmw(spark, build):
     probe=b"v1000.0",
     delta=1,
 )
+# always run: r2's live NULL-qualifier value in "a" is what the append to
+# (r2, "a", None) reads and extends
+@example(
+    cells=[(b"r2", "a", None, 8, TYPE_PUT, 0)],
+    fam_a=FamilyMeta(name="a"),
+    fam_b=FamilyMeta(name="b"),
+    read_kw={},
+    row=b"r1",
+    check_op="EQUAL",
+    probe=None,
+    delta=1,
+)
 def test_small_key_path_matches_general_path(
     spark, cells, fam_a, fam_b, read_kw, row, check_op, probe, delta
 ):
@@ -280,10 +292,9 @@ def test_small_key_path_matches_general_path(
     )
     got, want = _both_rmw(spark, lambda: t.append(apps))
     assert got == want
-    # (not the NULL-qualifier append: both paths read that column as
-    # absent, a known divergence, ROADMAP item 3)
     appended = {(r, f, q): v for r, f, q, v in got[0]}
     assert appended[(row, "b", b"q")] == (_read(t, row, "b", b"q") or b"") + b"+y+x"
+    assert appended[(other, "a", None)] == (_read(t, other, "a", None) or b"") + b"+z"
 
 
 def test_small_key_path_matches_general_path_on_parquet(spark, tmp_path):
